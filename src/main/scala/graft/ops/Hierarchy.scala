@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.model.PathOps
@@ -12,19 +12,37 @@ import graft.model.TransferSchema._
   * step = child rows joined on `parent_id = parent.target_file_id`, depth+1,
   * path appended with `' > '`; result ordered by path.
   *
-  * Spark has no recursive-CTE logical node, so this is an iterative driver
-  * fixpoint (SURVEY.md §4): the LOOP lives on the driver but every step is a
-  * distributed join — no data ever collects to the driver. Each iteration
-  * `localCheckpoint`s the frontier to cut lineage growth (plan size, not
-  * data, is the thing that blows up). Depth is capped (the reference's SQLite
-  * view would spin forever on a cycle; we stop and return what we have).
+  * Spark has no recursive-CTE logical node, so this is a driver loop of
+  * distributed joins (SURVEY.md §4) using path doubling, the classic parallel
+  * list ranking: every row keeps a pointer to its nearest not-yet-absorbed
+  * ancestor plus the breadcrumb segment and edge count back to it. Each round
+  * joins the live rows to the rows their pointer names, jumps the pointer to
+  * that row's pointer and prepends its segment, so a row's distance to its
+  * pointer doubles per round. A row whose pointer becomes null has absorbed
+  * a root and is settled: its segment is its full path. Settled rows stop
+  * iterating; they stay on the ancestor side of the join. Every round ends
+  * in one `localCheckpoint` that cuts lineage; the driver holds plans, never
+  * data.
   *
-  * Scale notes: the child side is the full table re-scanned per level — at
-  * 100 TB the scan is cached once (`persist`) and the join key
-  * (`parent_id`) is a shuffle-hash join per level; file-system forests are
-  * shallow (depth ~10-20), so the iteration count is small and bounded by
-  * `maxDepth`. The frontier is usually ≪ table size, so AQE converts the
-  * per-level join to broadcast when it fits.
+  * Termination: after round r every row of depth < 2^r has settled, so round
+  * r settles exactly the depths in [2^(r-1), 2^r). A root-reachable row still
+  * live after round r has an ancestor in round r+1's band, so a round that
+  * settles nothing leaves only rows that never reach a root. Those are
+  * dropped, as the reference's recursive join never reaches them either:
+  *   - orphans — a parent id that names no row — drop out of the inner join
+  *     the round their pointer dangles, and their descendants follow;
+  *   - members of a cycle no root reaches, and rows hanging off one, stay
+  *     live until the first round that settles nothing, then are discarded.
+  * The loop stops when a round settles no rows or leaves no live rows; both
+  * counts are `observe`d on the round's checkpoint job, no extra action.
+  *
+  * A parent id shared by several rows yields one output row per ancestor
+  * chain, as the reference's join does. When such a shared id closes a cycle
+  * that a root CAN reach, `WITH RECURSIVE` has no finite answer: paths grow
+  * without bound. A path with no repeated row has at most N-1 edges (N = input
+  * rows, observed on the first checkpoint), so a row still settling in round
+  * ⌈log2 N⌉+1 proves such a cycle, and the traversal throws
+  * `IllegalStateException` rather than loop.
   *
   * Output columns: `file_name, target_file_id, parent_id, level, depth, path`
   * (the reference also carries its SQLite rowid `id`; we have no rowid — see
@@ -32,133 +50,54 @@ import graft.model.TransferSchema._
   */
 object Hierarchy {
 
-  /** Path-doubling traversal — the adversarial-depth form. The level loop
-    * below runs one distributed join PER LEVEL: exactly right for file
-    * forests (depth 10–20), hopeless for a degenerate 10k-deep chain
-    * (10k sequential jobs of fixed overhead). This variant is classic
-    * parallel list ranking: every node keeps a pointer to its nearest
-    * not-yet-absorbed ancestor plus the name-segment and edge-count back
-    * to it; each round jumps the pointer to the pointer's pointer and
-    * concatenates segments, so the frontier halves its distance to the
-    * root — O(log depth) rounds, each one self-join of the node table.
-    *
-    * Same output law as [[apply]] on well-formed forests (pinned by test
-    * AND by sharing q_hierarchy_recursive's WITH RECURSIVE oracle):
-    * nodes whose parent id resolves to no row are dropped (the level
-    * loop's join never reaches them), as are cycle members (they never
-    * absorb a root; the level loop never emits them either). Trade-off vs
-    * the level loop: each round shuffles accumulated PATH STRINGS, so
-    * bytes-per-round grows toward total-path-bytes — the textbook list-
-    * ranking trade of bandwidth for rounds.
-    */
-  def byDoubling(df: DataFrame, maxRounds: Int = 48): DataFrame = {
+  def apply(df: DataFrame): DataFrame = {
+    val parent = col(parentIdCol).try_cast("long") // TEXT column, numeric compare (SQLite affinity)
+    val initObs = Observation()
     val init = df.select(
-      col("file_name"), col("target_file_id"),
-      col(parentIdCol).try_cast("long").as(parentIdCol),
-      col(levelCol),
-      col(parentIdCol).try_cast("long").as("_ptr"),
-      col("file_name").as("_seg"),
-      when(col(parentIdCol).try_cast("long").isNull, lit(0))
-        .otherwise(lit(1)).as("_dep"))
-    // settled rows (_ptr IS NULL — root absorbed) STOP flowing: after
-    // ~log(depth) rounds the overwhelming majority is settled, and pumping
-    // them through further self-joins would make every round cost a full
-    // table rewrite. Only the live set iterates; the ancestor lookup still
-    // spans settled ∪ live (a live pointer may target a settled node).
-    // Each round's checkpoint feeds the settled accumulator (bounded at
-    // maxRounds union arms), so none can be released early.
-    val (cur, _) = Clusters.ownedCheckpoint(init)
-    var settled = cur.filter(col("_ptr").isNull)
-    var live = cur.filter(col("_ptr").isNotNull)
+      col("file_name"), col("target_file_id"), parent.as(parentIdCol), col(levelCol),
+      parent.as("_ptr"), col("file_name").as("_seg"),
+      when(parent.isNull, lit(0)).otherwise(lit(1)).as("_dep"))
+      .observe(initObs, count(lit(1)).as("n"), count(col("_ptr")).as("live"))
+      .localCheckpoint()
+    val n = initObs.get("n").asInstanceOf[Long]
+    // ⌈log2 n⌉: the round by which every row of a cycle-free input has settled
+    val lastRound = 64 - java.lang.Long.numberOfLeadingZeros(n - 1)
+    var settled = init.filter(col("_ptr").isNull)
+    var live = init.filter(col("_ptr").isNotNull)
+    var liveRows = initObs.get("live").asInstanceOf[Long]
+    var settledRows = n - liveRows
     var round = 0
-    while (round < maxRounds && !live.isEmpty) {
+    while (settledRows > 0 && liveRows > 0) {
+      round += 1
       val anc = settled.union(live).select(col("target_file_id").as("_aid"),
         col("_ptr").as("_aptr"), col("_seg").as("_aseg"), col("_dep").as("_adep"))
-      val (next, _) = Clusters.ownedCheckpoint(live.as("s")
-        .join(anc, col("_ptr") === col("_aid"), "left")
-        // dangling pointer (no ancestor row): drop — the level loop's
-        // inner join never reaches these nodes
-        .filter(col("_aid").isNotNull)
+      val obs = Observation()
+      val next = live.as("s")
+        .join(anc, col("_ptr") === col("_aid"))
         .select(col("s.file_name"), col("s.target_file_id"),
           col(s"s.$parentIdCol"), col(s"s.$levelCol"),
           col("_aptr").as("_ptr"),
           PathOps.breadcrumb(col("_aseg"), col("_seg")).as("_seg"),
-          (col("_dep") + col("_adep")).as("_dep")))
+          (col("_dep") + col("_adep")).as("_dep"))
+        .observe(obs, count(when(col("_ptr").isNull, 1)).as("settled"),
+          count(col("_ptr")).as("live"))
+        .localCheckpoint()
+      settledRows = obs.get("settled").asInstanceOf[Long]
+      liveRows = obs.get("live").asInstanceOf[Long]
+      if (settledRows > 0 && round > lastRound)
+        throw new IllegalStateException(
+          s"Hierarchy: rows still settling after $round rounds over $n rows — " +
+            "a shared target_file_id closes a cycle that a root reaches")
       settled = settled.union(next.filter(col("_ptr").isNull))
       live = next.filter(col("_ptr").isNotNull)
-      round += 1
     }
-    // cycle members never absorb a root — still live after maxRounds; the
-    // level loop never emits them either
+    // one checkpoint of the N result rows: the round checkpoints (settled
+    // and live rows alike) become unreachable here and the context cleaner
+    // frees them, so a registered view holds the result, not every round
     settled
       .select(col("file_name"), col("target_file_id"), col(parentIdCol),
         col(levelCol), col("_dep").as("depth"), col("_seg").as("path"))
+      .localCheckpoint()
       .orderBy("path")
-  }
-
-  def apply(df: DataFrame, maxDepth: Int = 64): DataFrame = {
-    val nodes = df.select(
-      col("file_name"), col("target_file_id"),
-      col(parentIdCol).try_cast("long").as(parentIdCol), // TEXT column, numeric compare (SQLite affinity)
-      col(levelCol)).persist()
-    // every level's frontier is an EAGER localCheckpoint, so by the time
-    // buildTree returns nothing references the cached nodes lazily —
-    // unpersisting here is safe and frees executor storage immediately
-    try buildTree(nodes, maxDepth).orderBy("path")
-    finally nodes.unpersist(blocking = false)
-  }
-
-  /** Collapse the accumulator's union lineage every this-many levels: `acc`
-    * grows one `Union` arm per level, so an adversarially deep chain (10k
-    * levels — no real file forest, but the operator must not be the thing
-    * that breaks) would otherwise hand the planner a 10k-arm union and
-    * serialize a plan linear in depth at every downstream use. Each
-    * collapse rewrites the accumulated rows once, so total extra work is
-    * depth/interval extra passes over the result — flat driver memory for
-    * a bounded-cost trade. Shallow forests (≤ interval) never pay it.
-    */
-  private val accCollapseEvery = 64
-
-  private def buildTree(nodes: DataFrame, maxDepth: Int): DataFrame = {
-    var (frontier, frontierOwn) = Clusters.ownedCheckpoint(nodes
-      .filter(col(parentIdCol).isNull)
-      .withColumn("depth", lit(0))
-      .withColumn("path", col("file_name")))
-    val children = nodes.filter(col(parentIdCol).isNotNull)
-    var acc = frontier
-    // checkpoint RDDs that are still arms of the un-collapsed acc union —
-    // they can only be freed once a collapse materializes acc standalone
-    var deferred: List[org.apache.spark.rdd.RDD[_]] = Nil
-    var accOwn: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-    var depth = 0
-    var growing = !frontier.isEmpty
-    while (growing && depth < maxDepth) {
-      val (next, nextOwn) = Clusters.ownedCheckpoint(children.as("t")
-        .join(frontier.select(col("target_file_id").as("_pid"), col("path").as("_ppath"),
-          col("depth").as("_pdepth")),
-          col(s"t.$parentIdCol") === col("_pid"))
-        .select(col("t.file_name"), col("t.target_file_id"), col(s"t.$parentIdCol"),
-          col(s"t.$levelCol"),
-          (col("_pdepth") + 1).as("depth"),
-          PathOps.breadcrumb(col("_ppath"), col("t.file_name")).as("path")))
-      if (next.isEmpty) { growing = false; Clusters.release(nextOwn) }
-      else {
-        acc = acc.union(next)
-        deferred ++= frontierOwn // replaced as join input; still an acc arm
-        frontier = next
-        frontierOwn = nextOwn
-        depth += 1
-        if (depth % accCollapseEvery == 0) {
-          val (cp, cpOwn) = Clusters.ownedCheckpoint(acc)
-          acc = cp
-          // the old collapsed acc and every deferred arm are now
-          // unreferenced (the live frontier's RDD stays — next join input)
-          Clusters.release(accOwn ++ deferred)
-          accOwn = cpOwn
-          deferred = Nil
-        }
-      }
-    }
-    acc
   }
 }

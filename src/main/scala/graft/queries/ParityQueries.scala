@@ -153,19 +153,6 @@ trait ParityQueries { self: RegistryAll =>
         col("path"))
       .orderBy("path", "target_file_id")
 
-  /** The path-doubling traversal ([[Hierarchy.byDoubling]], O(log depth)
-    * rounds — the adversarial-depth form) against the SAME WITH RECURSIVE
-    * oracle as [[qHierarchyRecursive]]: both variants must produce the
-    * identical tree, so the doubling algebra (segment concatenation,
-    * depth accumulation, root absorption) is driver-gated, not just
-    * unit-tested.
-    */
-  def qHierarchyDoubling(spark: SparkSession, dir: String): DataFrame =
-    Hierarchy.byDoubling(forestNodes(spark, dir))
-      .select(col("file_name"), col("target_file_id"), col("depth").cast("int").as("depth"),
-        col("path"))
-      .orderBy("path", "target_file_id")
-
   // (oracle SQL for the recursive hierarchy is built inline in `oracle` —
   // DuckDB WITH RECURSIVE, anchored on parent_folder IS NULL, which is
   // equivalent to the engine's parent_id IS NULL anchor in this forest)

@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Hierarchy
 
-/** Scale probe for the recursive-hierarchy fixpoint: synthesizes a forest
+/** Scale probe for the recursive-hierarchy traversal: synthesizes a forest
   * far beyond the test data (default: 10 roots × fanout 10 × depth 6 ≈ 1.1M
-  * nodes, generated distributed via `sequence`/`explode`, never on the
-  * driver) and traverses it, printing per-level growth and wall time.
+  * nodes, generated distributed per level, never on the driver), traverses
+  * it and requires the depth histogram to match the closed form
+  * 10·fanout^d nodes at depth d; then traverses a 10k-deep chain and requires
+  * every node in the output at a max depth of 9999.
   *
   * Usage: `sbt "runMain graft.tools.HierarchyScale [fanout] [depth]"`.
   */
@@ -45,10 +47,13 @@ object HierarchyScale {
     println(s"=== forest: $total nodes, depth $depth, fanout $fanout ===")
 
     val t0 = System.nanoTime()
-    val tree = Hierarchy(nodes, maxDepth = depth + 2)
+    val tree = Hierarchy(nodes)
     val byDepth = tree.groupBy("depth").count().orderBy("depth").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq
     val secs = (System.nanoTime() - t0) / 1e9
-    byDepth.foreach(r => println(s"  depth ${r.getInt(0)}: ${r.getLong(1)} nodes"))
+    byDepth.foreach { case (d, c) => println(s"  depth $d: $c nodes") }
+    val expected = (0 until depth).map(d => d -> 10L * math.pow(fanout, d).toLong)
+    require(byDepth == expected, s"forest depth histogram $byDepth, expected $expected")
     println(f"=== traversal + depth histogram: $secs%.1f s for $total nodes ===")
     val leaf = tree.filter(col("depth") === depth - 1).select("path").head.getString(0)
     println(s"=== sample leaf path: ${leaf.take(120)} ===")
@@ -64,7 +69,7 @@ object HierarchyScale {
         .otherwise((col("id") + 5000000L - 1).cast("string")).as("parent_id"),
       lit(1).as("level"))
     val t1 = System.nanoTime()
-    val deep = Hierarchy.byDoubling(chain)
+    val deep = Hierarchy(chain)
     val (n, maxDepthSeen) = {
       val r = deep.agg(count(lit(1)), max(col("depth"))).head()
       (r.getLong(0), r.getInt(1))

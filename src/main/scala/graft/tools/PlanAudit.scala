@@ -30,8 +30,8 @@ object PlanAudit {
         "q_span_dedup", "q_bpe_pairs", "q_zorder", "q_fixed_sample",
         "q_sliding_windows",
         // r6: sketch-threshold broadcast clip, composed curation chain,
-        // pointer-doubling traversal, against-family bucket joins
-        "q_winsorize_approx", "q_curate_summary", "q_hierarchy_doubling",
+        // against-family bucket joins
+        "q_winsorize_approx", "q_curate_summary",
         "q_minhash_against", "q_embed_against",
         // r7: bloom prefilter below the anti-join, broadcast codebook
         // argmax loop, DSIR broadcast scorer, query-partitioned rank eval

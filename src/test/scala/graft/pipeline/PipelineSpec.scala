@@ -152,6 +152,32 @@ class PipelineSpec extends SparkSpec {
     assert(h.filter($"file_name" === "Orphan/child.txt").head.getAs[Int]("depth") === 0)
   }
 
+  test("registerAll: every view resolves by name; hierarchy_children == Hierarchy") {
+    Analytic.registerAll(spark, resolved)
+    val statusNames = Analytic.statusViews(resolved).map(_._1)
+    assert(statusNames.nonEmpty)
+    (Seq("transfer_data", "files_view", "folders_view", "status_summary", "hierarchy_children")
+      ++ statusNames).foreach(name => spark.table(name).collect())
+    assert(spark.table("transfer_data").count() === resolved.count())
+    assert(spark.table("hierarchy_children").collect().toSeq
+      === Hierarchy(resolved).collect().toSeq)
+  }
+
+  test("registerAll: a 100-deep chain registers and resolves every level") {
+    val chain = spark.range(100).select(
+      concat(lit("d"), col("id")).as("file_name"),
+      (col("id") + 10L).as("target_file_id"),
+      when(col("id") === 0, lit(null).cast("string"))
+        .otherwise((col("id") + 9L).cast("string")).as("parent_id"),
+      (col("id") + 1).cast("int").as("level"),
+      lit(0L).as("source_file_size"),
+      lit("success").as("file_status"))
+    Analytic.registerAll(spark, chain)
+    val r = spark.table("hierarchy_children").agg(count(lit(1)), max(col("depth"))).head()
+    assert(r.getLong(0) === 100L)
+    assert(r.getInt(1) === 99)
+  }
+
   test("stats: one-pass totals") {
     val s = Analytic.stats(resolved).head
     assert(s.getAs[Long]("total_records") === 8)
