@@ -129,9 +129,8 @@ object Collocations {
     // materialization AND — because the winner truncates the lineage,
     // unreachable-making the plan's SQLMetrics — spraying the loser's
     // task completions as `ERROR DAGScheduler: Failed to update
-    // accumulator` (~740 events/run, the r19 driver-tail spam,
-    // attributed with graft.tools.AccumTrace). One synchronous
-    // materialization job before any consumer runs fixes both.
+    // accumulator` (~740 events/run, the r19 driver-tail spam). One
+    // synchronous materialization job before any consumer runs fixes both.
     val kept = bi.join(
       bi.groupBy(col("_bk")).agg(count(lit(1)).as("_sz"))
         .filter(col("_sz") <= maxBasket)

@@ -744,7 +744,6 @@ object Dedup {
     *     corpus is a real CPU tax paid only for oracle replayability
     *     (the r11 verdict's adjudication); production dedup pipelines
     *     flip this flag and keep the identical law/banding/verify shape.
-    *     Measured at sf0.1 (SignatureProfileBench): see round appendix.
     *
     * Both profiles share bit law `(h >>> (63−b)) & 1` and the ≥0 sign
     * rule; profile equivalence-of-shape is pinned by DedupSpec (Scala

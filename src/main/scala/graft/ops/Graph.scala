@@ -550,9 +550,9 @@ object Graph {
     adamicAdarCore(g.canon, g.deg, k, maxApexDegree)
 
   /** The UN-limited scored frame behind [[adamicAdar]] — every
-    * non-adjacent pair with its score, no top-k: the tie-plateau audit's
-    * probe surface (how many pairs share the boundary score), and the
-    * full-ranking form for callers that filter rather than take-k.
+    * non-adjacent pair with its score, no top-k: the full-ranking form for
+    * callers that filter rather than take-k (or count how many pairs share
+    * the boundary score).
     */
   def adamicAdarScored(g: UndirectedWorkingSet,
       maxApexDegree: Long): DataFrame =

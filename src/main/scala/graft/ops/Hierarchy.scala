@@ -12,9 +12,14 @@ import graft.model.TransferSchema._
   * step = child rows joined on `parent_id = parent.target_file_id`, depth+1,
   * path appended with `' > '`; result ordered by path.
   *
-  * Spark has no recursive-CTE logical node, so this is a driver loop of
-  * distributed joins (SURVEY.md §4) using path doubling, the classic parallel
-  * list ranking: every row keeps a pointer to its nearest not-yet-absorbed
+  * Spark 4.1 does have a recursive-CTE node (`UnionLoop`, `WITH RECURSIVE`),
+  * but it is no substitute here. It steps one level per iteration; on a
+  * 25k-node random forest it ran 4.5–5.2 s against 1.6–1.9 s for this
+  * operator (3 warm runs each, 4 cores); a 300-deep chain fails at the
+  * default `spark.sql.cteRecursionLevelLimit` of 100; and a cycle a root
+  * reaches ends in `RECURSION_LEVEL_LIMIT_EXCEEDED`. This operator is instead
+  * a driver loop of distributed joins (SURVEY.md §4) using path doubling, the
+  * classic parallel list ranking: every row keeps a pointer to its nearest not-yet-absorbed
   * ancestor plus the breadcrumb segment and edge count back to it. Each round
   * joins the live rows to the rows their pointer names, jumps the pointer to
   * that row's pointer and prepends its segment, so a row's distance to its

@@ -14,25 +14,28 @@ import graft.model.TransferSchema._
   * (file, sheet, row) triple or an input-supplied `_arrival_seq`), never a
   * materialized global sequence.
   *
-  * Physical shape at scale: one hash-partition shuffle on the key, then a
-  * per-partition sort for `row_number` — Spark's standard window dedup. With
-  * AQE on, skewed keys split automatically. No driver-side state, no global
-  * sort anywhere.
+  * Physical shape at scale: the input is read once; one hash-partition
+  * shuffle on the key, then a per-partition sort for `row_number` — Spark's
+  * standard window dedup. With AQE on, skewed keys split automatically. No
+  * driver-side state, no global sort anywhere.
   */
 object Upsert {
 
   /** SQLite NULL semantics: rows with a NULL in a UNIQUE column never
     * conflict — every insert with `target_file_id IS NULL` survives, and
     * `INSERT OR REPLACE` replaces nothing. A plain window over the key would
-    * group the NULLs together and collapse them, so NULL-keyed rows bypass
-    * the dedup entirely. (`file_name` is never null from import — missing
-    * cells become "" — so only `target_file_id` carries this case.)
+    * group the NULLs together and collapse them, so the partition key gains
+    * one more field: NULL for keyed rows, and the row's own arrival struct
+    * for NULL-keyed ones. The arrival order identifies a row, so each
+    * NULL-keyed row is a group of one and `row_number` keeps it — one
+    * window, no filter/union of two branches (which would scan the input
+    * twice). (`file_name` is never null from import — missing cells become
+    * "" — so only `target_file_id` carries this case.)
     */
   def apply(df: DataFrame): DataFrame = {
-    val keyed = df.filter(col("target_file_id").isNotNull)
-    val nullKeyed = df.filter(col("target_file_id").isNull)
-    dedupLastWins(keyed, upsertKey.map(col), arrivalOrderDesc(df.columns.toSeq))
-      .union(nullKeyed)
+    val columns = df.columns.toSeq
+    val ownGroup = when(col("target_file_id").isNull, struct(arrivalOrderAsc(columns): _*))
+    dedupLastWins(df, upsertKey.map(col) :+ ownGroup, arrivalOrderDesc(columns))
   }
 
   /** Generic keyed last-wins: keep the single row per key that sorts FIRST by

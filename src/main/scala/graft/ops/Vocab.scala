@@ -116,9 +116,8 @@ object Vocab {
     * driver loop is then O(`numMerges` × Σ_top-rows |word symbols|) CPU
     * ≤ O(numMerges × maxVocabRows × max word length) and
     * O(maxVocabRows × max word length) memory — both functions of the
-    * CONFIGURATION, not the data scale (defaults: 100k rows ≈ a few MB;
-    * the [[graft.tools.BpeScale]] probe pins the cap's bite and the
-    * loop's linear growth). Training demanding vocab past ~10⁶ rows is
+    * CONFIGURATION, not the data scale (defaults: 100k rows ≈ a few MB).
+    * Training demanding vocab past ~10⁶ rows is
     * where the distributed form (per-round (pair, weight) aggregation
     * over an exploded symbol table — one shuffle per merge) becomes the
     * right shape; at any practical `maxVocabRows` the driver loop wins

@@ -11,11 +11,15 @@ import graft.views.Analytic
   * pipeline: scan → positional project → coerce → derive → upsert-dedup →
   * parent resolution → analytic views.
   *
-  * Stage dataflow (physical): scan/coerce/enrich are narrow (per-split);
-  * the upsert window is shuffle #1 (hash by key); `status_summary` is
-  * shuffle #2 (hash agg); parent resolution is a broadcast join (no shuffle
-  * of the big side); hierarchy is a bounded driver-loop of distributed
-  * joins. That is the entire shuffle budget of the reference pipeline.
+  * Stage dataflow (physical): ONE scan of the source feeds the whole write
+  * job — quarantine/coerce/enrich are narrow (per-split) projections of it;
+  * the upsert window is shuffle #1 (hash by key, null-keyed rows each their
+  * own group); parent resolution is shuffle #2 (one name-keyed window, no
+  * self-join). Neither operator branches the plan, so nothing re-reads the
+  * workbooks and nothing is cached. The quarantine frame is the same scan
+  * filtered the other way, so counting it is a second, separate read. The
+  * views (`status_summary` hash agg, the hierarchy's driver loop of
+  * distributed joins) are jobs of their own.
   */
 object Pipeline {
 

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.functions.ExcelSerial
 import graft.model.PathOps
 import graft.ops.{Hierarchy, Parents, Upsert}
-import graft.views.Analytic
 
 /** Graph-structure family over the co-purchase graph: ranks (PageRank/TrustRank/HITS/LPA), triangles, coreness, components, link prediction.
   *
@@ -551,64 +550,6 @@ trait GraphQueries { self: RegistryAll =>
     rankDecoded(ranks)
       .orderBy(col("rank_micro").desc, col("node_kind"), col("node_key"))
       .limit(25)
-
-  /** Tie-plateau probe surfaces (r12 verdict task 5): for each top-k
-    * registry row, the UN-limited scored frame it takes its k from, the
-    * score column, and k. A top-k boundary that falls INSIDE an
-    * equal-score plateau (many rows sharing the k-th score) is
-    * deterministic only because the ORDER BY carries a unique tiebreak
-    * suffix — maximally sensitive to any future law/engine drift, so
-    * [[graft.tools.PlateauAudit]] reports each row's boundary-plateau
-    * size and asserts the tiebreak determinism (identical rows across
-    * independent runs). The frames reuse the exact query laws
-    * (pre-limit splits of the query bodies), so the probe measures the
-    * surface the gate hashes. q_adamic_adar is the known case: at
-    * sf0.01 its top-25 boundary cuts an 853-row single-common-neighbor
-    * plateau (r12 adjudication).
-    */
-  private[graft] def topKPlateauProbes(spark: SparkSession, dir: String)
-      : Seq[(String, DataFrame, String, Int)] = Seq(
-    ("q_top_statuses",
-      Analytic.statusSummary(
-        ordersAsTransfer(spark, dir, statusCol = "o_orderpriority")),
-      "record_count", 3),
-    ("q_vocab_top", vocabDocFreq(spark, dir), "doc_freq", 25),
-    ("q_decay_counts", decayMass(spark, dir), "decay_micro", 20),
-    ("q_pagerank",
-      rankDecoded(graft.ops.Graph.pageRankMicro(tradeWorkingSet(spark, dir),
-        iterations = 5, dampNum = 85L, dampDen = 100L, initMicro = 1000000L,
-        seeds = None, seedCol = "node", checkpointEvery = 8)),
-      "rank_micro", 25),
-    ("q_trustrank",
-      rankDecoded(graft.ops.Graph.pageRankMicro(tradeWorkingSet(spark, dir),
-        iterations = 5, dampNum = 85L, dampDen = 100L, initMicro = 1000000L,
-        seeds = Some(t(spark, dir, "supplier")
-          .filter(col("s_suppkey") < 10)
-          .select((col("s_suppkey").cast("long") * 2L).as("node"))),
-        seedCol = "node", checkpointEvery = 8)),
-      "rank_micro", 25),
-    ("q_hits", hitsDecoded(spark, dir), "auth_micro", 25),
-    ("q_adamic_adar",
-      graft.ops.Graph.adamicAdarScored(coPartGraph(spark, dir), 64L),
-      "aa_pico", 25),
-    ("q_link_predict",
-      graft.ops.Graph.linkPredictionScored(coPartGraph(spark, dir), 64L),
-      "ra_pico", 25),
-    ("q_local_clustering",
-      graft.ops.Graph.localClusteringScored(coPartGraph(spark, dir),
-        coPartTriangles(spark, dir)),
-      "lcc_pico", 25),
-    ("q_embed_outliers",
-      graft.ops.Spectral.zOutlierScores(
-        t(spark, dir, "embeddings"), "vec_id", "embedding"),
-      "outlier_micro", 25),
-    ("q_assoc_rules",
-      graft.ops.Collocations.associationRulesScored(
-        t(spark, dir, "lineitem")
-          .select(col("l_orderkey").as("basket"),
-            col("l_partkey").cast("long").as("item")),
-        "basket", "item", minCo = 3L, maxBasket = 64),
-      "lift_pico", 25))
 
   /** Per-JVM rank-result cache (the stored graph leg's reuse — the
     * [[storeOnce]] posture applied to the rank computation; see

@@ -134,7 +134,7 @@ trait ParityQueries { self: RegistryAll =>
       |   ORDER BY ts DESC, event_id DESC) AS rn FROM events)
       | WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin.replace("\n", " ")
 
-  // J1: broadcast hash left-outer parent resolution (the Parents operator)
+  // J1: name-keyed last-write parent resolution (the Parents operator)
   def qParentJoin(spark: SparkSession, dir: String): DataFrame =
     Parents(forestNodes(spark, dir).drop("parent_id"))
       .select("file_name", "parent_id")

@@ -1,15 +1,18 @@
 package graft.report
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.views.Analytic
 
 /** Final-statistics report (K6) — the reference's console summary
   * (SQLiteDirectImporter.java:1020-1062): total/file/folder counts and the
-  * top-5 statuses, plus our quarantine channel count (A6). One aggregate
-  * job + one top-k job; returns structured lines (structured logging
-  * replaces the reference's emoji console UX — SURVEY.md §7.6).
+  * top-5 statuses, plus our quarantine channel count (A6). The database is
+  * read once, by the per-status aggregate (status cardinality is small by
+  * construction), whose rows sum to the totals and, sorted on the driver by
+  * (count desc, name) — the tiebreak of [[graft.views.Analytic.topStatuses]]
+  * — give the top 5. Counting the quarantine frame is a second read. Returns
+  * structured lines (structured logging replaces the reference's emoji
+  * console UX — SURVEY.md §7.6).
   */
 object Report {
 
@@ -17,13 +20,11 @@ object Report {
       topStatuses: Seq[(String, Long)], quarantined: Long)
 
   def collect(resolved: DataFrame, quarantined: Option[DataFrame] = None): Stats = {
-    val s = Analytic.stats(resolved).head()
-    val top = Analytic.topStatuses(resolved, 5)
-      .select("status_name", "record_count")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val byStatus = Analytic.statusCounts(resolved).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val top = byStatus.map { case (n, c, _, _) => (n, c) }.sortBy { case (n, c) => (-c, n) }.take(5)
     Stats(
-      s.getAs[Long]("total_records"), s.getAs[Long]("file_count"),
-      s.getAs[Long]("folder_count"), top,
+      byStatus.map(_._2).sum, byStatus.map(_._3).sum, byStatus.map(_._4).sum, top,
       quarantined.map(_.count()).getOrElse(0L))
   }
 

@@ -33,13 +33,18 @@ object Analytic {
     * map-side is automatic.
     */
   def statusSummary(df: DataFrame): DataFrame =
+    statusCounts(df).orderBy(col("record_count").desc)
+
+  /** [[statusSummary]] without its ordering: one row per status, in no
+    * particular order — the single aggregate [[graft.report.Report]] sums.
+    */
+  def statusCounts(df: DataFrame): DataFrame =
     df.groupBy(coalesce(col("file_status"), lit("Unknown")).as("status_name"))
       .agg(
         count(lit(1)).as("record_count"),
         count(when(col("source_file_size") > 0, 1)).as("file_count"),
         count(when(col("source_file_size") === 0 || col("source_file_size").isNull, 1))
           .as("folder_count"))
-      .orderBy(col("record_count").desc)
 
   /** Distinct non-null statuses (A3, ibid.:888) — drives the dynamic views.
     * Bounded collect: status cardinality is small by construction.

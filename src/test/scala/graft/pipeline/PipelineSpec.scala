@@ -87,7 +87,7 @@ class PipelineSpec extends SparkSpec {
     assert(m("Root").getAs[String]("job_name") === "JobB") // winning row came from JobB
   }
 
-  test("parents: broadcast self-join fills parent_id; miss stays null") {
+  test("parents: name-keyed window fills parent_id; miss stays null") {
     val m = resolved.select("file_name", "parent_id").collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(m("Root/Sub") === Some("1001"))

@@ -1,6 +1,16 @@
 package graft.queries
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
 import graft.SparkSpec
+import graft.ingest.{XlsxRawSource, XlsxWriter}
+import graft.model.TransferSchema
+import graft.pipeline.Pipeline
 
 /** Plan-regression guards: the physical shapes that make these queries
   * scale (broadcasts, pruned scans, top-k without global sort, window
@@ -22,11 +32,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("], [], ["),
       s"$name: corpus-order (unpartitioned, ordered) window:\n$p")
 
-  test("q_parent_join: broadcast hash join, no sort-merge/cartesian") {
-    val p = plan("q_parent_join")
-    assert(p.contains("BroadcastHashJoin"))
-    assert(!p.contains("SortMergeJoin"))
-    assert(!p.contains("CartesianProduct"))
+  private object nodes extends AdaptiveSparkPlanHelper {
+    def joins(p: SparkPlan): Int = collect(p) { case j: BaseJoinExec => j }.size
+    def fileScans(p: SparkPlan): Int = collect(p) { case s: FileSourceScanExec => s }.size
+    def rddScans(p: SparkPlan): Int = collect(p) { case s: RDDScanExec => s }.size
+  }
+
+  test("q_parent_join: Parents adds no join and reads its input once") {
+    // the forest itself is built with two broadcast joins over five scans;
+    // the parent pass on top must add neither a join nor a second read
+    val forest = Registry.forestNodes(spark, dir).drop("parent_id")
+      .queryExecution.executedPlan
+    val p = Registry.queries("q_parent_join")(spark, dir).queryExecution.executedPlan
+    assert(nodes.joins(p) === nodes.joins(forest), p.toString)
+    assert(nodes.fileScans(p) === nodes.fileScans(forest), p.toString)
+  }
+
+  test("import write job: one workbook scan, no join") {
+    val dir = Files.createTempDirectory("graft-one-scan").toFile
+    def row(name: String, id: String, status: String): Seq[String] =
+      Seq(name, "0", "", id) ++ Seq.fill(11)("") ++ Seq(status, "", "", "")
+    Seq("JobA" -> Seq(row("Root", "1", "success"), row("Root/a", "2", "success"),
+        row("Root/b", "", "success"), row("Root/b", "", "success"), row("", "", "")),
+      "JobB" -> Seq(row("Root/a", "2", "resent"), row("Root/c", "3", "success"))).foreach {
+      case (job, rows) => XlsxWriter.write(new File(dir, s"$job.xlsx"), "Transfer Report",
+        TransferSchema.excelHeaders, rows.iterator)
+    }
+    val resolved = Pipeline.runWithQuarantine(spark, dir.getPath, XlsxRawSource)._1
+    val out = resolved.collect()
+      .map(r => (r.getAs[String]("file_name"), Option(r.getAs[String]("parent_id")))).sortBy(_._1).toSeq
+    assert(out === Seq(("Root", None), ("Root/a", Some("1")), ("Root/b", Some("1")),
+      ("Root/b", Some("1")), ("Root/c", Some("1"))))
+    // the final adaptive plan of the job that just ran
+    val p = resolved.queryExecution.executedPlan
+    assert(nodes.rddScans(p) === 1, p.toString)
+    assert(nodes.joins(p) === 0, p.toString)
   }
 
   test("q_status_summary: pruned scan + two-phase hash aggregate") {
