@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Lower median: deterministic for even run counts, and conservative
@@ -104,7 +103,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // full-precision artifact path (r12 verdict task 3a): the default
     // deliberately lands in target/, NOT the repo root — the repo-root
     // BENCH_FULL.json is a COMMITTED baseline, and a routine (possibly
@@ -114,15 +112,7 @@ object Bench {
     val outPath = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("target/BENCH_FULL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogLevels.quietCheckpointRelease()
+    val spark = LocalSpark()
     // warmup: absorb JVM/codegen first-touch cost, then pre-touch EVERY
     // testdata table (full scan into the noop sink — vectorized read, no row
     // conversion) so per-query timings measure the query, not whichever one

@@ -9,10 +9,12 @@ package graft
   * line per released round. Over a full bench run that is dozens of
   * lines of driver-tail noise that would bury a REAL warning.
   *
-  * The silencing is deliberately done HERE, by the entry points (Bench,
-  * Verify, the scale probes) and not inside the library: a host
-  * application keeps its own logging policy — a library must not mutate
-  * global logger levels as a side effect of an operator call.
+  * The silencing is deliberately done by the entry points and not inside
+  * the library: a host application keeps its own logging policy — a
+  * library must not mutate global logger levels as a side effect of an
+  * operator call. Its callers are [[LocalSpark]], the session factory of
+  * `Bench`, `Verify`, the `tools` mains and the test suites, and the
+  * benchmark's `perfbench.Main`, which builds its own session.
   */
 object LogLevels {
 

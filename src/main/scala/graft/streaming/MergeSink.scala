@@ -47,15 +47,16 @@ object MergeSink {
       numBuckets: Int = 64): Long = {
     val state = new Path(statePath)
     val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a flat (pre-bucketing) state directory is MIGRATED, never clobbered
-    if (fs.exists(state) && !fs.exists(metaFile(state)) &&
-        !fs.listStatus(state).exists(_.getPath.getName.startsWith(bucketColName + "=")) &&
-        fs.listStatus(state).exists(_.getPath.getName.startsWith("part-")))
-      migrateLegacy(spark, fs, state, statePath, numBuckets)
     // "state exists" = it has the sidecar or at least one bucket dir — a
     // merely-created empty directory is a fresh state, not a crash
     val exists = fs.exists(state) && (fs.exists(metaFile(state)) ||
       fs.listStatus(state).exists(_.getPath.getName.startsWith(bucketColName + "=")))
+    // data files in no layout this sink wrote (e.g. flat parquet): the
+    // fresh-state branch's overwrite would clobber them, so refuse
+    if (!exists && fs.exists(state) &&
+        fs.listStatus(state).exists(_.getPath.getName.startsWith("part-")))
+      throw new IllegalStateException(s"$statePath holds part- files but no " +
+        s"_graft_meta sidecar and no $bucketColName= directory: not a merge state")
     val (epoch, prevTotal) = readMeta(fs, state, spark, statePath, exists)
     // RESERVE the new epoch before touching data: if the data write crashes
     // mid-way, the next (different) batch gets a strictly later epoch and
@@ -82,10 +83,10 @@ object MergeSink {
           .filter(col(bucketColName).isin(dirty: _*))
           .persist()
         val prevDirty = dirtyState.count()
-        // allowMissingColumns: a legacy-migrated state still carries
-        // _arrival_seq while post-r2 batches don't (and vice versa for a
-        // seq-carrying input). Safe: _epoch dominates arrivalOrderAsc, so a
-        // null _arrival_seq never decides a winner across epochs.
+        // allowMissingColumns: a batch that carries _arrival_seq meets a
+        // state written by batches that don't (and vice versa). Safe:
+        // _epoch dominates arrivalOrderAsc, so a null _arrival_seq never
+        // decides a winner across epochs.
         val m = Upsert(dirtyState.unionByName(withBucket, allowMissingColumns = true)).persist()
         m.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -124,7 +125,6 @@ object MergeSink {
       val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
       line.split(',') match {
-        case Array(e, t) => (e.toLong, t.toLong) // pre-flag format: finalized
         case Array(e, t, "f") => (e.toLong, t.toLong)
         case Array(e, _, "r") =>
           val (scanEpoch, scanCount) = scanMeta(spark, statePath)
@@ -148,31 +148,4 @@ object MergeSink {
   }
 
   private def metaFile(state: Path) = new Path(state, "_graft_meta")
-
-  /** One-time in-place migration of a pre-bucketing (flat parquet) state
-    * directory into the bucketed layout: stamp `_epoch` 1, bucket by the
-    * upsert-key hash, rewrite via staging + directory swap, then record the
-    * sidecar. Without this, the fresh-state branch's `mode(overwrite)`
-    * would silently clobber previously merged rows.
-    */
-  private def migrateLegacy(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, state: Path, statePath: String,
-      numBuckets: Int): Unit = {
-    val stamped = spark.read.parquet(statePath)
-      .withColumn(epochCol, lit(1L))
-      .withColumn(bucketColName,
-        pmod(hash(col("file_name"), col("target_file_id")), lit(numBuckets)))
-      .persist()
-    val staging = new Path(statePath + "._migrate")
-    fs.delete(staging, true)
-    stamped.write.mode("overwrite").partitionBy(bucketColName).parquet(staging.toString)
-    val n = stamped.count()
-    stamped.unpersist()
-    val old = new Path(statePath + "._old")
-    fs.delete(old, true)
-    fs.rename(state, old)
-    fs.rename(staging, state)
-    fs.delete(old, true)
-    writeMeta(fs, state, 1L, n)
-  }
 }

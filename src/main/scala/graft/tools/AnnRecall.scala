@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -24,13 +23,7 @@ object AnnRecall {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val nQueries = args.drop(2).headOption.map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = corpus.filter(col("vec_id") < nQueries)

@@ -183,12 +183,7 @@ object BlockRankScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
     require(n >= 1000 && n <= 50000000L, s"nBlocks out of range: $n")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val t1 = leg(spark, "leg1", n)
     val t2 = leg(spark, "leg2 (2x blocks)", 2 * n)
     println(f"=== blocks 2x: time x${t2 / t1}%.2f (linear-in-blocks law) ===")

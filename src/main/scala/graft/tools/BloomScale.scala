@@ -35,11 +35,7 @@ object BloomScale {
     val refRows = args.headOption.map(_.toLong).getOrElse(2000000L)
     val batchRows = args.lift(1).map(_.toLong).getOrElse(200000L)
     val dupEvery = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .appName("bloom-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     val reference = docs(spark, refRows, "ref", 7).cache()
     val incoming = docs(spark, batchRows, "batch", dupEvery).cache()

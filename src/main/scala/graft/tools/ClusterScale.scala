@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Clusters
@@ -24,14 +23,7 @@ object ClusterScale {
     // complete blocks) and keep the chain leg non-degenerate
     val nEdges = math.max(1000L,
       args.headOption.map(_.toLong).getOrElse(1000000L) / 10 * 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
 
     // blocks of 10 vertices: edge i links vertex i to the next vertex in its
     // block (ring), giving nEdges/10 components of size 10

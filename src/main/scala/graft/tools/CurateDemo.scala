@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -24,14 +23,7 @@ import graft.ops.{Clusters, Contamination, Dedup, Mixture, Packing, Sampling, Sc
 object CurateDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

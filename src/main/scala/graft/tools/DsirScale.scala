@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Importance
@@ -24,11 +24,7 @@ object DsirScale {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(200000L)
     val tok = args.lift(1).map(_.toInt).getOrElse(40)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .appName("dsir-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     // synthetic docs from a small vocabulary so bucket counts are dense
     val words = (0 until 500).map(i => s"w$i")

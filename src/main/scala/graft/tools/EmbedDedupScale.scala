@@ -79,12 +79,7 @@ object EmbedDedupScale {
   def main(args: Array[String]): Unit = {
     val nBlocks = args.headOption.map(_.toLong).getOrElse(100000L)
     val perBlock = args.lift(1).map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val t1 = leg(spark, "leg1 (base density)", nBlocks, perBlock, clones = 4)
     val t2 = leg(spark, "leg2 (2x dup density, same rows)", nBlocks, perBlock,
       clones = 8)

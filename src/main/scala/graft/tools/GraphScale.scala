@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
@@ -31,14 +30,7 @@ object GraphScale {
     val nEdges = math.max(10000L, args.headOption.map(_.toLong).getOrElse(1000000L))
     val n = nEdges // ring contributes one edge per vertex
     val hub = n // hub id sits past the ring ids
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
 
     val ring = spark.range(n).select(col("id").as("src"),
       ((col("id") + 1L) % n).as("dst"))

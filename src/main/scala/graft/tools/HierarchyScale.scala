@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Hierarchy
@@ -18,14 +17,7 @@ object HierarchyScale {
   def main(args: Array[String]): Unit = {
     val fanout = args.headOption.map(_.toInt).getOrElse(10)
     val depth = args.drop(1).headOption.map(_.toInt).getOrElse(6)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
 
     // level l has 10 * fanout^(l-1) nodes; node ids are contiguous per level
     def levelOffset(l: Int): Long =

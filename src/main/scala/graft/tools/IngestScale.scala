@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.RefStore
@@ -30,11 +30,7 @@ object IngestScale {
     // dupEvery = 1 would break the offset-plus-1 non-planted-reference law
     require(dupEvery >= 2 && rows % dupEvery == 0,
       s"need dupEvery >= 2 dividing rowsPerBatch, got $rows / $dupEvery")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .appName("ingest-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     // batch b: ids [b·rows, (b+1)·rows); every dupEvery-th row REPEATS a
     // batch-(b-1) row's content — offset +1 so the referenced row was NOT

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -26,11 +25,7 @@ object KmeansScale {
     val rows = args.headOption.map(_.toLong).getOrElse(1000000L)
     val dims = args.lift(1).map(_.toInt).getOrElse(16)
     val k = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .appName("kmeans-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     // planted clusters: row i belongs to direction (i % k); its vector is
     // the axis-k basis vector plus a small deterministic per-dim wobble

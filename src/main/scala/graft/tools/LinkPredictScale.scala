@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
@@ -39,14 +38,7 @@ object LinkPredictScale {
     val leaves = 100000L
     val base = n + 10L // gadget ids: U=base+10i, V=U+1, Z_j=U+2+j (j<4)
     val hub = base + 10L * gadgets + 1000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
 
     val ring = spark.range(n).select(col("id").as("src"),
       ((col("id") + 1L) % n).as("dst"))

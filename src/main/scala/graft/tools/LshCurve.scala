@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -33,13 +32,7 @@ import graft.ops.Dedup
 object LshCurve {
   def main(args: Array[String]): Unit = {
     val nPairs = math.max(500, args.headOption.map(_.toInt).getOrElse(4000))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.LogLevels.quietCheckpointRelease()
+    val spark = graft.LocalSpark()
     import spark.implicits._
 
     // pair p: 40-token docs sharing a prefix of k ∈ [3, 40] tokens — the

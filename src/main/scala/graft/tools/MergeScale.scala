@@ -40,12 +40,7 @@ object MergeScale {
     // bucket and the merge degrades to the (correct) full-state rewrite
     val batchRows = args.drop(1).headOption.map(_.toLong).getOrElse(12L)
     val buckets = args.drop(2).headOption.map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
 
     val state = Files.createTempDirectory("graft-mergescale").toString + "/state"
     var t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query gate loop: dump one or more registry queries' parquet +
   * oracle SQL so the DuckDB compare can run on just those instead of the
   * full registry `graft.Verify` pass — the oracle-authoring iteration
@@ -18,13 +16,7 @@ object OneQuery {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(2).getOrElse("/tmp/oneq")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.queries.Registry.queries(name)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-SHAPED dataset from the driver's sf0.1 tables for the
@@ -27,13 +27,7 @@ object ScaleUp {
     require(factor >= 1 && factor <= 10,
       s"factor must lie in [1, 10] (single-digit copy prefixes), got $factor")
     val off = 100000000L // far past every sf0.1 key
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(name: String, df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")

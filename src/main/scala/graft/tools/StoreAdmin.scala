@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.RefStore
 
 /** The RefStore maintenance CLI: print the [[RefStore.describe]] dashboard
@@ -18,13 +16,7 @@ import graft.ops.RefStore
   */
 object StoreAdmin {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     import spark.implicits._
 
     val (dir, doCompact, buckets) = args.toList match {

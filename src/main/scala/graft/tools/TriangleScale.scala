@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Triangle-family scale probe: a ring of K planted c-cliques (~2M edges
@@ -26,13 +25,8 @@ object TriangleScale {
     val k = args.lift(0).map(_.toLong).getOrElse(20000L)
     val c = args.lift(1).map(_.toInt).getOrElse(15)
     require(k > 3 && c >= 3, s"need cliques > 3 and size >= 3, got $k x $c")
-    val spark = SparkSession.builder().master("local[*]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSpark()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.LogLevels.quietCheckpointRelease()
 
     val pairs = (for (i <- 0 until c; j <- (i + 1) until c)
       yield (i.toLong, j.toLong)).toDF("_i", "_j")

@@ -99,12 +99,7 @@ object VocabScale {
   def main(args: Array[String]): Unit = {
     val log2Docs = args.headOption.map(_.toInt).getOrElse(17)
     require(log2Docs >= 10 && log2Docs <= 24, s"log2Docs out of range: $log2Docs")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     val nNew = 16
     val reps = 80
     val t1 = leg(spark, "leg1", 1L << log2Docs, nNew, reps)

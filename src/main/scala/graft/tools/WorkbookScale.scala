@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ingest.{Xlsx, XlsxRawSource, XlsxWriter}
 import graft.model.TransferSchema
 import graft.pipeline.Pipeline
@@ -47,12 +45,7 @@ object WorkbookScale {
     println(f"=== raw scan: $scanned%,d rows in $scanSec%.1f s " +
       f"(${scanned / scanSec}%,.0f rows/s single-thread) ===")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark()
     t0 = System.nanoTime()
     val resolved = Pipeline.run(spark, dir.toString, XlsxRawSource).count()
     val pipeSec = (System.nanoTime() - t0) / 1e9

@@ -4,17 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
-  * the forked test JVM).
+  * the forked test JVM). Pinned to 4 cores, so 4 shuffle partitions
+  * (`PrefixSumSpec` exercises its range split across them).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSpark(cores = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

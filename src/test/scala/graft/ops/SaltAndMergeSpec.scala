@@ -48,23 +48,22 @@ class SaltAndMergeSpec extends SparkSpec {
     assert(MergeSink.merge(spark, batch2, state) === 8)
   }
 
-  test("merge sink: a legacy flat state directory is migrated, not clobbered") {
+  test("merge sink: a legacy flat state directory is refused, not clobbered") {
     val state = Files.createTempDirectory("graft-merge-legacy").toString + "/state"
     val resolved = Pipeline.resolve(Enrich(Coerce(PipelineFixture.raw(spark))))
     // pre-bucketing layout: flat parquet, no sidecar, no bucket dirs
     resolved.filter($"file_name" =!= "Root").write.parquet(state)
 
+    def snapshot(): Map[String, Seq[Byte]] =
+      new java.io.File(state).listFiles().toSeq
+        .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val before = snapshot()
+    assert(before.keys.exists(_.startsWith("part-")))
+
     val batch = resolved.filter($"file_name" === "Root")
-    val n = MergeSink.merge(spark, batch, state)
-    assert(n === 8) // 7 legacy rows survived + 1 new key
-    val st = spark.read.parquet(state)
-    assert(st.count() === 8)
-    assert(st.filter($"file_name" === "Root/Sub/a.pdf").count() === 1) // legacy row intact
-    // and the batch's row won where keys overlap on a re-merge
-    val batch2 = batch.withColumn("file_status", lit("migrated-wins"))
-    MergeSink.merge(spark, batch2, state)
-    assert(spark.read.parquet(state).filter($"file_name" === "Root")
-      .head.getAs[String]("file_status") === "migrated-wins")
+    intercept[IllegalStateException](MergeSink.merge(spark, batch, state))
+    // same files, same bytes: nothing was written, renamed or deleted
+    assert(snapshot() === before)
   }
 
   test("merge sink: seq-carrying state merges with a seq-less batch (and vice versa)") {
