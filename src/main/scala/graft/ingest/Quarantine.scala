@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.model.TransferSchema._
@@ -26,10 +26,32 @@ object Quarantine {
       lit("empty_key: file_name and target_file_id both blank"))
       .otherwise(lit(null).cast("string"))
 
-  /** (good, quarantined-with-reason). One narrow pass, no shuffle. */
+  /** (good, quarantined-with-reason). One narrow pass, no shuffle. The good
+    * branch counts the quarantined rows as they pass, with an `observe`
+    * before its filter, so the job that reads `good` (the import's write)
+    * also yields the quarantine count; [[observedCount]] hands it to whoever
+    * holds `bad`. `bad` carries no observation: an action on it may read
+    * only part of its input.
+    */
   def split(raw: DataFrame): (DataFrame, DataFrame) = {
     val tagged = raw.withColumn("_quarantine_reason", invalidReason)
-    (tagged.filter(col("_quarantine_reason").isNull).drop("_quarantine_reason"),
-      tagged.filter(col("_quarantine_reason").isNotNull))
+    val seen = Observation()
+    val good = tagged.observe(seen, count(col("_quarantine_reason")).as("quarantined"))
+      .filter(col("_quarantine_reason").isNull).drop("_quarantine_reason")
+    val bad = tagged.filter(col("_quarantine_reason").isNotNull)
+    counts.synchronized(counts.put(bad, seen))
+    (good, bad)
   }
+
+  /** `bad` → the observation on its good branch. `Dataset` keeps `Object`'s
+    * identity equality, and the keys are weak: an entry goes with its frame.
+    */
+  private val counts = new java.util.WeakHashMap[DataFrame, Observation]()
+
+  /** The row count of a quarantine frame from [[split]], if a job over its
+    * good branch has completed and Spark has delivered the observation.
+    */
+  def observedCount(bad: DataFrame): Option[Long] =
+    Option(counts.synchronized(counts.get(bad)))
+      .flatMap(_.future.value).flatMap(_.toOption).map(_.getLong(0))
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.PathOps
 import graft.model.TransferSchema._
@@ -55,13 +56,20 @@ import graft.model.TransferSchema._
   */
 object Hierarchy {
 
-  def apply(df: DataFrame): DataFrame = {
-    val parent = col(parentIdCol).try_cast("long") // TEXT column, numeric compare (SQLite affinity)
+  /** The traversal's rows ordered by path: the view's answer. */
+  def apply(df: DataFrame): DataFrame = traverse(df).orderBy("path")
+
+  /** The names and types of [[apply]]'s columns, from analysis alone: no job
+    * runs.
+    */
+  def schema(df: DataFrame): StructType = output(start(df)).schema
+
+  /** The traversal itself: its result rows, in no order, held by one local
+    * checkpoint.
+    */
+  def traverse(df: DataFrame): DataFrame = {
     val initObs = Observation()
-    val init = df.select(
-      col("file_name"), col("target_file_id"), parent.as(parentIdCol), col(levelCol),
-      parent.as("_ptr"), col("file_name").as("_seg"),
-      when(parent.isNull, lit(0)).otherwise(lit(1)).as("_dep"))
+    val init = start(df)
       .observe(initObs, count(lit(1)).as("n"), count(col("_ptr")).as("live"))
       .localCheckpoint()
     val n = initObs.get("n").asInstanceOf[Long]
@@ -99,10 +107,21 @@ object Hierarchy {
     // one checkpoint of the N result rows: the round checkpoints (settled
     // and live rows alike) become unreachable here and the context cleaner
     // frees them, so a registered view holds the result, not every round
-    settled
-      .select(col("file_name"), col("target_file_id"), col(parentIdCol),
-        col(levelCol), col("_dep").as("depth"), col("_seg").as("path"))
-      .localCheckpoint()
-      .orderBy("path")
+    output(settled).localCheckpoint()
   }
+
+  /** Every row pointing at its parent, one edge away; a root points nowhere
+    * and is settled at depth 0.
+    */
+  private def start(df: DataFrame): DataFrame = {
+    val parent = col(parentIdCol).try_cast("long") // TEXT column, numeric compare (SQLite affinity)
+    df.select(
+      col("file_name"), col("target_file_id"), parent.as(parentIdCol), col(levelCol),
+      parent.as("_ptr"), col("file_name").as("_seg"),
+      when(parent.isNull, lit(0)).otherwise(lit(1)).as("_dep"))
+  }
+
+  private def output(rows: DataFrame): DataFrame =
+    rows.select(col("file_name"), col("target_file_id"), col(parentIdCol),
+      col(levelCol), col("_dep").as("depth"), col("_seg").as("path"))
 }

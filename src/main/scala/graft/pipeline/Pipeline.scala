@@ -17,9 +17,10 @@ import graft.views.Analytic
   * own group); parent resolution is shuffle #2 (one name-keyed window, no
   * self-join). Neither operator branches the plan, so nothing re-reads the
   * workbooks and nothing is cached. The quarantine frame is the same scan
-  * filtered the other way, so counting it is a second, separate read. The
-  * views (`status_summary` hash agg, the hierarchy's driver loop of
-  * distributed joins) are jobs of their own.
+  * filtered the other way; its row count is observed in the write job, so
+  * the report need not read it again. Registering the views runs one job
+  * (the distinct statuses); the hierarchy's driver loop of distributed
+  * joins runs on the first read of `hierarchy_children`.
   */
 object Pipeline {
 
@@ -28,7 +29,8 @@ object Pipeline {
     runWithQuarantine(spark, path, source)._1
 
   /** Same, but also surfaces the structurally-rejected rows (A6 error
-    * channel) for the report.
+    * channel) for the report. The first job over the resolved frame counts
+    * them: it passes the upsert exchange, so it reads every row.
     */
   def runWithQuarantine(spark: SparkSession, path: String,
       source: RawSource = ParquetRawSource): (DataFrame, DataFrame) = {

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, hash, lit, max, pmod}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, hash, lit, max, pmod}
 
 import graft.model.TransferSchema.epochCol
 import graft.ops.Upsert
@@ -66,41 +66,42 @@ object MergeSink {
     // trusting it, so a crash can't make the persisted total drift forever.
     if (exists) writeMeta(fs, state, epoch + 1, prevTotal, finalized = false)
 
-    // bucket by the upsert key's hash: same key → same bucket, always
-    val withBucket = resolved
+    // bucket by the upsert key's hash: same key → same bucket, always. The
+    // batch is evaluated once, into a local checkpoint whose job also
+    // collects the buckets it touches (bounded by numBuckets)
+    val dirtyObs = Observation()
+    val batch = resolved
       .withColumn(epochCol, lit(epoch + 1))
       .withColumn(bucketColName,
         pmod(hash(col("file_name"), col("target_file_id")), lit(numBuckets)))
+      .observe(dirtyObs, collect_set(col(bucketColName)).as("dirty"))
+      .localCheckpoint()
+    val dirty = dirtyObs.get("dirty").asInstanceOf[scala.collection.Seq[Int]].toSeq
 
-    // buckets this batch touches — bounded by numBuckets, safe to collect
-    val dirty = withBucket.select(bucketColName).distinct()
-      .collect().map(_.getInt(0)).toSeq
-
+    // the write job counts the rows it writes, and the dirty state it reads
+    val writtenObs = Observation()
+    def upsert(in: DataFrame) =
+      Upsert(in).observe(writtenObs, count(lit(1)).as("n"))
+        .write.mode("overwrite").partitionBy(bucketColName)
+    def written = writtenObs.get("n").asInstanceOf[Long]
     val merged =
       if (exists) {
         // partition pruning: only the dirty buckets' files are read
+        val readObs = Observation()
         val dirtyState = spark.read.parquet(statePath)
           .filter(col(bucketColName).isin(dirty: _*))
-          .persist()
-        val prevDirty = dirtyState.count()
+          .observe(readObs, count(lit(1)).as("n"))
         // allowMissingColumns: a batch that carries _arrival_seq meets a
         // state written by batches that don't (and vice versa). Safe:
         // _epoch dominates arrivalOrderAsc, so a null _arrival_seq never
         // decides a winner across epochs.
-        val m = Upsert(dirtyState.unionByName(withBucket, allowMissingColumns = true)).persist()
-        m.write.mode("overwrite")
+        upsert(dirtyState.unionByName(batch, allowMissingColumns = true))
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(bucketColName)
           .parquet(statePath)
-        val total = prevTotal - prevDirty + m.count()
-        dirtyState.unpersist(); m.unpersist()
-        total
+        prevTotal - readObs.get("n").asInstanceOf[Long] + written
       } else {
-        val m = Upsert(withBucket).persist()
-        m.write.mode("overwrite").partitionBy(bucketColName).parquet(statePath)
-        val total = m.count()
-        m.unpersist()
-        total
+        upsert(batch).parquet(statePath)
+        written
       }
     writeMeta(fs, state, epoch + 1, merged)
     merged
@@ -136,7 +137,7 @@ object MergeSink {
 
   private def scanMeta(spark: SparkSession, statePath: String): (Long, Long) = {
     val df = spark.read.parquet(statePath)
-    val row = df.agg(coalesce(max(col(epochCol)), lit(0L)), org.apache.spark.sql.functions.count(lit(1))).head()
+    val row = df.agg(coalesce(max(col(epochCol)), lit(0L)), count(lit(1))).head()
     (row.getLong(0), row.getLong(1))
   }
 

@@ -1,7 +1,12 @@
 package graft.views
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.PathOps
 import graft.ops.Hierarchy
@@ -82,8 +87,15 @@ object Analytic {
       (viewName, df.filter(col("file_status") === lit(s)))
     }
 
-  /** `hierarchy_children` (J2), ordered by path — see [[graft.ops.Hierarchy]]. */
-  def hierarchyChildren(df: DataFrame): DataFrame = Hierarchy(df)
+  /** `hierarchy_children` (J2), ordered by path — see [[graft.ops.Hierarchy]].
+    * Lazy, as SQLite's view is: building the frame runs no job. The first
+    * read of it runs the traversal, and every later read of the same frame
+    * reuses that result, so a cycle that a root reaches throws
+    * `IllegalStateException` at the first read, and again at every later
+    * read without traversing again.
+    */
+  def hierarchyChildren(df: DataFrame): DataFrame =
+    df.sparkSession.baseRelationToDataFrame(new HierarchyRelation(df)).orderBy("path")
 
   /** Top-k statuses by count (O3, ibid.:1052-1057) — `TakeOrderedAndProject`,
     * no global sort.
@@ -113,7 +125,10 @@ object Analytic {
         .as("folder_count"))
 
   /** Bind the whole layer as temp views under the reference's names
-    * (K3, ibid.:865-916). The base frame registers as `transfer_data`.
+    * (K3, ibid.:865-916). The base frame registers as `transfer_data`. The
+    * only job is the distinct-status query that names the per-status views:
+    * `hierarchy_children` traverses on its first read, once per
+    * registration (see [[hierarchyChildren]]).
     */
   def registerAll(spark: SparkSession, df: DataFrame): Unit = {
     df.createOrReplaceTempView("transfer_data")
@@ -123,4 +138,22 @@ object Analytic {
     hierarchyChildren(df).createOrReplaceTempView("hierarchy_children")
     statusViews(df).foreach { case (name, frame) => frame.createOrReplaceTempView(name) }
   }
+}
+
+/** The traversal behind [[Analytic.hierarchyChildren]], run by the first
+  * scan and kept for every later one. The rows stay in Spark's internal
+  * format, so a scan costs what a scan of the checkpoint itself costs. A
+  * failure is kept too: Spark plans a failed query again to report its
+  * observations, and that must not re-run the traversal. Once the view that
+  * holds this relation is replaced, the checkpoint is unreachable and the
+  * context cleaner frees it.
+  */
+private final class HierarchyRelation(df: DataFrame) extends BaseRelation with TableScan {
+  override def sqlContext: SQLContext = df.sparkSession.sqlContext
+  // every column nullable: the traversal's own nullability is known only
+  // once it has run
+  override val schema: StructType = StructType(Hierarchy.schema(df).map(_.copy(nullable = true)))
+  override def needConversion: Boolean = false
+  private lazy val rows = Try(Hierarchy.traverse(df).queryExecution.toRdd)
+  override def buildScan(): RDD[Row] = rows.get.asInstanceOf[RDD[Row]]
 }

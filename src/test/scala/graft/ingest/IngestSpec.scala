@@ -1,14 +1,16 @@
 package graft.ingest
 
+import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 import graft.model.TransferSchema._
-import graft.pipeline.PipelineFixture
+import graft.pipeline.{Pipeline, PipelineFixture}
 import graft.report.Report
+import graft.views.Analytic
 
 class IngestSpec extends SparkSpec {
   import spark.implicits._
@@ -67,5 +69,60 @@ class IngestSpec extends SparkSpec {
     assert(s.quarantined === 0)
     val lines = Report.render(s)
     assert(lines.exists(_.contains("total records : 8")))
+  }
+
+  /** A two-workbook drop folder: 5 keyed rows (4 keys), 3 blank-key rows. */
+  private def dropFolder(): String = {
+    val dir = Files.createTempDirectory("graft-quarantine").toFile
+    def row(name: String, id: String, status: String): Seq[String] =
+      Seq(name, "0", "", id) ++ Seq.fill(11)("") ++ Seq(status, "", "", "")
+    Seq("JobA" -> Seq(row("Root", "1", "success"), row("", "", ""), row("Root/a", "2", "success"),
+        row("", "", "")),
+      "JobB" -> Seq(row("Root/a", "2", "resent"), row("", "", ""), row("Root/c", "3", "success"),
+        row("Root/d", "4", "failed"))).foreach {
+      case (job, rows) => XlsxWriter.write(new File(dir, s"$job.xlsx"), "Transfer Report",
+        excelHeaders, rows.iterator)
+    }
+    dir.getPath
+  }
+
+  /** Writes the resolved frame as a parquet database and reads it back. */
+  private def written(resolved: DataFrame): DataFrame = {
+    val out = Files.createTempDirectory("graft-quarantine-db").toString + "/db"
+    resolved.write.parquet(out)
+    spark.read.parquet(out)
+  }
+
+  test("Report: the quarantine count comes from the write job; the report runs only its aggregate") {
+    val (resolved, bad) = Pipeline.runWithQuarantine(spark, dropFolder(), XlsxRawSource)
+    val db = written(resolved)
+    val (s, jobs) = JobLog.of(sc)(Report.collect(db, Some(bad)))
+    assert(s.quarantined === 3)
+    assert(s.totalRecords === 4)
+    val (_, aggregate) = JobLog.of(sc)(Analytic.statusCounts(db).collect())
+    assert(jobs.size === aggregate.size, jobs)
+    assert(!jobs.exists(_.scansWorkbooks), jobs)
+  }
+
+  test("Report: the quarantine count stays exact when a partial read ran before the write") {
+    val (resolved, bad) = Pipeline.runWithQuarantine(spark, dropFolder(), XlsxRawSource)
+    assert(resolved.limit(1).collect().length === 1)
+    val db = written(resolved)
+    val (s, jobs) = JobLog.of(sc)(Report.collect(db, Some(bad)))
+    assert(s.quarantined === 3)
+    assert(!jobs.exists(_.scansWorkbooks), jobs)
+  }
+
+  test("Report: the quarantine count stays exact when no job read the good branch first") {
+    val dir = dropFolder()
+    // the report's own aggregate is the first job over the good branch
+    val (resolved, bad) = Pipeline.runWithQuarantine(spark, dir, XlsxRawSource)
+    assert(Report.collect(resolved, Some(bad)).quarantined === 3)
+    // no job over this good branch ever runs: the report counts the frame
+    val (_, unread) = Pipeline.runWithQuarantine(spark, dir, XlsxRawSource)
+    val db = written(resolved)
+    val (s, jobs) = JobLog.of(sc)(Report.collect(db, Some(unread)))
+    assert(s.quarantined === 3)
+    assert(jobs.exists(_.scansWorkbooks), jobs)
   }
 }

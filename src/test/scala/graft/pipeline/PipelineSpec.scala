@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 import graft.ingest.Coerce
 import graft.model.TransferSchema._
 import graft.ops.{Enrich, Hierarchy, Parents, Upsert}
@@ -176,6 +176,34 @@ class PipelineSpec extends SparkSpec {
     val r = spark.table("hierarchy_children").agg(count(lit(1)), max(col("depth"))).head()
     assert(r.getLong(0) === 100L)
     assert(r.getInt(1) === 99)
+  }
+
+  test("registerAll: runs only the distinct-status job; hierarchy_children traverses on first read, once") {
+    resolved.count()
+    val (_, statusJobs) = JobLog.of(sc)(Analytic.distinctStatuses(resolved))
+    val (_, registerJobs) = JobLog.of(sc)(Analytic.registerAll(spark, resolved))
+    assert(registerJobs.size === statusJobs.size)
+    assert(!registerJobs.exists(_.is("localCheckpoint")), registerJobs)
+    val (first, firstJobs) = JobLog.of(sc)(spark.table("hierarchy_children").collect())
+    assert(first.toSeq === Hierarchy(resolved).collect().toSeq)
+    assert(firstJobs.exists(_.is("localCheckpoint")), firstJobs)
+    val (second, secondJobs) = JobLog.of(sc)(spark.table("hierarchy_children").collect())
+    assert(second.toSeq === first.toSeq)
+    assert(!secondJobs.exists(_.is("localCheckpoint")), secondJobs)
+  }
+
+  test("registerAll: a cycle a root reaches registers; the first read throws, once") {
+    // root → a(2) → b(3) → a2(2) → b(3) → … : WITH RECURSIVE never ends
+    val cyclic = Seq(("root", 1L, None, 1), ("a", 2L, Some("1"), 1),
+      ("b", 3L, Some("2"), 1), ("a2", 2L, Some("3"), 1))
+      .toDF("file_name", "target_file_id", "parent_id", "level")
+      .withColumn("source_file_size", lit(0L)).withColumn("file_status", lit("success"))
+    Analytic.registerAll(spark, cyclic)
+    intercept[IllegalStateException](spark.table("hierarchy_children").collect())
+    // the failure is kept: a second read throws again without traversing
+    val (_, again) = JobLog.of(sc)(
+      intercept[IllegalStateException](spark.table("hierarchy_children").collect()))
+    assert(again.isEmpty, again)
   }
 
   test("stats: one-pass totals") {
