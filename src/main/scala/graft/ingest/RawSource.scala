@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.model.TransferSchema._
 
 /** Source adapters producing the raw (pre-coercion) frame: the 19 positional
-  * string columns + ingest metadata (`_src_file`, `_sheet`, `_row_idx`;
-  * plus `_arrival_seq` only when the input supplies an explicit order).
+  * string columns + ingest metadata (`_src_file`, `_sheet`, `_row_idx`).
   *
   * The reference reads Excel workbooks via POI SAX/DataFormatter and delivers
   * every cell as a formatted STRING (SQLiteDirectImporter.java:330-379,
@@ -30,18 +29,20 @@ trait RawSource {
     * missing trailing columns with "", null cells → "".
     */
   protected def positional(df: DataFrame): DataFrame = {
-    // meta columns are OUT of the positional band: a short row (< 19 data
-    // cells) must pad with "", never consume a synthesized meta column as a
-    // trailing data column
-    val dataCols = df.columns.filterNot(metaColumns.contains)
+    // underscore-prefixed columns are ingest metadata (the triple, or one an
+    // upstream writer left, such as a merge state's `_epoch`) and stay OUT of
+    // the positional band: a short row (< 19 data cells) must pad with "",
+    // never consume one as a trailing data column. Spark names a blank CSV
+    // header cell `_c<N>`; that column is data.
+    val dataCols = df.columns.filterNot(c => c.startsWith("_") && !c.matches("_c\\d+"))
     val present = dataCols.take(dbColumns.size)
     val renamed = present.zip(dbColumns).map { case (src, dst) => col(src).as(dst) }
     val padded = dbColumns.drop(present.size).map(c => lit("").as(c))
     // meta columns may arrive string-typed from CSV/JSON round-trips — pin
-    // the contract types (lexicographic "_arrival_seq" ordering would invert
+    // the contract types (lexicographic "_row_idx" ordering would invert
     // last-writer-wins at 10+ rows)
     val metas = metaColumns.filter(df.columns.contains).map {
-      case c @ (`rowIdxCol` | `arrivalSeqCol`) => col(c).cast("long").as(c)
+      case c @ `rowIdxCol` => col(c).cast("long").as(c)
       case c => col(c).cast("string").as(c)
     }
     val out = df.select(renamed ++ padded ++ metas: _*)
@@ -66,13 +67,11 @@ trait RawSource {
   * missing triple column (`_src_file` from the physical file name, `_row_idx`
   * from within-file order) so downstream upsert determinism holds.
   *
-  * NO global `_arrival_seq` is materialized: arrival order is the
+  * NO global sequence is materialized: arrival order is the
   * (file, sheet, row) triple, compared lazily inside hash-partitioned
   * windows/aggregates (TransferSchema.arrivalOrderAsc). A
   * `row_number() OVER (ORDER BY …)` here would be a single-task global
-  * sort of the entire ingest — the row-1 scale flaw this design removes.
-  * Inputs that carry their own `_arrival_seq` keep it as an explicit
-  * order override.
+  * sort of the entire ingest.
   */
 object ParquetRawSource extends RawSource {
   def load(spark: SparkSession, path: String): DataFrame =
@@ -177,9 +176,11 @@ private[ingest] object WorkbookFrames {
       StructField(rowIdxCol, LongType, nullable = false)))
 
   /** Per-FILE error tolerance (SQLiteDirectImporter.java:196-197): a corrupt
-    * workbook logs and contributes zero rows instead of failing the batch —
-    * including failures surfacing lazily mid-iteration. Row-level structural
-    * tolerance is downstream ([[Quarantine]]).
+    * workbook logs one stderr line and keeps the rows read before the error
+    * (none when opening it fails) instead of failing the batch — including
+    * failures surfacing lazily mid-iteration. The rows after the error are
+    * dropped, and nothing but that line reports the loss. Row-level
+    * structural tolerance is downstream ([[Quarantine]]).
     */
   private def tolerant(name: String,
       mk: => Iterator[(String, Long, Array[String])])

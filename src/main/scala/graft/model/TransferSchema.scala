@@ -46,10 +46,9 @@ object TransferSchema {
   val srcFileCol = "_src_file"     // source workbook file name
   val sheetCol = "_sheet"          // sheet name within the workbook
   val rowIdxCol = "_row_idx"       // 0-based row index within the sheet (0 = header)
-  val arrivalSeqCol = "_arrival_seq" // OPTIONAL explicit total order (input-supplied)
   val epochCol = "_epoch"          // cross-batch merge epoch (MergeSink)
 
-  val metaColumns: Seq[String] = Seq(srcFileCol, sheetCol, rowIdxCol, arrivalSeqCol)
+  val metaColumns: Seq[String] = Seq(srcFileCol, sheetCol, rowIdxCol)
 
   /** The arrival total order (ascending), WITHOUT materializing a global
     * sequence: the reference's physical insert order is (file name asc,
@@ -59,31 +58,17 @@ object TransferSchema {
     * COMPARE arrival order within a key, never a global row number. Sorting
     * by the triple inside hash-partitioned windows keeps the whole ingest
     * path shuffle-parallel; a materialized `row_number() OVER (ORDER BY …)`
-    * would funnel all rows through one task — the one thing a 100 TB ingest
-    * must not do.
+    * would funnel all rows through one task.
     *
-    * Precedence: `_epoch` (cross-batch, strictly later batches win) →
-    * `_arrival_seq` if the INPUT supplied an explicit order → the
-    * (file, sheet, row) triple → `monotonically_increasing_id()` as a
-    * last-resort arbitrary-but-stable order for meta-less frames.
-    *
-    * When BOTH `_arrival_seq` and the triple are present, the triple is a
-    * trailing tiebreak: a mixed frame (e.g. a legacy seq-carrying state
-    * union'd with a seq-less batch via allowMissingColumns) has the seq
-    * null-filled on one side, and within that side's epoch every seq
-    * compares equal — the triple must decide, not a coin flip.
+    * Order: `_epoch` (cross-batch, strictly later batches win), then the
+    * (file, sheet, row) triple; `monotonically_increasing_id()` stands in
+    * for the triple, arbitrary but stable, only in frames without it.
     */
   def arrivalOrderAsc(columns: Seq[String]): Seq[Column] = {
     val epoch = if (columns.contains(epochCol)) Seq(col(epochCol)) else Nil
-    val seq =
-      if (columns.contains(arrivalSeqCol)) Seq(col(arrivalSeqCol)) else Nil
-    val triple =
-      if (Seq(srcFileCol, sheetCol, rowIdxCol).forall(columns.contains))
-        Seq(col(srcFileCol), col(sheetCol), col(rowIdxCol))
-      else Nil
     val base =
-      if (seq.isEmpty && triple.isEmpty) Seq(monotonically_increasing_id())
-      else seq ++ triple
+      if (metaColumns.forall(columns.contains)) metaColumns.map(col)
+      else Seq(monotonically_increasing_id())
     epoch ++ base
   }
 
@@ -98,8 +83,7 @@ object TransferSchema {
     dbColumns.map(c => StructField(c, StringType, nullable = false)) ++ Seq(
       StructField(srcFileCol, StringType, nullable = false),
       StructField(sheetCol, StringType, nullable = false),
-      StructField(rowIdxCol, LongType, nullable = false),
-      StructField(arrivalSeqCol, LongType, nullable = false)))
+      StructField(rowIdxCol, LongType, nullable = false)))
 
   /** Typed (post-coercion) type per imported column. */
   def typedType(col: String): DataType =

@@ -277,16 +277,13 @@ object Multimodal {
   /** Commit a media batch's image dHashes to a [[graft.ops.RefStore]]
     * signature store (create with `write = true` on the initial corpus,
     * merge thereafter) — 8 persisted bytes per image, the incremental
-    * re-crawl guard's reference side. `leaseWaitMs` / `autoCompactAfter`
-    * as in the text families.
+    * re-crawl guard's reference side.
     */
   def commitImageDhash(media: Dataset[MediaRecord], storeDir: String,
-      write: Boolean = false, leaseWaitMs: Long = 0L,
-      autoCompactAfter: Int = 0): Unit = {
+      write: Boolean = false): Unit = {
     val sig = imageDhashFrame(media)
     if (write) graft.ops.RefStore.writeHashSig(sig, storeDir, DhashLaw)
-    else graft.ops.RefStore.mergeHashSig(sig, storeDir, DhashLaw,
-      leaseWaitMs, autoCompactAfter)
+    else graft.ops.RefStore.mergeHashSig(sig, storeDir, DhashLaw)
   }
 
   /** Cross-corpus image near-dup dedup against the PERSISTED dHash store —

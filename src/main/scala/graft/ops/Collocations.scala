@@ -162,26 +162,6 @@ object Collocations {
           * 1000000000000.0).cast("long").as("lift_pico"))
   }
 
-  /** Naive replay of the whole law for property tests. */
-  private[ops] def pmiNaive(texts: Seq[String], minCount: Long)
-      : Map[(String, String), (Long, Long)] = {
-    val low = texts.map(t =>
-      if (t == null) null else t.toLowerCase(java.util.Locale.ROOT))
-    val bis = low.flatMap(LangModel.bigramsScala(_))
-    val unis = low.flatMap(TextFns.tokensScala)
-    if (bis.isEmpty) return Map.empty
-    val c12 = bis.groupBy(identity).map { case (kk, v) => (kk, v.size.toLong) }
-    val c = unis.groupBy(identity).map { case (kk, v) => (kk, v.size.toLong) }
-    val np = bis.size.toLong; val nu = unis.size.toLong
-    c12.filter(_._2 >= minCount).map { case ((a, b), n12) =>
-      val x = (((((math.log(n12.toDouble) + math.log(nu.toDouble))
-        + math.log(nu.toDouble)) - math.log(np.toDouble))
-        - math.log(c(a).toDouble)) - math.log(c(b).toDouble)) * 1000000.0
-      ((a, b), (n12, java.math.BigDecimal.valueOf(x)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()))
-    }
-  }
-
   /** DSIR-style cross-libm diagnostic over the actual scored pairs: the
     * minimum distance of any unquantized pmi·10⁶ from a HALF-AWAY
     * boundary. Callers pass the distinct (c12, c1, c2, np, nu) tuples.

@@ -82,11 +82,9 @@ object Dedup {
     * each stratum is charged only for its OWN redundancy (cross-source
     * dedup is [[exactAgainst]]'s job). NULL-text rows carry a NULL
     * fingerprint and are each their OWN unique keeper (never duplicates
-    * of each other) — the same "NULL fp ⇒ keeper" convention the
-    * attributed ingest loop applies
-    * ([[graft.streaming.StreamIngest.runAttributedDedupIngest]]); a
-    * grouped NULL key would instead collapse them into one phantom
-    * duplicate group and inflate `n_dup_docs`.
+    * of each other) — the same "NULL fp ⇒ keeper" convention as
+    * [[exactAgainst]]; a grouped NULL key would instead collapse them
+    * into one phantom duplicate group and inflate `n_dup_docs`.
     *
     * Scale shape: one tokenize+fingerprint pass, one hash aggregate to
     * (stratum, fingerprint) groups — map-side combined, shuffle carries
@@ -645,24 +643,13 @@ object Dedup {
 
   private def minhashAgainstSh(incoming: DataFrame, refSh: DataFrame,
       idCol: String, textCol: String, numHashes: Int, bands: Int,
-      shingleSize: Int, threshold: Double, maxBucket: Int): DataFrame =
-    minhashAgainstPre(incoming,
-      shingleHashFrame(incoming, idCol, textCol, shingleSize, numHashes),
-      refSh, idCol, numHashes, bands, threshold, maxBucket)
-
-  /** Core of the against-law with the incoming shingle/signature frame
-    * PRECOMPUTED — the seam that lets one pass feed both the in-batch
-    * pair search and the store screen in the streaming ingest guard.
-    */
-  private def minhashAgainstPre(incoming: DataFrame, shi0: DataFrame,
-      refSh: DataFrame, idCol: String, numHashes: Int, bands: Int,
-      threshold: Double, maxBucket: Int): DataFrame = {
+      shingleSize: Int, threshold: Double, maxBucket: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // NOT checkpointed (r19 optimization round) — same measured verdict
     // as minhashLshPairsSh: the 64-lane signature frame costs more to
     // materialize than its consumers' reuse saves, on either side
-    val shi = shi0
+    val shi = shingleHashFrame(incoming, idCol, textCol, shingleSize, numHashes)
     def banded(sh: DataFrame, as: String): DataFrame = {
       val b = sh.select(col("_id"), explode(
         array((0 until bands).map { i =>
@@ -691,42 +678,6 @@ object Dedup {
       .withColumn("_mhid", col(idCol).cast("long"))
       .join(flagged, col("_mhid") === col("_iid"), "left_anti")
       .drop("_mhid")
-  }
-
-  /** The streaming-ingest near-dup guard: collapse the batch's own
-    * near-dup clusters (banded pairs → connected components → smallest id
-    * survives) and screen the survivors against a persisted [[RefStore]]
-    * minhash artifact — both stages over ONE logical shingle/signature
-    * frame and, critically, ONE law: numHashes/shingleSize come from the
-    * store's meta, because hard-coding defaults here would silently apply
-    * two different dedup laws in one loop when the store was built
-    * non-default. Cost note, stated honestly: the components fixpoint is
-    * an eager sub-job, so the final action re-evaluates the batch's
-    * shingle pass (exchange reuse does not span actions) — that
-    * recomputation is MICRO-BATCH-sized; the store side, the corpus-scale
-    * half, is parquet and never recomputes. Returns the surviving rows of
-    * `batch`.
-    */
-  def nearDupSurvivorsAgainstStore(batch: DataFrame, storeDir: String,
-      idCol: String, textCol: String, bands: Int = 16,
-      threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
-    val (refSh, numHashes, shingleSize) =
-      RefStore.loadMinhash(batch.sparkSession, storeDir)
-    require(numHashes % bands == 0,
-      s"bands=$bands must divide the store's numHashes=$numHashes")
-    val shi = shingleHashFrame(batch, idCol, textCol, shingleSize, numHashes)
-    val pairs = minhashLshPairsSh(shi, numHashes, bands, threshold, maxBucket)
-    // cluster_id IS the smallest member id (the components law), so every
-    // other member is a within-batch near-dup loser
-    val losers = Clusters.dedupClusters(pairs)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as("_loser"))
-    val survivors = batch
-      .join(losers, col(idCol).cast("long") === col("_loser"), "left_anti")
-    val shiSurvivors = shi
-      .join(losers, col("_id") === col("_loser"), "left_anti")
-    minhashAgainstPre(survivors, shiSurvivors, refSh, idCol,
-      numHashes, bands, threshold, maxBucket)
   }
 
   /** The SimHash token-hash PROFILES (r11 verdict task 7): the signature

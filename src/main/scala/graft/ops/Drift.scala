@@ -116,47 +116,6 @@ object Drift {
         .as("tv_drift"))
   }
 
-  /** Per-micro-batch drift dashboard over a guarded-ingest SINK — the
-    * operational answer to "which batch did the crawler start feeding us
-    * junk": every `batch=<id>/` partition the continuous ingest loops
-    * commit ([[graft.streaming.StreamIngest.runDedupedIngest]] and
-    * siblings) is scored as its own stratum against the PERSISTED
-    * token-count baseline ([[RefStore.writeTokenCounts]] over the vetted
-    * corpus), and `alarm` flags batches at or past `alarmAt` TV.
-    *
-    * Read-only and replay-free by construction — it consumes committed
-    * data at rest (the describe/fsck posture), so it can run on any
-    * cadence, concurrently with the live stream, without touching the
-    * exactly-once ledger. Output: (batch, n_tokens, vocab_s, tv_drift,
-    * alarm), one row per committed batch with ≥1 token.
-    */
-  def ingestDriftReport(spark: org.apache.spark.sql.SparkSession,
-      sinkDir: String, storeDir: String, textCol: String,
-      alarmAt: Double = 0.5): DataFrame =
-    tvDriftStored(spark.read.parquet(sinkDir), "batch", textCol, storeDir)
-      .withColumn("alarm", col("tv_drift") >= alarmAt)
-
-  /** Naive single-machine replay of the TV law for property tests: the
-    * textbook ½·Σ over the FULL vocabulary union, straight doubles —
-    * independent of the engine's split-sum rearrangement.
-    */
-  private[ops] def tvNaive(docs: Seq[(String, String)]): Map[String, Double] = {
-    val toks = docs.flatMap { case (s, t) =>
-      TextFns.tokensScala(t).map(w => (s, w))
-    }
-    if (toks.isEmpty) return Map.empty
-    val n = toks.size.toDouble
-    val ctAll = toks.groupBy(_._2).map { case (w, xs) => (w, xs.size.toDouble) }
-    toks.groupBy(_._1).map { case (s, xs) =>
-      val nS = xs.size.toDouble
-      val cSt = xs.groupBy(_._2).map { case (w, ys) => (w, ys.size.toDouble) }
-      val tv = 0.5 * ctAll.keysIterator.map { w =>
-        math.abs(cSt.getOrElse(w, 0.0) / nS - ctAll(w) / n)
-      }.sum
-      (s, tv)
-    }
-  }
-
   /** Per-stratum entropy + KL divergence to the REST of the corpus — the
     * libm-bearing complement to [[tvDrift]] (whose scaladoc argues TV for
     * the no-libm screen; KL is still what mixture design reads when the

@@ -549,25 +549,9 @@ object Graph {
       maxApexDegree: Long): DataFrame =
     adamicAdarCore(g.canon, g.deg, k, maxApexDegree)
 
-  /** The UN-limited scored frame behind [[adamicAdar]] — every
-    * non-adjacent pair with its score, no top-k: the full-ranking form for
-    * callers that filter rather than take-k (or count how many pairs share
-    * the boundary score).
-    */
-  def adamicAdarScored(g: UndirectedWorkingSet,
-      maxApexDegree: Long): DataFrame =
-    adamicAdarScoredCore(g.canon, g.deg, maxApexDegree)
-
   private def adamicAdarCore(canon: DataFrame, deg: DataFrame, k: Int,
       maxApexDegree: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    adamicAdarScoredCore(canon, deg, maxApexDegree)
-      .orderBy(col("aa_pico").desc, col("u"), col("v"))
-      .limit(k)
-  }
-
-  private def adamicAdarScoredCore(canon: DataFrame, deg: DataFrame,
-      maxApexDegree: Long): DataFrame = {
     require(maxApexDegree >= 2L,
       s"maxApexDegree must be >= 2, got $maxApexDegree")
     val dir2 = canon.select(col("u").as("z"), col("v").as("n"))
@@ -592,6 +576,8 @@ object Graph {
         scored("_u") === canon("u") && scored("_v") === canon("v"), "left_anti")
       .select(col("_u").as("u"), col("_v").as("v"),
         col("common_neighbors"), col("aa_pico").cast("long").as("aa_pico"))
+      .orderBy(col("aa_pico").desc, col("u"), col("v"))
+      .limit(k)
   }
 
   /** Per-node local clustering coefficients, top-`k` (Watts & Strogatz,

@@ -113,35 +113,6 @@ object Keyphrase {
     out.result()
   }
 
-  /** Naive single-machine RAKE replay for property tests: direct maps over
-    * the full candidate list, double ratios quantized the same way.
-    */
-  private[ops] def rakeNaive(texts: Seq[String], stopwords: Seq[String],
-      maxWords: Int): Map[String, (Long, Long, Long)] = {
-    val stop = stopwords.toSet
-    val cands = texts.flatMap { t =>
-      phraseRuns(TextFns.tokensScala(
-        if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)),
-        stop, maxWords)
-    }
-    if (cands.isEmpty) return Map.empty
-    val freq = scala.collection.mutable.Map.empty[String, Long]
-    val deg = scala.collection.mutable.Map.empty[String, Long]
-    cands.foreach { ws =>
-      ws.foreach { w =>
-        freq(w) = freq.getOrElse(w, 0L) + 1L
-        deg(w) = deg.getOrElse(w, 0L) + ws.length
-      }
-    }
-    cands.groupBy(_.mkString(" ")).map { case (p, occ) =>
-      val ws = occ.head
-      val score = ws.map { w =>
-        math.round(deg(w).toDouble * 1000000.0 / freq(w).toDouble)
-      }.sum
-      (p, (ws.length.toLong, occ.size.toLong, score))
-    }
-  }
-
   /** TextRank keywords (Mihalcea & Tarau, EMNLP '04) — the GRAPH
     * keyword signal beside RAKE's degree/frequency one: words are nodes,
     * co-occurrence within a `window`-token span is an edge, and the

@@ -71,41 +71,6 @@ object LangModel {
       Seq(v).toDF("_v"))
   }
 
-  /** Prefilter-hook form of the stored scorer for the guarded ingest
-    * loops ([[graft.streaming.StreamIngest.runDedupedIngest]]'s
-    * `prefilter`): keep only rows whose stored-model avg_nll is at most
-    * `maxAvgNll` — the CCNet perplexity gate as a composable batch
-    * transform. Sub-2-token and NULL-text rows score 0 and PASS: the LM
-    * judges only text it can score; length/shape junk is the
-    * stats/Gopher gates' jurisdiction. Returns the surviving input rows
-    * with their full schema (left-semi join on the id).
-    */
-  def lmGate(storeDir: String, idCol: String, textCol: String,
-      maxAvgNll: Double): DataFrame => DataFrame = {
-    // the model is immutable between store commits, while foreachBatch
-    // calls the gate once per micro-batch — load ONCE on first use and
-    // cache the count frames, instead of re-scanning the artifact tree and
-    // re-counting the vocab (a blocking driver action) every batch. The
-    // model is therefore PINNED at first use: a store recommit mid-stream
-    // is picked up on stream restart, not mid-flight (the IVF fixed-cells
-    // posture). foreachBatch is sequential, so the memo needs no lock.
-    var model: Option[(DataFrame, DataFrame, Long)] = None
-    df => {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val (c2, c1, v) = model.getOrElse {
-        val m = RefStore.loadLmModel(spark, storeDir)
-        m._1.persist(); m._2.persist()
-        model = Some(m)
-        m
-      }
-      val keep = scoreWithModel(df, idCol, textCol, c2, c1, Seq(v).toDF("_v"))
-        .filter(col("avg_nll") <= maxAvgNll)
-        .select(col(idCol))
-      df.join(keep, Seq(idCol), "left_semi")
-    }
-  }
-
   /** One training batch's partial bigram counts (_w1, _w2, _c) — the
     * count-family commit unit ([[RefStore.mergeLmModel]]); partial counts
     * from different batches re-SUM to the whole-corpus model exactly.
@@ -172,30 +137,6 @@ object LangModel {
     val toks = TextFns.tokensScala(text)
     if (toks.length < 2) Iterator.empty
     else (0 until toks.length - 1).iterator.map(i => (toks(i), toks(i + 1)))
-  }
-
-  /** Naive replay of the whole law for property tests. */
-  private[ops] def nllNaive(docs: Seq[(Long, String)], train: Seq[String])
-      : Map[Long, (Long, Long, Double)] = {
-    val trainBi = train.flatMap(t =>
-      bigramsScala(if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)))
-    val c2 = trainBi.groupBy(identity).map { case (k, v) => (k, v.size.toLong) }
-    val c1 = trainBi.groupBy(_._1).map { case (k, v) => (k, v.size.toLong) }
-    val v = train.flatMap(t => TextFns.tokensScala(
-      if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)))
-      .distinct.size + 1L
-    docs.map { case (id, text) =>
-      val bis = bigramsScala(
-        if (text == null) null else text.toLowerCase(java.util.Locale.ROOT)).toSeq
-      val nll = bis.map { b =>
-        val x = (math.log(c1.getOrElse(b._1, 0L).toDouble + v.toDouble) -
-          math.log(c2.getOrElse(b, 0L).toDouble + 1.0)) * 1000000.0
-        java.math.BigDecimal.valueOf(x)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
-      }.sum
-      val avg = if (bis.isEmpty) 0.0 else nll.toDouble / 1000000.0 / bis.size.toDouble
-      (id, (bis.size.toLong, nll, avg))
-    }.toMap
   }
 
   /** DSIR-style cross-libm diagnostic: the minimum distance, in micro

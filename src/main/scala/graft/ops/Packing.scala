@@ -57,18 +57,6 @@ object Packing {
       .withColumnRenamed("_id", idCol)
   }
 
-  /** Range assignment from ascending id boundaries (plan-time literals; at
-    * 100 TB these come from equi-depth id quantiles).
-    */
-  def packGreedyByBoundaries(df: DataFrame, idCol: String, costCol: Column,
-      budget: Long, boundaries: Seq[Long]): DataFrame = {
-    require(boundaries == boundaries.sorted, "boundaries must be ascending")
-    val rangeId = boundaries.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col(idCol) >= b, 1).otherwise(0)
-    }
-    packGreedy(df, idCol, costCol, budget, rangeId, boundaries.size + 1)
-  }
-
   /** Length-bucketed batch assignment — dynamic-batching prep: group
     * similar-length documents so a batch pads to its own bucket's
     * ceiling instead of the corpus maximum (the standard

@@ -71,11 +71,8 @@ import graft.functions.TextFns
   */
 object RefStore {
 
-  /** Read a small protocol file (lease token, batch fingerprint) fully as
-    * trimmed UTF-8 — ONE definition for every lease/fp read so the
-    * protocols can never diverge on encoding or close handling.
-    */
-  private[graft] def readSmallText(f: org.apache.hadoop.fs.FileSystem,
+  /** Read a small protocol file (the lease token) fully as trimmed UTF-8. */
+  private def readSmallText(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): String = {
     val in = f.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
@@ -94,15 +91,8 @@ object RefStore {
   /** Run `body` holding the store's write lease: create `_LEASE`
     * fail-if-exists, release on completion (success OR failure — every
     * mutation is idempotent on retry, so a failed writer must not keep
-    * the store locked). A held lease means a LIVE writer is mid-mutation;
-    * with `leaseWaitMs = 0` (the default) the second writer throws
-    * instead of interleaving. A POSITIVE `leaseWaitMs` bounds a poll-wait
-    * on the held lease instead — the coexistence knob that lets a
-    * maintenance [[compact]] and a live ingest stream's micro-batch
-    * merges take turns on the same store (each delays behind the other's
-    * lease rather than killing it); the error only fires once the bound
-    * is exhausted, so a wedged CRASHED writer still surfaces as the same
-    * actionable breakLease message, just `leaseWaitMs` later. Entry also
+    * the store locked). A held lease means a LIVE writer is mid-mutation,
+    * so the second writer throws instead of interleaving. Entry also
     * completes any half-finished [[compact]] swap (see
     * [[recoverCompact]]) so mutations never touch a mid-swap artifact.
     *
@@ -114,20 +104,18 @@ object RefStore {
     * object stores without atomic create get best-effort exclusion —
     * pair them with an external scheduler that serializes writers.
     */
-  private def withLease[T](spark: SparkSession, dir: String,
-      leaseWaitMs: Long = 0L)(body: => T): T = {
+  private def withLease[T](spark: SparkSession, dir: String)(body: => T): T = {
     val f = fs(spark, dir)
     val base = new org.apache.hadoop.fs.Path(dir)
     f.mkdirs(base)
     val p = new org.apache.hadoop.fs.Path(base, LEASE)
     val token = java.lang.management.ManagementFactory.getRuntimeMXBean.getName +
       "/thread-" + Thread.currentThread().getId
-    def leaseHeldError(waitedMs: Long): Nothing = {
+    def leaseHeldError(): Nothing = {
       val holder = try readSmallText(f, p)
         catch { case _: java.io.IOException => "<unreadable>" }
-      val waited = if (waitedMs > 0) s" (waited ${waitedMs} ms)" else ""
       throw new IllegalStateException(
-        s"store $dir is write-leased by '$holder'$waited — RefStore mutations " +
+        s"store $dir is write-leased by '$holder' — RefStore mutations " +
           "are single-writer (a concurrent merge would race the bloom/meta " +
           "read-modify-write and lose updates silently); if that writer " +
           "crashed, clear it with RefStore.breakLease and retry — merges " +
@@ -165,20 +153,7 @@ object RefStore {
             }
         }
       }
-    val t0 = System.nanoTime()
-    var waited = false
-    var acquired = tryAcquire()
-    while (!acquired &&
-        (System.nanoTime() - t0) / 1000000L < leaseWaitMs) {
-      if (!waited) {
-        waited = true
-        System.err.println(s"[refstore] store $dir is write-leased; waiting " +
-          s"up to $leaseWaitMs ms for the holder to release")
-      }
-      Thread.sleep(math.min(200L, math.max(1L, leaseWaitMs / 10)))
-      acquired = tryAcquire()
-    }
-    if (!acquired) leaseHeldError((System.nanoTime() - t0) / 1000000L)
+    if (!tryAcquire()) leaseHeldError()
     var bodyOk = false
     try {
       allArtifacts.foreach { a =>
@@ -277,15 +252,11 @@ object RefStore {
   /** Commit one ingest batch into the artifact: OR the batch's bloom into
     * the stored one (same parameters from meta → bit-compatible), then
     * append the batch's distinct fingerprints. Bloom first — see the
-    * crash contract above. `leaseWaitMs` bounds a wait on a held lease
-    * (maintenance coexistence — see [[withLease]]); `autoCompactAfter`
-    * (0 = off) compacts the store inline once the fingerprint family
-    * accumulates that many commit units ([[maybeAutoCompact]]).
+    * crash contract above.
     */
-  def mergeExact(batch: DataFrame, textCol: String, dir: String,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+  def mergeExact(batch: DataFrame, textCol: String, dir: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       val meta = readMeta(spark, dir)
       val batchFp = fingerprintsOf(batch, textCol)
       val add = bloomOf(batchFp, meta("expectedItems").toLong, meta("fpp").toDouble)
@@ -295,7 +266,6 @@ object RefStore {
       // the documented crashed-commit retry fails forever on fs.open
       writeBloom(spark, dir, loadOrRebuildBloom(spark, dir, meta).mergeInPlace(add))
       batchFp.distinct().write.mode("append").parquet(path(dir, FINGERPRINTS))
-      maybeAutoCompact(spark, dir, autoCompactAfter, FINGERPRINTS)
     }
   }
 
@@ -350,18 +320,15 @@ object RefStore {
     }
   }
 
-  /** Append one batch's signatures (same law parameters, from meta).
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
-    */
+  /** Append one batch's signatures (same law parameters, from meta). */
   def mergeMinhash(batch: DataFrame, idCol: String, textCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      dir: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       val meta = readMeta(spark, dir)
       Dedup.shingleHashFrame(batch, idCol, textCol,
           meta("shingleSize").toInt, meta("numHashes").toInt)
         .write.mode("append").parquet(path(dir, SIGNATURES))
-      maybeAutoCompact(spark, dir, autoCompactAfter, SIGNATURES)
     }
   }
 
@@ -420,17 +387,15 @@ object RefStore {
 
   /** Append one batch's signatures (fails fast on a dir that never saw
     * [[writeSimhash]] — the commit-into-a-foreign-store guard).
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
     */
   def mergeSimhash(batch: DataFrame, idCol: String, textCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      dir: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).contains("simhashBits"),
         s"store $dir holds no simhash artifact — writeSimhash first")
       Dedup.simhashFrame(batch, idCol, textCol, simhashProfile(spark, dir))
         .write.mode("append").parquet(path(dir, SIMHASH))
-      maybeAutoCompact(spark, dir, autoCompactAfter, SIMHASH)
     }
   }
 
@@ -466,18 +431,14 @@ object RefStore {
     }
   }
 
-  /** Append one batch's signatures under the SAME law tag.
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
-    */
-  def mergeHashSig(sig: DataFrame, dir: String, law: String,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+  /** Append one batch's signatures under the SAME law tag. */
+  def mergeHashSig(sig: DataFrame, dir: String, law: String): Unit = {
     val spark = sig.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("sigLaw").contains(law),
         s"store $dir holds no '$law' signature artifact — writeHashSig first")
       sig.select(col("_id").cast("long"), col("_sh").cast("long"))
         .write.mode("append").parquet(path(dir, HASHSIG))
-      maybeAutoCompact(spark, dir, autoCompactAfter, HASHSIG)
     }
   }
 
@@ -516,17 +477,15 @@ object RefStore {
 
   /** Append one batch's qualifying chunk hashes (law parameters from
     * meta; fails fast on a dir that never saw [[writeCdcChunks]]).
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
     */
   def mergeCdcChunks(batch: DataFrame, idCol: String, textCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      dir: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       val minTokens = readMeta(spark, dir).getOrElse("cdcMinTokens",
         sys.error(s"store $dir holds no CDC chunk artifact — writeCdcChunks first")).toInt
       cdcHashFrame(batch, idCol, textCol, minTokens)
         .write.mode("append").parquet(path(dir, CDC_CHUNKS))
-      maybeAutoCompact(spark, dir, autoCompactAfter, CDC_CHUNKS)
     }
   }
 
@@ -582,21 +541,15 @@ object RefStore {
 
   /** Commit one training batch's counts under `batch=<batchId>/` (ids
     * unique per batch, stable across retries — the count-family retry
-    * contract) and append its vocabulary. `leaseWaitMs` /
-    * `autoCompactAfter` as in [[mergeExact]]; auto-compaction folds BOTH
-    * lm families (the vocab side is re-distinctable, the bigram side is
-    * safe because the threshold only fires on a healthy commit tail —
-    * see [[maybeAutoCompact]]'s batch-dir caveat before enabling it on a
-    * store whose earlier crashed commits may still be retried).
+    * contract) and append its vocabulary.
     */
   def mergeLmModel(batch: DataFrame, textCol: String, dir: String,
-      batchId: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      batchId: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("lmLaw").contains(LM_LAW),
         s"store $dir holds no bigram-LM artifact — writeLmModel first")
       lmCommitLocked(batch, textCol, dir, batchId)
-      maybeAutoCompact(spark, dir, autoCompactAfter, LM_BIGRAMS, LM_VOCAB)
     }
   }
 
@@ -660,18 +613,16 @@ object RefStore {
   }
 
   /** Commit one batch's token counts under `batch=<batchId>/` (unique per
-    * batch, stable across retries). `leaseWaitMs` / `autoCompactAfter` as
-    * in [[mergeExact]].
+    * batch, stable across retries).
     */
   def mergeTokenCounts(batch: DataFrame, textCol: String, dir: String,
-      batchId: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      batchId: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("driftLaw").contains(DRIFT_LAW),
         s"store $dir holds no token-count artifact — writeTokenCounts first")
       Drift.tokenCounts(batch, textCol)
         .write.mode("overwrite").parquet(batchPath(dir, TOKEN_COUNTS, batchId))
-      maybeAutoCompact(spark, dir, autoCompactAfter, TOKEN_COUNTS)
     }
   }
 
@@ -709,18 +660,16 @@ object RefStore {
   }
 
   /** Append one batch's edges (fails fast on a dir that never saw
-    * [[writeEdges]]). `leaseWaitMs` / `autoCompactAfter` as in
-    * [[mergeExact]] — safe to auto-compact (re-distinct family).
+    * [[writeEdges]]).
     */
   def mergeEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      dir: String): Unit = {
     val spark = edges.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("graphLaw").contains(GRAPH_LAW),
         s"store $dir holds no edge artifact — writeEdges first")
       edgeFrame(edges, srcCol, dstCol)
         .write.mode("append").parquet(path(dir, GRAPH_EDGES))
-      maybeAutoCompact(spark, dir, autoCompactAfter, GRAPH_EDGES)
     }
   }
 
@@ -772,18 +721,16 @@ object RefStore {
   }
 
   /** Append one batch's pairs (fails fast on a dir that never saw
-    * [[writeCanonicalMap]]). `leaseWaitMs` / `autoCompactAfter` as in
-    * [[mergeExact]] — safe to auto-compact (re-distinct family).
+    * [[writeCanonicalMap]]).
     */
   def mergeCanonicalMap(pairs: DataFrame, dupCol: String, canonCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      dir: String): Unit = {
     val spark = pairs.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("canonLaw").contains(CANON_LAW),
         s"store $dir holds no canonical-map artifact — writeCanonicalMap first")
       canonPairFrame(pairs, dupCol, canonCol)
         .write.mode("append").parquet(path(dir, CANONICAL_MAP))
-      maybeAutoCompact(spark, dir, autoCompactAfter, CANONICAL_MAP)
     }
   }
 
@@ -799,8 +746,7 @@ object RefStore {
     * owner) and remapping would point at a document that is in no sink.
     * Components with several roots (parallel owners of one fingerprint —
     * legal, both survived) take the smallest root; a component with NO
-    * root (a pair cycle, impossible under the ingest loops but legal
-    * parquet) falls back to its min member. `maxIter` bounds the
+    * root (a pair cycle, legal parquet) falls back to its min member. `maxIter` bounds the
     * pointer-jumping closure; it throws rather than returning a partial
     * map (the [[Clusters]] contract — a partial map would silently remap
     * onto a non-survivor).
@@ -811,10 +757,9 @@ object RefStore {
     * owners). The smallest root wins the map, so every LARGER root
     * appears on the dup side even though its document still physically
     * exists — a mapped id that is still present in a sink is a PENDING
-    * PHYSICAL MERGE, not a dangling reference. [[loadPendingMerges]]
-    * emits exactly those rows as the reconciliation worklist; until a
-    * pipeline deletes/merges them, consumers must treat such entries as
-    * "two live copies, canonical chosen" rather than "dup was dropped".
+    * PHYSICAL MERGE, not a dangling reference: until a pipeline
+    * deletes/merges them, consumers must treat such entries as "two live
+    * copies, canonical chosen" rather than "dup was dropped".
     */
   def loadCanonicalMap(spark: SparkSession, dir: String,
       maxIter: Int = 32): DataFrame = {
@@ -825,29 +770,6 @@ object RefStore {
       .withColumn("_canon", coalesce(col("_root"), col("component")))
       .filter(col("id") =!= col("_canon"))
       .select(col("id").as("dup_id"), col("_canon").as("canon_id"))
-  }
-
-  /** Reconciliation worklist for multi-root components (parallel owners
-    * of one content fingerprint — every root genuinely SURVIVED into a
-    * sink, but [[loadCanonicalMap]] can crown only one): one row per
-    * LOSING root, (canon_id, pending_id), meaning "pending_id's document
-    * is still physically present in the corpus/sinks; merge or delete it
-    * onto canon_id, or treat its map entry as pending until then".
-    * Empty under the ingest loops' normal operation (they register one
-    * owner per fingerprint); non-empty exactly when a retry window or
-    * out-of-order batch registered parallel owners. Same closure, same
-    * `maxIter` contract as [[loadCanonicalMap]].
-    */
-  def loadPendingMerges(spark: SparkSession, dir: String,
-      maxIter: Int = 32): DataFrame = {
-    val (_, rootsAll) = closedComponents(spark, dir, maxIter)
-    val perComp = rootsAll
-      .groupBy(col("component"))
-      .agg(min(col("id")).as("_canon"), count(lit(1)).as("_nroots"))
-      .filter(col("_nroots") > 1L)
-    rootsAll.join(perComp, Seq("component"))
-      .filter(col("id") =!= col("_canon"))
-      .select(col("_canon").as("canon_id"), col("id").as("pending_id"))
   }
 
   /** Shared closure of the pair union: (member components, ALL roots) —
@@ -876,91 +798,6 @@ object RefStore {
         col("dup_id") =!= col("canon_id"))
       .distinct()
 
-  // ---- fingerprint-owner artifact (dedup attribution registry) ----
-
-  private val FP_OWNER = "fp_owner"
-  private val OWNER_LAW = "fp-owner-v1"
-
-  /** Persist which document OWNS each content fingerprint — the
-    * attribution half of incremental exact dedup: the exact family's
-    * fingerprints answer "is this content already in the corpus?", this
-    * registry answers "WHICH document is it?", so a dropped duplicate can
-    * link to its absorber in the [[writeCanonicalMap]] family instead of
-    * vanishing without a trace. Append family (one (fp, owner_id) row per
-    * NEWLY-SEEN fingerprint per commit; replays re-append identical rows
-    * and every consumer re-distincts). Multiple owners for one
-    * fingerprint are LEGAL content (a retry window or an out-of-order
-    * batch may register two) — the canonical-map closure makes that
-    * harmless, because every duplicate links into the same component and
-    * the component minimum wins.
-    */
-  def writeFpOwners(owners: DataFrame, fpCol: String, ownerCol: String,
-      dir: String): Unit = {
-    val spark = owners.sparkSession
-    withLease(spark, dir) {
-      writeMeta(spark, dir, Map("version" -> "1", "ownerLaw" -> OWNER_LAW))
-      ownerFrame(owners, fpCol, ownerCol)
-        .write.mode("overwrite").parquet(path(dir, FP_OWNER))
-    }
-  }
-
-  /** Append one batch's newly-registered owners.
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
-    */
-  def mergeFpOwners(owners: DataFrame, fpCol: String, ownerCol: String,
-      dir: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
-    val spark = owners.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
-      require(readMeta(spark, dir).get("ownerLaw").contains(OWNER_LAW),
-        s"store $dir holds no fp-owner artifact — writeFpOwners first")
-      ownerFrame(owners, fpCol, ownerCol)
-        .write.mode("append").parquet(path(dir, FP_OWNER))
-      maybeAutoCompact(spark, dir, autoCompactAfter, FP_OWNER)
-    }
-  }
-
-  /** The distinct (fp, owner_id) registry. */
-  def loadFpOwners(spark: SparkSession, dir: String): DataFrame = {
-    require(readMeta(spark, dir).get("ownerLaw").contains(OWNER_LAW),
-      s"store $dir holds no fp-owner artifact")
-    artifactDf(spark, dir, FP_OWNER)
-      .select(col("fp"), col("owner_id")).distinct()
-  }
-
-  private def ownerFrame(owners: DataFrame, fpCol: String,
-      ownerCol: String): DataFrame =
-    owners.select(col(fpCol).cast("string").as("fp"),
-        col(ownerCol).cast("long").as("owner_id"))
-      .filter(col("fp").isNotNull && col("owner_id").isNotNull)
-      .distinct()
-
-  /** One-call bootstrap for the ATTRIBUTED dedup ingest loop
-    * ([[graft.streaming.StreamIngest.runAttributedDedupIngest]]): the
-    * three families it merges into (exact fingerprints + bloom, owner
-    * registry, canonical map), initialized from an optional starting
-    * corpus — or empty, the usual cold start. The starting corpus is
-    * assumed already deduped (run [[Dedup.exact]] first otherwise —
-    * internal duplicates would register parallel owners without
-    * canonical links). `expectedItems` sizes the bloom for the corpus
-    * the store will GROW to ([[writeExact]] note).
-    */
-  def initAttributedDedupStore(spark: SparkSession, dir: String,
-      idCol: String, textCol: String,
-      corpus: Option[DataFrame] = None,
-      expectedItems: Long = 1000000L, fpp: Double = 0.01): Unit = {
-    val start = corpus.getOrElse(
-      spark.range(0).selectExpr(s"id AS $idCol",
-        s"CAST(NULL AS STRING) AS $textCol"))
-    writeExact(start, textCol, dir, expectedItems, fpp)
-    writeFpOwners(
-      start.select(graft.functions.TextFns.fingerprintMd5(col(textCol)).as("fp"),
-        col(idCol).as("owner_id")),
-      "fp", "owner_id", dir)
-    writeCanonicalMap(
-      spark.range(0).selectExpr("id AS dup_id", "id AS canon_id"),
-      "dup_id", "canon_id", dir)
-  }
-
   // ---- value-count artifact (numeric drift baseline) ----
 
   private val VALUE_COUNTS = "value_counts"
@@ -981,18 +818,15 @@ object RefStore {
     }
   }
 
-  /** Commit one batch's value counts under `batch=<batchId>/`.
-    * `leaseWaitMs` / `autoCompactAfter` as in [[mergeExact]].
-    */
+  /** Commit one batch's value counts under `batch=<batchId>/`. */
   def mergeValueCounts(batch: DataFrame, valueCol: String, dir: String,
-      batchId: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      batchId: String): Unit = {
     val spark = batch.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
       require(readMeta(spark, dir).get("valuesLaw").contains(VALUES_LAW),
         s"store $dir holds no value-count artifact — writeValueCounts first")
       Drift.valueCounts(batch, valueCol)
         .write.mode("overwrite").parquet(batchPath(dir, VALUE_COUNTS, batchId))
-      maybeAutoCompact(spark, dir, autoCompactAfter, VALUE_COUNTS)
     }
   }
 
@@ -1025,18 +859,13 @@ object RefStore {
 
   /** Commit one batch's partial accumulators under `batch=<batchId>/`
     * (same cluster-id space — the caller's assignment contract; batch ids
-    * must be unique per batch and stable across retries). `leaseWaitMs` /
-    * `autoCompactAfter` as in [[mergeExact]] — but note the batch-dir
-    * retry caveat on [[maybeAutoCompact]]: enable auto-compaction here
-    * only when no crashed pre-compact commit can still be retried.
+    * must be unique per batch and stable across retries).
     */
-  def mergeCentroids(sums: DataFrame, dir: String, batchId: String,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    withLease(sums.sparkSession, dir, leaseWaitMs) {
+  def mergeCentroids(sums: DataFrame, dir: String, batchId: String): Unit =
+    withLease(sums.sparkSession, dir) {
       sums.select(col("cluster_id"), col("dim"), col("sum_micro"), col("n_members"))
         .write.mode("overwrite")
         .parquet(batchPath(dir, CENTROIDS, batchId))
-      maybeAutoCompact(sums.sparkSession, dir, autoCompactAfter, CENTROIDS)
     }
 
   /** The re-aggregated exact accumulator frame — bit-identical to running
@@ -1098,12 +927,11 @@ object RefStore {
     * batches (the ingest key contract); batch ids stable across retries.
     */
   def mergeIvf(batch: DataFrame, idCol: String, vecCol: String, dir: String,
-      batchId: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    withLease(batch.sparkSession, dir, leaseWaitMs) {
+      batchId: String): Unit =
+    withLease(batch.sparkSession, dir) {
       val (centroids, _) = loadIvf(batch.sparkSession, dir)
       Similarity.assignIvfCells(batch, idCol, vecCol, centroids)
         .write.mode("overwrite").parquet(batchPath(dir, IVF_ASSIGNED, batchId))
-      maybeAutoCompact(batch.sparkSession, dir, autoCompactAfter, IVF_ASSIGNED)
     }
 
   /** (centroids, assigned-corpus frame) — [[Similarity.ivfTopKStored]]'s
@@ -1157,12 +985,11 @@ object RefStore {
     * under `batch=<batchId>/` (idempotent on retry — see [[mergeIvf]]).
     */
   def mergePq(batch: DataFrame, idCol: String, vecCol: String, dir: String,
-      batchId: String, leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    withLease(batch.sparkSession, dir, leaseWaitMs) {
+      batchId: String): Unit =
+    withLease(batch.sparkSession, dir) {
       val (books, _) = loadPq(batch.sparkSession, dir)
       Similarity.pqEncodeFrame(batch, idCol, vecCol, books)
         .write.mode("overwrite").parquet(batchPath(dir, PQ_ENCODED, batchId))
-      maybeAutoCompact(batch.sparkSession, dir, autoCompactAfter, PQ_ENCODED)
     }
 
   /** (codebooks, encoded-corpus frame) — [[Similarity.pqTopKStored]]'s
@@ -1206,15 +1033,12 @@ object RefStore {
     * unique across batches, so per-batch tf IS corpus tf per document).
     */
   def mergeSearchIndex(batch: DataFrame, idCol: String, textCol: String,
-      dir: String, batchId: String, leaseWaitMs: Long = 0L,
-      autoCompactAfter: Int = 0): Unit =
-    commitSearchBatch(batch, idCol, textCol, dir, batchId, leaseWaitMs,
-      autoCompactAfter)
+      dir: String, batchId: String): Unit =
+    commitSearchBatch(batch, idCol, textCol, dir, batchId)
 
   private def commitSearchBatch(df: DataFrame, idCol: String, textCol: String,
-      dir: String, batchId: String, leaseWaitMs: Long = 0L,
-      autoCompactAfter: Int = 0): Unit =
-      withLease(df.sparkSession, dir, leaseWaitMs) {
+      dir: String, batchId: String): Unit =
+      withLease(df.sparkSession, dir) {
     // fail loudly on an uninitialized / wrong-family dir BEFORE writing
     // anything — a silent commit into a foreign store would corrupt its
     // corpus scalars (the mergeExact/mergeMinhash posture)
@@ -1229,7 +1053,6 @@ object RefStore {
     df.select(col(idCol).as("doc_id"),
         TextFns.tokenCount(col(textCol)).as("len"))
       .write.mode("overwrite").parquet(batchPath(dir, LENGTHS, batchId))
-    maybeAutoCompact(df.sparkSession, dir, autoCompactAfter, POSTINGS, LENGTHS)
   }
 
   /** (postings, lengths) frames of the whole committed index. */
@@ -1268,16 +1091,13 @@ object RefStore {
     * source-corpus growth batch passes an empty target frame).
     */
   def mergeDsirCounts(target: DataFrame, source: DataFrame, textCol: String,
-      dir: String, batchId: String, leaseWaitMs: Long = 0L,
-      autoCompactAfter: Int = 0): Unit =
-    commitDsirBatch(target, source, textCol, dir, batchId, leaseWaitMs,
-      autoCompactAfter)
+      dir: String, batchId: String): Unit =
+    commitDsirBatch(target, source, textCol, dir, batchId)
 
   private def commitDsirBatch(target: DataFrame, source: DataFrame,
-      textCol: String, dir: String, batchId: String,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
+      textCol: String, dir: String, batchId: String): Unit = {
     val spark = target.sparkSession
-    withLease(spark, dir, leaseWaitMs) {
+    withLease(spark, dir) {
     val meta = readMeta(spark, dir)
     val buckets = meta("dsirBuckets").toInt
     val ngrams = meta("dsirNgrams").split(",").map(_.toInt).toSeq
@@ -1286,7 +1106,6 @@ object RefStore {
         .select(lit(tag).as("side"), col("_b").as("bucket"), col("_n").as("n"))
     side(target, "t").unionByName(side(source, "s"))
       .write.mode("overwrite").parquet(batchPath(dir, DSIR_COUNTS, batchId))
-    maybeAutoCompact(spark, dir, autoCompactAfter, DSIR_COUNTS)
     }
   }
 
@@ -1353,39 +1172,17 @@ object RefStore {
     * with a merge, and never while a crashed pre-compact batch commit
     * might still be retried (the retry would re-add folded rows).
     */
-  def compact(spark: SparkSession, dir: String, numFiles: Int = 8,
-      leaseWaitMs: Long = 0L): Unit = {
+  def compact(spark: SparkSession, dir: String, numFiles: Int = 8): Unit = {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    withLease(spark, dir, leaseWaitMs) { compactLocked(spark, dir, numFiles) }
-  }
-
-  /** The body of [[compact]], assuming the caller ALREADY holds the write
-    * lease — shared between the standalone entry point and the
-    * merge-triggered auto-compaction path (which must not re-enter
-    * [[withLease]]: the lease file is not reentrant, so a second acquire
-    * from the same writer would see its own lease as a foreign holder).
-    *
-    * `only` restricts the sweep to ONE family: the auto-compaction path
-    * compacts exactly the family it just merged, because a shared store
-    * dir may also hold `batch=<id>/` commit families whose crashed
-    * pre-compact batches could still be retried — a whole-store compact
-    * triggered by a fingerprint merge would fold those and let the retry
-    * double-count (the [[compact]] scaladoc's retry caveat). The manual
-    * entry point keeps the whole-store sweep (`only = None`): running it
-    * is the operator's explicit assertion that no retry is in flight.
-    */
-  private def compactLocked(spark: SparkSession, dir: String, numFiles: Int,
-      only: Option[String] = None): Unit = {
-    {
+    withLease(spark, dir) {
       val f = fs(spark, dir)
-      def want(name: String): Boolean = only.forall(_ == name)
       // centroid-only stores carry no meta.properties (no law parameters);
       // the meta-gated families just don't fire there
       val meta = if (exists(spark, dir, META)) readMeta(spark, dir)
         else Map.empty[String, String]
       def has(name: String): Boolean =
         f.exists(new org.apache.hadoop.fs.Path(dir, name))
-      if (want(FINGERPRINTS) && has(FINGERPRINTS)) {
+      if (has(FINGERPRINTS)) {
         val fp = spark.read.parquet(path(dir, FINGERPRINTS))
           .select(col("_rh")).distinct()
         val n = fp.count()
@@ -1399,52 +1196,52 @@ object RefStore {
           ()
         }
       }
-      if (want(SIGNATURES) && has(SIGNATURES)) {
+      if (has(SIGNATURES)) {
         val sig = spark.read.parquet(path(dir, SIGNATURES)).distinct()
         swapArtifact(spark, dir, SIGNATURES)(tmp =>
           sig.repartition(numFiles, col("_id"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(SIMHASH) && has(SIMHASH)) {
+      if (has(SIMHASH)) {
         val sig = spark.read.parquet(path(dir, SIMHASH)).distinct()
         swapArtifact(spark, dir, SIMHASH)(tmp =>
           sig.repartition(numFiles, col("_id"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(HASHSIG) && has(HASHSIG)) {
+      if (has(HASHSIG)) {
         val sig = spark.read.parquet(path(dir, HASHSIG)).distinct()
         swapArtifact(spark, dir, HASHSIG)(tmp =>
           sig.repartition(numFiles, col("_id"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(CDC_CHUNKS) && has(CDC_CHUNKS)) {
+      if (has(CDC_CHUNKS)) {
         val ch = spark.read.parquet(path(dir, CDC_CHUNKS))
           .select(col("chunk_hash")).distinct()
         swapArtifact(spark, dir, CDC_CHUNKS)(tmp =>
           ch.repartition(numFiles, col("chunk_hash"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(CENTROIDS) && has(CENTROIDS)) {
+      if (has(CENTROIDS)) {
         val sums = loadCentroidSums(spark, dir)
         swapArtifact(spark, dir, CENTROIDS)(tmp =>
           sums.coalesce(1).write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(IVF_ASSIGNED) && meta.contains("ivfNlist") && has(IVF_ASSIGNED)) {
+      if (meta.contains("ivfNlist") && has(IVF_ASSIGNED)) {
         val assigned = spark.read.parquet(path(dir, IVF_ASSIGNED)).drop("batch")
         swapArtifact(spark, dir, IVF_ASSIGNED)(tmp =>
           assigned.repartition(numFiles, col("cell")).sortWithinPartitions("cell")
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(PQ_ENCODED) && meta.contains("pqM") && has(PQ_ENCODED)) {
+      if (meta.contains("pqM") && has(PQ_ENCODED)) {
         val enc = spark.read.parquet(path(dir, PQ_ENCODED)).drop("batch")
         swapArtifact(spark, dir, PQ_ENCODED)(tmp =>
           enc.repartition(numFiles)
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(POSTINGS) && meta.contains("searchIndex") && has(POSTINGS)) {
+      if (meta.contains("searchIndex") && has(POSTINGS)) {
         val p = spark.read.parquet(path(dir, POSTINGS))
           .select(col("doc_id"), col("token"), col("tf"))
         swapArtifact(spark, dir, POSTINGS)(tmp =>
@@ -1453,7 +1250,7 @@ object RefStore {
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(LENGTHS) && meta.contains("searchIndex") && has(LENGTHS)) {
+      if (meta.contains("searchIndex") && has(LENGTHS)) {
         val l = spark.read.parquet(path(dir, LENGTHS))
           .select(col("doc_id"), col("len"))
         swapArtifact(spark, dir, LENGTHS)(tmp =>
@@ -1461,7 +1258,7 @@ object RefStore {
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(LM_BIGRAMS) && meta.contains("lmLaw") && has(LM_BIGRAMS)) {
+      if (meta.contains("lmLaw") && has(LM_BIGRAMS)) {
         val c = spark.read.parquet(path(dir, LM_BIGRAMS)).drop("batch")
           .groupBy(col("_w1"), col("_w2")).agg(sum(col("_c")).as("_c"))
         swapArtifact(spark, dir, LM_BIGRAMS)(tmp =>
@@ -1469,35 +1266,28 @@ object RefStore {
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(LM_VOCAB) && has(LM_VOCAB)) {
+      if (has(LM_VOCAB)) {
         val vv = spark.read.parquet(path(dir, LM_VOCAB))
           .select(col("_tk")).distinct()
         swapArtifact(spark, dir, LM_VOCAB)(tmp =>
           vv.repartition(numFiles, col("_tk"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(GRAPH_EDGES) && meta.contains("graphLaw") && has(GRAPH_EDGES)) {
+      if (meta.contains("graphLaw") && has(GRAPH_EDGES)) {
         val ed = spark.read.parquet(path(dir, GRAPH_EDGES))
           .select(col("src"), col("dst")).distinct()
         swapArtifact(spark, dir, GRAPH_EDGES)(tmp =>
           ed.repartition(numFiles, col("src"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(FP_OWNER) && meta.contains("ownerLaw") && has(FP_OWNER)) {
-        val ow = spark.read.parquet(path(dir, FP_OWNER))
-          .select(col("fp"), col("owner_id")).distinct()
-        swapArtifact(spark, dir, FP_OWNER)(tmp =>
-          ow.repartition(numFiles, col("fp"))
-            .write.mode("overwrite").parquet(tmp))
-      }
-      if (want(CANONICAL_MAP) && meta.contains("canonLaw") && has(CANONICAL_MAP)) {
+      if (meta.contains("canonLaw") && has(CANONICAL_MAP)) {
         val cp = spark.read.parquet(path(dir, CANONICAL_MAP))
           .select(col("dup_id"), col("canon_id")).distinct()
         swapArtifact(spark, dir, CANONICAL_MAP)(tmp =>
           cp.repartition(numFiles, col("dup_id"))
             .write.mode("overwrite").parquet(tmp))
       }
-      if (want(VALUE_COUNTS) && meta.contains("valuesLaw") && has(VALUE_COUNTS)) {
+      if (meta.contains("valuesLaw") && has(VALUE_COUNTS)) {
         val c = spark.read.parquet(path(dir, VALUE_COUNTS)).drop("batch")
           .groupBy(col("_v")).agg(sum(col("_c")).as("_c"))
         swapArtifact(spark, dir, VALUE_COUNTS)(tmp =>
@@ -1505,7 +1295,7 @@ object RefStore {
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(TOKEN_COUNTS) && meta.contains("driftLaw") && has(TOKEN_COUNTS)) {
+      if (meta.contains("driftLaw") && has(TOKEN_COUNTS)) {
         val c = spark.read.parquet(path(dir, TOKEN_COUNTS)).drop("batch")
           .groupBy(col("_t")).agg(sum(col("_c")).as("_c"))
         swapArtifact(spark, dir, TOKEN_COUNTS)(tmp =>
@@ -1513,7 +1303,7 @@ object RefStore {
             .write.mode("overwrite")
             .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=compacted").toString))
       }
-      if (want(DSIR_COUNTS) && meta.contains("dsirBuckets") && has(DSIR_COUNTS)) {
+      if (meta.contains("dsirBuckets") && has(DSIR_COUNTS)) {
         val c = spark.read.parquet(path(dir, DSIR_COUNTS))
           .groupBy(col("side"), col("bucket"))
           .agg(sum(col("n")).as("n"))
@@ -1530,142 +1320,9 @@ object RefStore {
   private val allArtifacts = Seq(FINGERPRINTS, SIGNATURES, SIMHASH, HASHSIG,
     CDC_CHUNKS, LM_BIGRAMS, LM_VOCAB, TOKEN_COUNTS, CENTROIDS, IVF_CENTROIDS,
     IVF_ASSIGNED, PQ_BOOKS, PQ_ENCODED, POSTINGS, LENGTHS, DSIR_COUNTS,
-    GRAPH_EDGES, VALUE_COUNTS, CANONICAL_MAP, FP_OWNER)
+    GRAPH_EDGES, VALUE_COUNTS, CANONICAL_MAP)
 
-  /** Commit units a family has accumulated since its last compaction: the
-    * `batch=<id>/` subdir count for the per-batch commit families, else
-    * the parquet data-file count for the plain-append families — both are
-    * exactly what [[compact]] folds back down, so this is the number an
-    * auto-compaction threshold compares against.
-    */
-  private def commitUnits(f: org.apache.hadoop.fs.FileSystem, dir: String,
-      artifact: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(dir, artifact)
-    if (!f.exists(root)) 0L
-    else {
-      val top = f.listStatus(root)
-      val batchDirs = top.count(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch="))
-      if (batchDirs > 0) batchDirs.toLong
-      else top.count(s =>
-        s.isFile && s.getPath.getName.startsWith("part-")).toLong
-    }
-  }
-
-  /** Merge-triggered auto-compaction — the unattended form of the
-    * [[compact]] cadence: called at the tail of a merge, UNDER the
-    * merge's already-held lease, with the merged family name(s). When
-    * the FIRST listed family's commit units reach `threshold` (0 =
-    * disabled), exactly the listed families compact inline — the next
-    * micro-batch pays one maintenance pass instead of an operator
-    * remembering a cron job, and the lease already held means no
-    * coexistence hazard beyond a longer batch. The sweep NEVER widens
-    * past the merged families: a shared store dir may hold OTHER
-    * `batch=<id>/` commit families whose crashed pre-compact batches
-    * could still be retried, and folding those from an unrelated merge
-    * would let the retry double-count ([[compact]]'s retry caveat).
-    *
-    * The same caveat applies to a batch-dir family compacting ITSELF:
-    * its own crashed earlier commits must not be retryable post-compact.
-    * The re-distinct families (fingerprints, minhash / simhash
-    * signatures, cdc chunk hashes) are immune — replay re-appends are
-    * re-distincted by every consumer — which is why the streaming ingest
-    * loops enable this only on those paths.
-    */
-  private def maybeAutoCompact(spark: SparkSession, dir: String,
-      threshold: Int, artifacts: String*): Unit =
-    if (threshold > 0) {
-      val units = commitUnits(fs(spark, dir), dir, artifacts.head)
-      if (units >= threshold) {
-        System.err.println(s"[refstore] store $dir family ${artifacts.head} " +
-          s"reached $units commit units (threshold $threshold) — " +
-          s"auto-compacting ${artifacts.mkString("+")} inline")
-        artifacts.foreach(a => compactLocked(spark, dir, numFiles = 8, Some(a)))
-      }
-    }
-
-  /** Read-only store introspection — the operability dashboard row set a
-    * maintenance job keys compaction cadence off (is the file count
-    * creeping? is a lease stuck? did a compact swap get interrupted?).
-    * One row per store item:
-    *
-    *   - `kind=artifact`: a parquet family — file count, total bytes,
-    *     `detail` = `batches=<n>` for the `batch=<id>/` commit families
-    *     (a growing batch count is the compact trigger);
-    *   - `kind=cache`: `bloom.bin`;
-    *   - `kind=meta`: one row per law parameter (`item` = `meta:<key>`,
-    *     `detail` = value);
-    *   - `kind=lease`: present iff `_LEASE` exists — a live writer, or a
-    *     crashed one awaiting [[breakLease]];
-    *   - `kind=pending-swap`: a marked-complete `.name.compact` dir whose
-    *     promotion was interrupted — the next load/mutation finishes it.
-    *
-    * Deliberately NEVER mutates (no [[recoverCompact]], no lease): safe
-    * to run concurrently with a writer, so results are a snapshot that a
-    * racing merge may outdate. Driver-side file listing only — never a
-    * Spark job, never a row scan.
-    */
-  def describe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val f = fs(spark, dir)
-    def p(name: String) = new org.apache.hadoop.fs.Path(dir, name)
-    def walk(root: org.apache.hadoop.fs.Path): (Long, Long) = {
-      var files = 0L; var bytes = 0L
-      val it = f.listFiles(root, true)
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile) { files += 1; bytes += s.getLen }
-      }
-      (files, bytes)
-    }
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long, String)]
-    // the exists-then-list sequence can race a live compactor's
-    // delete→rename window (the price of being lock-free, fsck's checked()
-    // posture): a listing that loses the race emits a kind=race row for
-    // that item instead of aborting the whole dashboard
-    def raced(item: String)(body: => Unit): Unit =
-      try body catch {
-        case e: java.io.IOException =>
-          rows += ((item, "race", 0L, 0L,
-            s"listing raced a concurrent writer (${e.getClass.getSimpleName}) - re-run describe"))
-      }
-    allArtifacts.foreach { a =>
-      raced(a) {
-        if (f.exists(p(a))) {
-          val (nf, b) = walk(p(a))
-          val batches = f.listStatus(p(a))
-            .count(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          val detail = if (batches > 0) s"batches=$batches" else ""
-          rows += ((a, "artifact", nf, b, detail))
-        }
-      }
-      raced(s".$a.compact") {
-        val tmp = new org.apache.hadoop.fs.Path(dir, s".$a.compact")
-        if (f.exists(new org.apache.hadoop.fs.Path(tmp, COMPACT_DONE))) {
-          val (nf, b) = walk(tmp)
-          rows += ((s".$a.compact", "pending-swap", nf, b, ""))
-        }
-      }
-    }
-    raced(BLOOM) {
-      if (f.exists(p(BLOOM)))
-        rows += ((BLOOM, "cache", 1L, f.getFileStatus(p(BLOOM)).getLen, ""))
-    }
-    raced(META) {
-      if (f.exists(p(META)))
-        readMeta(spark, dir).toSeq.sortBy(_._1).foreach { case (k, v) =>
-          rows += ((s"meta:$k", "meta", 1L, 0L, v))
-        }
-    }
-    raced(LEASE) {
-      if (f.exists(p(LEASE)))
-        rows += ((LEASE, "lease", 1L, 0L, "held"))
-    }
-    rows.toSeq.toDF("item", "kind", "n_files", "bytes", "detail")
-  }
-
-  /** Store integrity check — the fsck to [[describe]]'s df: re-verify
-    * every family-law invariant the guards RELY on but never re-check on
+  /** Store integrity check: re-verify every family-law invariant the guards RELY on but never re-check on
     * the hot path. One row per executed check; `ok=false` rows mean the
     * store violates its own contract (a hand-edited artifact, a foreign
     * parquet dropped into the dir, a partial copy) and the affected
@@ -1684,8 +1341,7 @@ object RefStore {
     *   - dsir: sides ⊆ {t, s}; buckets within meta's modulus; counts ≥ 0.
     *   - all `batch=<id>/` commit dirs carry parquet's `_SUCCESS` marker.
     *
-    * Read-only (same posture as [[describe]] — families mid-swap are
-    * skipped rather than recovered); aggregate jobs over the store's own
+    * Read-only (families mid-swap are skipped rather than recovered); aggregate jobs over the store's own
     * artifacts — maintenance cost, run on the compaction cadence.
     */
   def fsck(spark: SparkSession, dir: String): DataFrame = {
@@ -1695,8 +1351,7 @@ object RefStore {
       f.exists(new org.apache.hadoop.fs.Path(dir, name))
     // NOT artifactDf: that would recoverCompact (a rename) — fsck must
     // stay genuinely read-only so it can run beside a live compactor.
-    // A family mid-swap has no live dir and its checks simply skip
-    // (describe surfaces the pending-swap row).
+    // A family mid-swap has no live dir and its checks simply skip.
     def ro(name: String): DataFrame = spark.read.parquet(path(dir, name))
     val meta = if (exists(spark, dir, META)) readMeta(spark, dir)
       else Map.empty[String, String]
@@ -1782,12 +1437,6 @@ object RefStore {
       val bad = ro(GRAPH_EDGES)
         .filter(col("src").isNull || col("dst").isNull).count()
       (meta.get("graphLaw").nonEmpty && bad == 0L, s"bad=$bad")
-    }
-    if (has(FP_OWNER)) checked("owner", "registry_non_null_md5_fp") {
-      val bad = ro(FP_OWNER)
-        .filter(col("fp").isNull || col("owner_id").isNull ||
-          !col("fp").rlike("^[0-9a-f]{32}$")).count()
-      (meta.get("ownerLaw").nonEmpty && bad == 0L, s"bad=$bad")
     }
     if (has(CANONICAL_MAP)) checked("canon", "pairs_non_null_no_selfmap") {
       val bad = ro(CANONICAL_MAP)

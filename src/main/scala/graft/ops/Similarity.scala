@@ -133,26 +133,6 @@ object Similarity {
     if ((d(0) & 0x80) == 0) 1.0 else -1.0
   }
 
-  /** Hyperplane as a literal vector — planes are plan-time constants, so the
-    * per-row work is a plain fold (no per-element hashing inside the lambda,
-    * which would run planes×dim interpreted hash calls per row).
-    */
-  private def planeLit(plane: Int, dim: Int): Column =
-    typedLit((0 until dim).map(planeComponent(plane, _)))
-
-  /** LSH bucket id: `planes` sign bits of hyperplane projections. `dim` must
-    * match the embedding length (hyperplanes are plan-time literals);
-    * `planeOffset` selects a disjoint slice of the plane index space so
-    * independent tables use independent hyperplanes.
-    */
-  def lshBucket(vec: Column, planes: Int, dim: Int, planeOffset: Int = 0): Column = {
-    val proj = (0 until planes).map { p =>
-      val s = dot(vec, planeLit(planeOffset + p, dim))
-      when(s >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    proj.reduce(_ + _)
-  }
-
   /** Explode a frame into one row per (table, bucket) signature — per-table
     * planes use disjoint slices of the plane index space. Object-boundary
     * Scala (not expression folds): planes×tables interpreted HOF folds per

@@ -11,8 +11,7 @@ import graft.model.TransferSchema._
   * (SQLiteDirectImporter.java:306, 711-729): the whole old row is replaced;
   * the winner is the physically last arrival — compared via
   * [[graft.model.TransferSchema.arrivalOrderDesc]] (epoch, then the
-  * (file, sheet, row) triple or an input-supplied `_arrival_seq`), never a
-  * materialized global sequence.
+  * (file, sheet, row) triple), never a materialized global sequence.
   *
   * Physical shape at scale: the input is read once; one hash-partition
   * shuffle on the key, then a per-partition sort for `row_number` — Spark's

@@ -18,16 +18,18 @@ import graft.ops.Upsert
   * buckets the incoming batch hashes into — dynamic partition overwrite
   * replaces just those directories and leaves every other bucket's files
   * untouched (byte-identical). Cost per batch is O(batch + dirty-bucket
-  * state), not O(total state): the property a 100 TB keyed table needs from
-  * its drop-folder cadence.
+  * state), not O(total state).
   *
   * Cross-batch ordering: each merge stamps the batch with a strictly
   * increasing `_epoch` (persisted in a `_graft_meta` sidecar; underscore
   * files are invisible to Spark's file index). Within the upsert, epoch
   * dominates the arrival order (TransferSchema.arrivalOrderAsc), so a
-  * re-shipped key whose per-batch sequence restarted still loses to nothing
-  * and beats every earlier epoch — the reference's wall-clock insert order
-  * across runs.
+  * re-shipped key whose per-batch row indices restarted still beats every
+  * earlier epoch — the reference's wall-clock insert order across runs.
+  *
+  * A batch merges only into a state of its own columns: a state whose
+  * columns differ (say, one written by an older pipeline) is refused before
+  * anything is written, never null-filled.
   *
   * Visibility: partition overwrite commits per-bucket, so a concurrent
   * reader can observe some buckets new and some old mid-merge (the previous
@@ -42,6 +44,8 @@ object MergeSink {
 
   /** Merge `resolved` (post-pipeline rows carrying arrival-order metadata)
     * into the keyed state at `statePath`. Returns the new state row count.
+    * Throws `IllegalStateException` when the state's columns are not the
+    * batch's.
     */
   def merge(spark: SparkSession, resolved: DataFrame, statePath: String,
       numBuckets: Int = 64): Long = {
@@ -57,6 +61,16 @@ object MergeSink {
         fs.listStatus(state).exists(_.getPath.getName.startsWith("part-")))
       throw new IllegalStateException(s"$statePath holds part- files but no " +
         s"_graft_meta sidecar and no $bucketColName= directory: not a merge state")
+    val current = if (exists) Some(spark.read.parquet(statePath)) else None
+    current.foreach { st =>
+      val batchCols = resolved.columns.toSet + epochCol + bucketColName
+      val stateOnly = st.columns.toSet -- batchCols
+      val batchOnly = batchCols -- st.columns
+      if (stateOnly.nonEmpty || batchOnly.nonEmpty)
+        throw new IllegalStateException(s"$statePath: the state's columns " +
+          s"differ from the batch's (state only: ${stateOnly.toSeq.sorted.mkString(", ")}; " +
+          s"batch only: ${batchOnly.toSeq.sorted.mkString(", ")})")
+    }
     val (epoch, prevTotal) = readMeta(fs, state, spark, statePath, exists)
     // RESERVE the new epoch before touching data: if the data write crashes
     // mid-way, the next (different) batch gets a strictly later epoch and
@@ -84,25 +98,21 @@ object MergeSink {
       Upsert(in).observe(writtenObs, count(lit(1)).as("n"))
         .write.mode("overwrite").partitionBy(bucketColName)
     def written = writtenObs.get("n").asInstanceOf[Long]
-    val merged =
-      if (exists) {
+    val merged = current match {
+      case Some(st) =>
         // partition pruning: only the dirty buckets' files are read
         val readObs = Observation()
-        val dirtyState = spark.read.parquet(statePath)
+        val dirtyState = st
           .filter(col(bucketColName).isin(dirty: _*))
           .observe(readObs, count(lit(1)).as("n"))
-        // allowMissingColumns: a batch that carries _arrival_seq meets a
-        // state written by batches that don't (and vice versa). Safe:
-        // _epoch dominates arrivalOrderAsc, so a null _arrival_seq never
-        // decides a winner across epochs.
-        upsert(dirtyState.unionByName(batch, allowMissingColumns = true))
+        upsert(dirtyState.unionByName(batch))
           .option("partitionOverwriteMode", "dynamic")
           .parquet(statePath)
         prevTotal - readObs.get("n").asInstanceOf[Long] + written
-      } else {
+      case None =>
         upsert(batch).parquet(statePath)
         written
-      }
+    }
     writeMeta(fs, state, epoch + 1, merged)
     merged
   }

@@ -14,9 +14,9 @@ import graft.model.TransferSchema
   *     `readStream` file source + `Trigger.AvailableNow` +
   *     `cleanSource=archive`, with the batch pipeline running unchanged in
   *     `foreachBatch`. Exactly-once bookkeeping comes from the checkpoint.
-  *   - event-time windowed aggregation with watermarks over the `events`
-  *     stream — extension scope (the reference has no event-time operators);
-  *     batch and streaming share the same window(ts) plan shape.
+  *   - watermarked event-time operators over the `events` stream (dedup,
+  *     per-key state, a range join, session windows) — extension scope
+  *     (the reference has no event-time operators).
   */
 object StreamIngest {
 
@@ -110,25 +110,6 @@ object StreamIngest {
     }
   }
 
-  /** Event-time tumbling-window counts with a watermark: the streaming twin
-    * of Registry.qEventWindows (same logical window plan; the watermark
-    * bounds state for late data).
-    */
-  def windowedEventCounts(events: DataFrame, windowLen: String = "1 hour",
-      watermark: String = "1 hour", slide: String = null): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      // slide < windowLen → overlapping (sliding) windows: each event lands
-      // in windowLen/slide state rows; null slide = tumbling (slide == len)
-      .groupBy(window(col("ts"), windowLen,
-        Option(slide).getOrElse(windowLen)).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        // decimal-exact sum, DOUBLE on the wire (exact decimal→double is
-        // deterministic; Decimal columns hash inconsistently downstream)
-        sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)")
-          .cast("double").as("total_value"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
-
   /** Streaming exactly-once event dedup: watermark-bounded state keyed on
     * `event_id` — duplicates arriving within the watermark horizon are
     * dropped by the state store; state for events older than the watermark
@@ -136,27 +117,6 @@ object StreamIngest {
     */
   def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events.withWatermark("ts", watermark).dropDuplicates("event_id")
-
-  /** Streaming content-level exact dedup — the streaming twin of
-    * [[graft.ops.Dedup.exact]]: documents arriving on a stream are keyed by
-    * the same normalized-content md5 fingerprint, and
-    * `dropDuplicatesWithinWatermark` drops any copy whose fingerprint was
-    * already seen within the watermark horizon. Unlike plain
-    * `dropDuplicates`, state is reclaimed once the event-time watermark
-    * passes, so a continuous crawl-ingest stream holds bounded state
-    * (horizon-sized, not corpus-sized) — re-crawled near-in-time copies are
-    * the duplicates that matter; historical dedup stays a batch join against
-    * the corpus fingerprint index.
-    *
-    * `tsCol` is the document's event time (crawl/arrival timestamp).
-    */
-  def dedupDocumentsByContent(docs: DataFrame, textCol: String = "text",
-      tsCol: String = "ts", watermark: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("content_hash",
-        graft.functions.TextFns.fingerprintMd5(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** Custom per-key state via `mapGroupsWithState`: running per-user
     * (event count, value total), re-emitted on every update — the
@@ -207,84 +167,6 @@ object StreamIngest {
       .select("user_id", "l_event", "l_type", "r_event", "r_type", "l_ts", "r_ts")
   }
 
-  /** The sessionizer's interval-merge law, extracted pure for property
-    * testing: fold (start, last, n, total) intervals in start order,
-    * chaining while the next start is strictly within `gapUs` of the
-    * running session's last event — the same gap law as [[userSessions]]
-    * (gap ≥ duration ⇒ new session). Associative over batch splits: merging
-    * incrementally (any prefix, then the rest) equals merging all at once,
-    * which is what makes cross-batch state correct.
-    */
-  private[streaming] def mergeSessions(
-      intervals: Seq[(Long, Long, Long, Double)],
-      gapUs: Long): List[(Long, Long, Long, Double)] =
-    intervals.sortBy(s => (s._1, s._2))
-      .foldLeft(List.empty[(Long, Long, Long, Double)]) {
-        case (h :: t, s) if s._1 - h._2 < gapUs =>
-          (h._1, math.max(h._2, s._2), h._3 + s._3, h._4 + s._4) :: t
-        case (acc, s) => s :: acc
-      }.reverse
-
-  /** COMPLETED-session emission via `flatMapGroupsWithState` — the
-    * custom-state sessionizer for logic `session_window` can't express
-    * (per-session derived fields, multi-emit, custom close rules). Open
-    * sessions live in per-user state; a session closes — and is emitted
-    * exactly once, in append mode — when the event-time watermark passes
-    * its end (`last + gap`), driven by `EventTimeTimeout`. Late events
-    * within the watermark can still extend or merge open sessions (the
-    * interval-merge fold below), which is precisely why closing must wait
-    * for the watermark rather than fire on the first in-batch gap.
-    *
-    * Session law matches [[userSessions]]: a gap ≥ `gapMinutes` starts a
-    * new session; `session_end = last + gap` (half-open).
-    *
-    * Scale: state is one small interval list per user with open sessions
-    * only (closed state is removed), sharded by key across executors; the
-    * watermark bounds both state size and emission latency.
-    */
-  def completedUserSessions(spark: SparkSession, events: DataFrame,
-      gapMinutes: Int = 30, watermark: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    def us(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-    def ts(u: Long): java.sql.Timestamp = {
-      val t = new java.sql.Timestamp(u / 1000L)
-      t.setNanos(((u % 1000000L) * 1000L).toInt)
-      t
-    }
-    val typed = events
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[(Long, java.sql.Timestamp, Double)]
-    typed.groupByKey(_._1)
-      // state: open session intervals (startUs, lastUs, n, total) — the
-      // encoder needs the concrete tuple type (a method-local alias has no
-      // TypeTag)
-      .flatMapGroupsWithState[Seq[(Long, Long, Long, Double)],
-        (Long, java.sql.Timestamp, java.sql.Timestamp, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (user, rows, state: GroupState[Seq[(Long, Long, Long, Double)]]) =>
-          val prev = state.getOption.getOrElse(Seq.empty[(Long, Long, Long, Double)])
-          val incoming =
-            rows.map { case (_, t, v) => val u = us(t); (u, u, 1L, v) }.toList
-          val merged = mergeSessions(prev ++ incoming, gapUs)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // close = watermark has passed session_end (= last + gap)
-          val (closed, open) = merged.partition(s => s._2 + gapUs <= wmUs)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(open)
-            state.setTimeoutTimestamp((open.map(_._2).min + gapUs) / 1000L)
-          }
-          closed.iterator.map { case (s, l, n, tot) =>
-            (user, ts(s), ts(l + gapUs), n, tot)
-          }
-      }
-      .toDF("user_id", "session_start", "session_end", "n_events", "total_value")
-  }
-
   /** Sessionized per-user activity via gap-based `session_window` — the
     * idiomatic built-in for session state (see [[runningUserTotals]] for the
     * custom-state form).
@@ -294,523 +176,10 @@ object StreamIngest {
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-        // decimal-exact sum, DOUBLE on the wire (see windowedEventCounts)
+        // decimal-exact sum, DOUBLE on the wire (exact decimal→double is
+        // deterministic; Decimal columns hash inconsistently downstream)
         sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)")
           .cast("double").as("total_value"))
       .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
         col("user_id"), col("n_events"), col("total_value"))
-
-  /** CONTINUOUS DEDUP'D INGEST — the incremental-corpus loop closed end to
-    * end: each arriving micro-batch (1) drops rows whose content the
-    * [[graft.ops.RefStore]] exact artifact already holds (bloom-prefiltered,
-    * no reference scan), plus within-batch duplicate content (lowest id
-    * survives; NULL-text rows all survive, the exactAgainst law), (2) lands
-    * the survivors under `sinkDir/batch=<id>/`, and (3) commits their
-    * fingerprints back to the store — so batch N+2 dedups against
-    * everything batches ≤ N+1 ingested. The store must exist
-    * ([[graft.ops.RefStore.writeExact]] on the initial corpus, possibly
-    * empty).
-    *
-    * Exactly-once across at-least-once foreachBatch replays, with no
-    * ledger beyond the sink itself: the batch's survivors parquet
-    * (atomic `_SUCCESS` marker) is the source of truth. A replay that
-    * finds the marker SKIPS recomputation — recomputing after the store
-    * merge would see the batch's own fingerprints and emit an empty
-    * (data-losing) overwrite — and then re-merges from the COMMITTED
-    * survivors, which closes the crash window between sink commit and
-    * store merge because [[graft.ops.RefStore.mergeExact]] is idempotent
-    * (bloom OR, consumer-distincted fingerprint append).
-    *
-    * `prefilter` is the QUALITY-GATE hook: applied inside the guard
-    * (quality-rejected rows never reach the sink NOR the store — a
-    * junk document must not vaccinate the corpus against a future clean
-    * duplicate of itself), while the batch content fingerprint stays
-    * over the RAW batch, so the fresh-checkpoint collision guard and the
-    * replay law are unchanged. Compose e.g.
-    * [[graft.functions.TextFns.gopherScala]] flags or a stats threshold.
-    *
-    * Unattended-store knobs: `leaseWaitMs` (default 5 min) makes the
-    * store-commit step WAIT on a held write lease instead of failing the
-    * batch — a [[graft.tools.StoreAdmin]] `compact` run mid-stream delays
-    * the next micro-batch rather than killing the query (and a compact
-    * started with its own `leaseWaitMs` waits for the batch gap in turn).
-    * `autoCompactAfter` (default 32) compacts the store inline once the
-    * fingerprint family accumulates that many files — safe on this path
-    * because fingerprint replays are re-distincted by every consumer.
-    */
-  def runDedupedIngest(stream: DataFrame, storeDir: String, sinkDir: String,
-      idCol: String, textCol: String, checkpointDir: String,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 300000L, autoCompactAfter: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestDedupedBatch(batch, id, storeDir, sinkDir, idCol, textCol,
-          prefilter, leaseWaitMs, autoCompactAfter); ()
-      }
-      .start()
-
-  /** One micro-batch of [[runDedupedIngest]] — factored out so the replay
-    * law is directly testable. Idempotent per (batch content, id).
-    *
-    * Lifecycle contract, ENFORCED: `sinkDir` and `checkpointDir` live and
-    * die together. Restarting a stream with a fresh checkpoint over an old
-    * sink restarts batch ids at 0; the `_SUCCESS` marker alone would then
-    * silently DROP the new batch 0 (skip-recompute would keep the stale
-    * survivors). Each committed batch therefore also records an
-    * order-independent content fingerprint (`_BATCH_FP-<id>` beside the
-    * batch dir, underscore-hidden from the parquet reader, written BEFORE
-    * the survivors commit so a marker always has its fingerprint); a
-    * marker hit with a DIFFERENT fingerprint fails loudly instead of
-    * losing data.
-    */
-  private[graft] def ingestDedupedBatch(batch: DataFrame, id: Long,
-      storeDir: String, sinkDir: String, idCol: String, textCol: String,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    ingestGuardedBatch(batch, id, sinkDir, idCol, textCol,
-      guard = { b0 =>
-        val b = prefilter(b0)
-        val fp = graft.functions.TextFns.fingerprintMd5(col(textCol))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(fp).orderBy(col(idCol))
-        val selfDeduped = b
-          .withColumn("_rn", row_number().over(w))
-          // NULL fingerprints land in ONE window partition: without the
-          // isNull escape every NULL-text row but one would vanish, where
-          // the exactAgainst law keeps them all (no content = no duplicate)
-          .filter(col("_rn") === 1 || fp.isNull)
-          .drop("_rn")
-        graft.ops.Dedup.exactAgainstBloomStored(
-          selfDeduped, storeDir, idCol, textCol)
-      },
-      commit = survivors =>
-        graft.ops.RefStore.mergeExact(survivors, textCol, storeDir,
-          leaseWaitMs, autoCompactAfter))
-
-  /** NEAR-DUP tier of the continuous ingest loop — same skeleton, fuzzier
-    * guard: each micro-batch (1) collapses its own near-dup clusters
-    * (banded MinHash pairs → connected components → the smallest id per
-    * cluster survives, the q_cluster_survivors law), (2) drops survivors
-    * that near-duplicate anything the [[graft.ops.RefStore]] minhash
-    * artifact already holds — both stages in ONE shingle pass, under the
-    * STORE's law parameters
-    * ([[graft.ops.Dedup.nearDupSurvivorsAgainstStore]]) — and (3) lands
-    * the rest and commits their signatures back. The store must exist
-    * ([[graft.ops.RefStore.writeMinhash]] on the initial corpus, possibly
-    * empty); `bands` must divide the store's numHashes. Signature
-    * re-appends on replay are tolerated by construction (every consumer
-    * re-distincts candidates), so the commit needs no batch-scoped subdir.
-    * `leaseWaitMs` / `autoCompactAfter` as in [[runDedupedIngest]]
-    * (auto-compaction is replay-safe here for the same re-distinct reason).
-    */
-  def runNearDupIngest(stream: DataFrame, storeDir: String, sinkDir: String,
-      idCol: String, textCol: String, checkpointDir: String,
-      threshold: Double = 0.8, bands: Int = 16,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 300000L, autoCompactAfter: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestNearDupBatch(batch, id, storeDir, sinkDir, idCol, textCol,
-          threshold, bands, prefilter, leaseWaitMs, autoCompactAfter); ()
-      }
-      .start()
-
-  private[graft] def ingestNearDupBatch(batch: DataFrame, id: Long,
-      storeDir: String, sinkDir: String, idCol: String, textCol: String,
-      threshold: Double, bands: Int = 16,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    ingestGuardedBatch(batch, id, sinkDir, idCol, textCol,
-      guard = b => graft.ops.Dedup.nearDupSurvivorsAgainstStore(
-        prefilter(b), storeDir, idCol, textCol, bands, threshold),
-      commit = survivors =>
-        graft.ops.RefStore.mergeMinhash(survivors, idCol, textCol, storeDir,
-          leaseWaitMs, autoCompactAfter))
-
-  /** SUB-DOCUMENT tier of the continuous ingest loop — the CDC chunk-hash
-    * guard, completing the family (exact content → near-dup → shared
-    * passages): each micro-batch (1) drops documents whose
-    * qualifying-chunk overlap with the [[graft.ops.RefStore]] CDC
-    * artifact reaches `maxShareFrac` — a doc that mostly restates stored
-    * passages adds little novel text even when no whole-document or
-    * near-dup fingerprint fires ([[graft.ops.Dedup.cdcOverlapStored]];
-    * the share denominator is the store's own minTokens qualification
-    * law), (2) lands the survivors, and (3) commits THEIR chunk hashes
-    * back, so batch N+2 screens against everything batch N+1 kept.
-    *
-    * NULL/empty-text rows have no chunks, so nothing overlaps them — they
-    * all survive, the same no-content law as the other tiers. In-batch
-    * mutual overlap is deliberately NOT collapsed here: passage sharing
-    * WITHIN a batch is the span/chunk-dedup operators' job; this guard is
-    * the cross-corpus gate. The store must exist
-    * ([[graft.ops.RefStore.writeCdcChunks]] on the initial corpus,
-    * possibly empty); chunk-hash re-appends on replay are absorbed by
-    * consumer re-distinct, so the commit needs no batch-scoped subdir.
-    * `prefilter` / `leaseWaitMs` / `autoCompactAfter` as in
-    * [[runDedupedIngest]].
-    */
-  def runCdcGatedIngest(stream: DataFrame, storeDir: String, sinkDir: String,
-      idCol: String, textCol: String, checkpointDir: String,
-      maxShareFrac: Double = 0.5,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 300000L, autoCompactAfter: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestCdcGatedBatch(batch, id, storeDir, sinkDir, idCol, textCol,
-          maxShareFrac, prefilter, leaseWaitMs, autoCompactAfter); ()
-      }
-      .start()
-
-  private[graft] def ingestCdcGatedBatch(batch: DataFrame, id: Long,
-      storeDir: String, sinkDir: String, idCol: String, textCol: String,
-      maxShareFrac: Double, prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit =
-    ingestGuardedBatch(batch, id, sinkDir, idCol, textCol,
-      guard = { b0 =>
-        val b = prefilter(b0)
-        val flagged = graft.ops.Dedup.cdcOverlapStored(b, storeDir, idCol, textCol)
-          .filter(col("share_frac") >= maxShareFrac)
-          .select(col(idCol))
-        b.join(flagged, Seq(idCol), "left_anti")
-      },
-      commit = survivors =>
-        graft.ops.RefStore.mergeCdcChunks(survivors, idCol, textCol, storeDir,
-          leaseWaitMs, autoCompactAfter))
-
-  /** DISTRIBUTION gate of the continuous ingest family — the BATCH-level
-    * drift alarm completing the tiers (content: exact/near-dup/chunk
-    * guards; distribution: this): each micro-batch scores its `valueCol`
-    * histogram against the PERSISTED corpus baseline
-    * ([[graft.ops.Drift.psiAgainstStored]] — the same value_counts
-    * artifact the KS baseline family uses) and is admitted ONLY while
-    * PSI stays under `maxPsiPico` (default 0.25, the conventional
-    * significant-shift alarm). Admitted batches land under
-    * `sinkDir/batch=<id>/` and merge their counts into the baseline —
-    * the corpus's definition of "normal" evolves with what it accepts;
-    * rejected batches land under `quarantineDir/batch=<id>/` (an
-    * operator worklist, NOT silently dropped data) and leave the
-    * baseline UNTOUCHED, so a poisoned crawl cannot drag "normal" toward
-    * itself batch by batch until its successors pass — the ratchet any
-    * self-updating gate needs.
-    *
-    * An EMPTY baseline admits everything (bootstrap: the first batches
-    * define normal — [[graft.ops.RefStore.writeValueCounts]] with an
-    * empty frame, or a real starting corpus, initializes the store).
-    * Replay law: BOTH candidate destinations for the batch id are
-    * cleared before the write and the write is batch-dir-scoped, so a
-    * replayed batch converges to exactly ONE copy — in whichever
-    * destination the CURRENT baseline dictates (a batch quarantined
-    * before the baseline grew may legally be admitted on a late replay;
-    * the cleared twin dir is what keeps that transition atomic-looking
-    * to consumers) — and the counts merge overwrites its own
-    * `batch=b<id>/` subdir, idempotent under replay (the
-    * [[graft.ops.RefStore.mergeValueCounts]] contract).
-    *
-    * Scale shape: the score is two hash aggregates over the batch and
-    * the loaded baseline histogram (value-domain-sized, never the
-    * corpus); the landing write is the batch itself. No driver state
-    * beyond the 1-row score.
-    */
-  def runDriftGatedIngest(stream: DataFrame, storeDir: String,
-      sinkDir: String, quarantineDir: String, valueCol: String,
-      checkpointDir: String, maxPsiPico: Long = 250000000000L,
-      binWidth: Long = 100L, leaseWaitMs: Long = 300000L,
-      autoCompactAfter: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestDriftGatedBatch(batch, id, storeDir, sinkDir, quarantineDir,
-          valueCol, maxPsiPico, binWidth, leaseWaitMs, autoCompactAfter); ()
-      }
-      .start()
-
-  private[graft] def ingestDriftGatedBatch(batch: DataFrame, id: Long,
-      storeDir: String, sinkDir: String, quarantineDir: String,
-      valueCol: String, maxPsiPico: Long, binWidth: Long,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
-    val score = graft.ops.Drift
-      .psiAgainstStored(batch, valueCol, storeDir, binWidth).head()
-    val accept = score.getLong(1) == 0L || score.getLong(3) <= maxPsiPico
-    // Hadoop-FS delete, not java.io.File: the clear-both-destinations
-    // replay law must hold wherever sinkDir/quarantineDir live (HDFS,
-    // S3A, local) — a local-only delete would silently no-op on a
-    // remote store and leave a replayed flip-flop batch in BOTH dirs.
-    def rmDir(p: String): Unit = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val fs = path.getFileSystem(
-        batch.sparkSession.sessionState.newHadoopConf())
-      fs.delete(path, true); ()
-    }
-    rmDir(s"$sinkDir/batch=$id")
-    rmDir(s"$quarantineDir/batch=$id")
-    val dest = if (accept) s"$sinkDir/batch=$id" else s"$quarantineDir/batch=$id"
-    batch.write.mode("overwrite").parquet(dest)
-    if (accept)
-      graft.ops.RefStore.mergeValueCounts(batch, valueCol, storeDir,
-        batchId = s"b$id", leaseWaitMs, autoCompactAfter)
-  }
-
-  /** The shared exactly-once micro-batch skeleton of the ingest loops:
-    * guard → land survivors under `sinkDir/batch=<id>/` → commit survivors
-    * to the store, with the `_SUCCESS` + `_BATCH_FP` replay/collision
-    * protocol of [[ingestDedupedBatch]]'s scaladoc.
-    */
-  /** ATTRIBUTED exact-dedup ingest — [[runDedupedIngest]]'s guard plus the
-    * paper trail: every dropped duplicate links to the document that
-    * absorbed it, so downstream references remap instead of dangling.
-    * Per micro-batch:
-    *
-    *   1. self-dedup: min-id keeper per fingerprint (NULL-fp rows all
-    *      keep); in-batch duplicates pair (member → keeper);
-    *   2. attribution against the [[graft.ops.RefStore.loadFpOwners]]
-    *      registry: a keeper whose fingerprint is already OWNED drops and
-    *      pairs (keeper → min registered owner);
-    *   3. survivors land in the sink; their fingerprints merge into the
-    *      exact artifact, (fp → id) rows into the owner registry, and the
-    *      batch's pairs into the [[graft.ops.RefStore]] canonical map —
-    *      whose load-time closure is what makes multi-hop chains (batch
-    *      replays, out-of-order arrivals re-owning a fingerprint) resolve
-    *      to ONE survivor regardless of commit order.
-    *
-    * Replay law: the pairs parquet commits BESIDE the batch dir BEFORE the
-    * survivors (marker ⇒ pairs, the `_BATCH_FP` discipline), and every
-    * merge is append-family (re-distinct absorbs re-appends), so a
-    * replayed batch re-lands byte-identical state. Scale note: the
-    * attribution join is a hash equi-join against the (fp, owner)
-    * registry — the cost over the plain tier; use [[runDedupedIngest]]
-    * when nobody consumes the remap.
-    */
-  def runAttributedDedupIngest(stream: DataFrame, storeDir: String,
-      sinkDir: String, idCol: String, textCol: String, checkpointDir: String,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 300000L, autoCompactAfter: Int = 32): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestAttributedBatch(batch, id, storeDir, sinkDir, idCol, textCol,
-          prefilter, leaseWaitMs, autoCompactAfter); ()
-      }
-      .start()
-
-  private[graft] def ingestAttributedBatch(batch: DataFrame, id: Long,
-      storeDir: String, sinkDir: String, idCol: String, textCol: String,
-      prefilter: DataFrame => DataFrame = identity,
-      leaseWaitMs: Long = 0L, autoCompactAfter: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    // underscore-hidden from the sink's partition discovery (the
-    // _BATCH_FP convention) — a visible sibling dir would make the plain
-    // `read.parquet(sinkDir)` fail with CONFLICTING_DIRECTORY_STRUCTURES
-    val pairsDst = new org.apache.hadoop.fs.Path(sinkDir, f"_PAIRS-$id%06d")
-    ingestGuardedBatch(batch, id, sinkDir, idCol, textCol,
-      guard = { b0 =>
-        val b = prefilter(b0)
-        val fpc = graft.functions.TextFns.fingerprintMd5(col(textCol))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(fpc).orderBy(col(idCol))
-        val marked = b.withColumn("_fp", fpc)
-          .withColumn("_rn", row_number().over(w))
-        val keepers = marked.filter(col("_rn") === 1 || col("_fp").isNull)
-        val inPairs = marked.filter(col("_rn") > 1 && col("_fp").isNotNull)
-          .join(keepers.select(col("_fp"), col(idCol).as("_keep")), "_fp")
-          .select(col(idCol).cast("long").as("dup_id"),
-            col("_keep").cast("long").as("canon_id"))
-        val ownerMin = graft.ops.RefStore.loadFpOwners(spark, storeDir)
-          .groupBy(col("fp")).agg(min(col("owner_id")).as("_owner"))
-        val hit = keepers.join(ownerMin, col("_fp") === col("fp"))
-        val crossPairs = hit.select(col(idCol).cast("long").as("dup_id"),
-          col("_owner").cast("long").as("canon_id"))
-        // pairs commit FIRST (marker ⇒ pairs, see scaladoc); overwritten
-        // whole on a retry, so a crash mid-write cannot double them
-        inPairs.unionByName(crossPairs)
-          .write.mode("overwrite").parquet(pairsDst.toString)
-        keepers.join(ownerMin, col("_fp") === col("fp"), "left_anti")
-          .drop("_fp", "_rn")
-      },
-      commit = { survivors =>
-        graft.ops.RefStore.mergeExact(survivors, textCol, storeDir,
-          leaseWaitMs, autoCompactAfter)
-        graft.ops.RefStore.mergeFpOwners(
-          survivors.select(
-            graft.functions.TextFns.fingerprintMd5(col(textCol)).as("fp"),
-            col(idCol).as("owner_id")),
-          "fp", "owner_id", storeDir, leaseWaitMs, autoCompactAfter)
-        graft.ops.RefStore.mergeCanonicalMap(
-          spark.read.parquet(pairsDst.toString), "dup_id", "canon_id",
-          storeDir, leaseWaitMs, autoCompactAfter)
-      })
-  }
-
-  /** Reconciliation tier for the PENDING-MERGE worklist (r11 verdict
-    * task 6 — the consumer [[graft.ops.RefStore.loadPendingMerges]]'s
-    * contract promised): a multi-root canonical-map component means
-    * several documents with the SAME content genuinely survived into the
-    * sink (a retry window or out-of-order batch registered parallel
-    * owners). This tier discharges each worklist row (canon_id,
-    * pending_id):
-    *
-    *   1. PHYSICAL MERGE: every committed `batch=*` sink dir holding a
-    *      pending (losing-root) document is rewritten without it —
-    *      content is identical by the exact-fingerprint law, so deletion
-    *      IS the merge. Rewrites are marked-tmp swaps (the
-    *      [[graft.ops.RefStore]] compact discipline): a crash leaves
-    *      either the intact live dir or a marked-complete tmp that the
-    *      next run promotes — never a half-rewritten sink.
-    *   2. MAP UPDATE: the resolution pair (pending_id → canon_id)
-    *      appends to the canonical map. That puts the losing root on the
-    *      DUP side of the pair union, so it stops being a root — the
-    *      worklist row drains, while [[graft.ops.RefStore
-    *      .loadCanonicalMap]]'s output is unchanged (the pending id
-    *      already mapped to the component minimum). Consumers holding
-    *      the map see the same remap before and after; what changes is
-    *      that it is now TRUE that the dup was dropped.
-    *
-    * Idempotent under replay, in ANY crash prefix: pairs are an append
-    * family (re-appends re-distinct), deletion of an absent row is a
-    * no-op, and once the resolution pair lands the worklist is empty so
-    * the whole tier no-ops. Batch-dir immutability makes the sink
-    * rewrite safe against the ingest loop itself (a committed `_SUCCESS`
-    * dir is never rewritten by replay — [[ingestGuardedBatch]]); run ONE
-    * reconciler at a time per sink (the single-maintainer contract the
-    * unmarked-tmp GC assumes). The `_BATCH_FP` replay fingerprints hash
-    * the INPUT batch, not the survivors, so they stay valid.
-    *
-    * Returns the discharged worklist: (canon_id, pending_id,
-    * removed_rows) — removed_rows 0 when the losing root had already
-    * been physically removed (a crashed earlier run's phase 1).
-    */
-  def reconcilePendingMerges(spark: SparkSession, storeDir: String,
-      sinkDir: String, idCol: String, leaseWaitMs: Long = 300000L,
-      autoCompactAfter: Int = 0): DataFrame = {
-    import spark.implicits._
-    val hp = new org.apache.hadoop.fs.Path(sinkDir)
-    val f = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverReconcileTmps(f, sinkDir)
-    // the worklist is bounded by construction: one row per PARALLEL
-    // OWNER (retry-window artifacts), never corpus-sized
-    val pending = graft.ops.RefStore.loadPendingMerges(spark, storeDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (pending.isEmpty) return Seq.empty[(Long, Long, Long)]
-      .toDF("canon_id", "pending_id", "removed_rows")
-    val ids = pending.map(_._2).toSet
-    val removed = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
-    val dirs = Option(f.globStatus(new org.apache.hadoop.fs.Path(sinkDir, "batch=*")))
-      .getOrElse(Array.empty).filter(_.isDirectory).map(_.getPath)
-      .filter(d => f.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    dirs.foreach { d =>
-      val live = spark.read.parquet(d.toString)
-      val inDir = live.filter(col(idCol).cast("long").isin(ids.toSeq: _*))
-        .groupBy(col(idCol).cast("long").as("_id")).count()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (inDir.nonEmpty) {
-        inDir.foreach { case (id, n) => removed(id) += n }
-        val tmp = new org.apache.hadoop.fs.Path(sinkDir, s".${d.getName}.reconcile")
-        f.delete(tmp, true)
-        // null-safe keep predicate: `!isin` evaluates to NULL (dropped) for
-        // a NULL id, so a null-id row in a rewritten dir would be silently
-        // lost — null ids are never pending (the worklist ids are longs),
-        // so they must survive the rewrite verbatim
-        live.filter(col(idCol).isNull ||
-            !col(idCol).cast("long").isin(ids.toSeq: _*))
-          .write.mode("overwrite").parquet(tmp.toString)
-        f.create(new org.apache.hadoop.fs.Path(tmp, RECONCILE_DONE), true).close()
-        f.delete(d, true)
-        if (!f.rename(tmp, d) && !(f.exists(d) && !f.exists(tmp)))
-          throw new java.io.IOException(
-            s"reconcilePendingMerges: swap $tmp -> $d failed")
-        f.delete(new org.apache.hadoop.fs.Path(d, RECONCILE_DONE), false)
-      }
-    }
-    // phase 2 LAST: once this lands, the worklist is empty and every
-    // earlier phase is provably complete (a crash before this line
-    // re-runs both phases; deletion of the already-deleted is a no-op)
-    graft.ops.RefStore.mergeCanonicalMap(
-      pending.toSeq.toDF("canon_id", "dup_id"), "dup_id", "canon_id",
-      storeDir, leaseWaitMs, autoCompactAfter)
-    pending.toSeq.map { case (c, p) => (c, p, removed(p)) }
-      .toDF("canon_id", "pending_id", "removed_rows")
-  }
-
-  private val RECONCILE_DONE = "_RECONCILE_DONE"
-
-  /** Crash recovery for interrupted batch-dir swaps: a marked-complete
-    * tmp with NO live dir promotes (the crash hit the delete→rename
-    * window); a marked tmp BESIDE a live dir deletes (the live dir is
-    * intact — the rewrite simply redoes); an unmarked tmp is garbage
-    * (single-maintainer contract: no concurrent reconciler can be
-    * mid-write).
-    */
-  private def recoverReconcileTmps(f: org.apache.hadoop.fs.FileSystem,
-      sinkDir: String): Unit =
-    Option(f.globStatus(
-      new org.apache.hadoop.fs.Path(sinkDir, ".batch=*.reconcile")))
-      .getOrElse(Array.empty).foreach { st =>
-        val tmp = st.getPath
-        val marked = f.exists(new org.apache.hadoop.fs.Path(tmp, RECONCILE_DONE))
-        val live = new org.apache.hadoop.fs.Path(sinkDir,
-          tmp.getName.stripPrefix(".").stripSuffix(".reconcile"))
-        if (marked && !f.exists(live)) {
-          if (!f.rename(tmp, live) && !f.exists(live))
-            throw new java.io.IOException(
-              s"reconcilePendingMerges: recovering $tmp -> $live failed")
-          f.delete(new org.apache.hadoop.fs.Path(live, RECONCILE_DONE), false)
-          ()
-        } else { f.delete(tmp, true); () }
-      }
-
-  private def ingestGuardedBatch(batch: DataFrame, id: Long, sinkDir: String,
-      idCol: String, textCol: String,
-      guard: DataFrame => DataFrame,
-      commit: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
-    val dst = new org.apache.hadoop.fs.Path(sinkDir, f"batch=$id%06d")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // order-independent batch content fingerprint: one cheap agg, safe to
-    // recompute on replay (unlike the survivors, which post-merge would
-    // recompute as EMPTY)
-    val fpVal = batch.agg(coalesce(
-      sum(xxhash64(col(idCol), coalesce(col(textCol), lit(" ")))
-        .cast("decimal(38,0)")),
-      lit(java.math.BigDecimal.ZERO))).head().getDecimal(0).toBigInteger.toString
-    // fp lives BESIDE the batch dir (underscore-hidden from partition
-    // discovery), NOT inside it: the survivors overwrite would delete an
-    // fp written first, and fp-BEFORE-parquet ordering is what makes
-    // "marker present ⇒ fp present" an invariant — a crash can leave an
-    // fp without a marker (harmlessly overwritten on the next attempt),
-    // never a committed batch without its fingerprint.
-    val fpPath = new org.apache.hadoop.fs.Path(sinkDir, f"_BATCH_FP-$id%06d")
-    def writeFp(): Unit = {
-      val out = fs.create(fpPath, true)
-      try out.write(fpVal.getBytes("UTF-8")) finally out.close()
-    }
-    if (fs.exists(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"))) {
-      // migration: sinks committed before the fp moved beside the batch
-      // dir carry it INSIDE dst (written post-commit under the old
-      // ordering) — honor it rather than refusing a legitimately
-      // committed sink; the copy is content-identical (same fp law)
-      val legacyFp = new org.apache.hadoop.fs.Path(dst, "_BATCH_FP")
-      if (!fs.exists(fpPath) && fs.exists(legacyFp)) {
-        val legacy = graft.ops.RefStore.readSmallText(fs, legacyFp)
-        val out = fs.create(fpPath, true)
-        try out.write(legacy.getBytes("UTF-8")) finally out.close()
-      }
-      require(fs.exists(fpPath),
-        s"guarded-ingest sink $dst is committed but carries no batch " +
-          "fingerprint — the sink was not written by this protocol (or was " +
-          "tampered with); refusing to guess whether batch ids collide")
-      val old = graft.ops.RefStore.readSmallText(fs, fpPath)
-      require(old == fpVal,
-        s"guarded-ingest sink $dst already holds a DIFFERENT batch $id " +
-          "(fingerprint mismatch) — the sink and checkpoint lifecycles are " +
-          "coupled; pair a fresh checkpoint with a fresh sinkDir")
-    } else {
-      writeFp() // BEFORE the survivors commit: marker ⇒ fp, by construction
-      guard(batch).write.mode("overwrite").parquet(dst.toString)
-    }
-    // ALWAYS commit from the committed survivors — replay-safe (idempotent)
-    // and it closes the crash window between sink commit and store merge
-    commit(spark.read.parquet(dst.toString))
-  }
 }

@@ -18,9 +18,9 @@ object Demo {
   /** Synthetic "source/" drop-folder content (FIXTURES.md §A shape). */
   def writeFixture(spark: SparkSession, dir: String): Unit = {
     def r(fn: String, size: String, id: String, status: String, serial: String,
-        src: String, seq: Long): Row =
+        src: String, row: Long): Row =
       Row.fromSeq(Seq(fn, size, "", id, "", "", serial, "", "", "", "", "", "",
-        "", "", status, "", "", "", src, "Transfer Report", seq, seq))
+        "", "", status, "", "", "", src, "Transfer Report", row))
     val rows = Seq(
       r("Root", "0", "1001", "success", "45000.5", "JobA.xlsx", 1),
       r("Root/Sub", "", "1002", "success", "0", "JobA.xlsx", 2),

@@ -32,7 +32,7 @@ class IngestSpec extends SparkSpec {
       // plant an Overview sheet row alongside the Transfer Report rows
       .union(spark.createDataFrame(sc.parallelize(Seq(
         Row.fromSeq(Seq("ov-row", "", "", "", "", "", "", "", "", "", "", "", "",
-          "", "", "", "", "", "", "JobA.xlsx", "Overview", 99L, 99L)))), rawSchema))
+          "", "", "", "", "", "", "JobA.xlsx", "Overview", 99L)))), rawSchema))
     assert(SheetExtract.sheet(raw, "Overview").count() === 1)
     assert(SheetExtract.sheet(raw, "Transfer Report").count() === 10)
     val out = Files.createTempDirectory("graft-sheet").toString
@@ -48,7 +48,7 @@ class IngestSpec extends SparkSpec {
       .union(spark.createDataFrame(sc.parallelize(Seq(
         // padded short row: every key cell empty → structurally unusable
         Row.fromSeq(Seq("", "", "", "", "x", "", "", "", "", "", "", "", "",
-          "", "", "", "", "", "", "JobA.xlsx", "Transfer Report", 50L, 50L)))), rawSchema))
+          "", "", "", "", "", "", "JobA.xlsx", "Transfer Report", 50L)))), rawSchema))
     val (good, bad) = Quarantine.split(raw)
     assert(bad.count() === 1)
     assert(bad.head.getAs[String]("_quarantine_reason").startsWith("empty_key"))

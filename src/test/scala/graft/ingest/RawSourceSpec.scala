@@ -62,19 +62,34 @@ class RawSourceSpec extends SparkSpec {
     val raw = ParquetRawSource.load(spark, dir)
     assert(raw.filter(col("source_account") =!= "").count() === 0) // padded, not JobA.xlsx
     assert(raw.filter(col("translated_file_name") =!= "").count() === 0)
-    assert(raw.schema("_arrival_seq").dataType.typeName === "long")
+    assert(raw.schema(rowIdxCol).dataType.typeName === "long")
+    assert(raw.filter(col("file_name") === "Root").count() === 2) // data intact
+  }
+
+  test("short positional input: a stray _arrival_seq column is not read as a data cell") {
+    val dir = Files.createTempDirectory("graft-src-stray").toString
+    // an input written when `_arrival_seq` was an order override: it is an
+    // ingest column like the triple, so the 19-column band still pads
+    PipelineFixture.raw(spark)
+      .select((Seq("file_name", "source_file_size", "target_file_size",
+        "target_file_id") ++ metaColumns).map(col): _*)
+      .withColumn("_arrival_seq", col(rowIdxCol))
+      .write.mode("overwrite").parquet(dir)
+    val raw = ParquetRawSource.load(spark, dir)
+    assert(raw.columns.toSeq === dbColumns ++ Seq(srcFileCol, sheetCol, rowIdxCol))
+    assert(raw.filter(col("source_account") =!= "").count() === 0) // padded, not the seq
     assert(raw.filter(col("file_name") === "Root").count() === 2) // data intact
   }
 
   test("string-typed meta columns from CSV are re-cast: last-writer-wins survives 10+ rows") {
-    // "9" > "10" lexicographically — if _arrival_seq stayed a string, the
+    // "9" > "10" lexicographically — if _row_idx stayed a string, the
     // EARLIER arrival would win the upsert
     val dir = Files.createTempDirectory("graft-src-strseq").toString
     val rows = (1 to 12).map { i =>
       org.apache.spark.sql.Row.fromSeq(
         Seq(s"Dup/key.txt", i.toString, "", "500", "", "", "", "", "", "", "", "",
           "", "", "", s"status$i", "", "", "", "J.xlsx", "Transfer Report",
-          i.toString, i.toString))
+          i.toString))
     }
     val schema = org.apache.spark.sql.types.StructType(
       (dbColumns ++ metaColumns).map(c =>
@@ -91,10 +106,9 @@ class RawSourceSpec extends SparkSpec {
     PipelineFixture.raw(spark).drop(metaColumns: _*)
       .write.mode("overwrite").parquet(dir)
     val raw = ParquetRawSource.load(spark, dir)
-    // the order triple is synthesized; no global _arrival_seq is materialized
+    // the order triple is synthesized and no global sequence is materialized
     // (arrival order is compared lazily — see TransferSchema.arrivalOrderAsc)
-    assert(Seq(srcFileCol, sheetCol, rowIdxCol).forall(raw.columns.contains))
-    assert(!raw.columns.contains(arrivalSeqCol))
+    assert(raw.columns.toSeq === dbColumns ++ metaColumns)
     assert(raw.select(srcFileCol).distinct().count() >= 1) // from input_file_name
     // pipeline still resolves deterministically without the sequence
     val resolved = Pipeline.run(spark, dir)

@@ -3,6 +3,7 @@ package graft.ops
 import org.scalacheck.{Gen, rng}
 
 import graft.SparkSpec
+import graft.functions.TextFns
 
 /** PMI collocation law: hand arithmetic, naive-replay property sweep, and
   * the cross-libm boundary margin on real testdata.
@@ -48,7 +49,7 @@ class CollocationsSpec extends SparkSpec {
     (0 until 20).foreach { i =>
       val texts = Gen.listOfN(8, doc)
         .pureApply(Gen.Parameters.default, rng.Seed(211L + i))
-      val want = Collocations.pmiNaive(texts, minCount = 1L)
+      val want = CollocationsSpec.pmiNaive(texts, minCount = 1L)
       val got = engine(texts, minCount = 1L)
       assert(got === want, s"corpus $i: $texts")
     }
@@ -105,5 +106,28 @@ class CollocationsSpec extends SparkSpec {
     val uncapped = Collocations.associationRules(withMega, "basket", "item",
       k = 10, minCo = 2L, maxBasket = 64).collect().head
     assert((uncapped.getLong(2), uncapped.getLong(3)) === ((4L, 4L)))
+  }
+}
+
+object CollocationsSpec {
+
+  /** Naive replay of the whole law for property tests. */
+  def pmiNaive(texts: Seq[String], minCount: Long)
+      : Map[(String, String), (Long, Long)] = {
+    val low = texts.map(t =>
+      if (t == null) null else t.toLowerCase(java.util.Locale.ROOT))
+    val bis = low.flatMap(LangModel.bigramsScala(_))
+    val unis = low.flatMap(TextFns.tokensScala)
+    if (bis.isEmpty) return Map.empty
+    val c12 = bis.groupBy(identity).map { case (kk, v) => (kk, v.size.toLong) }
+    val c = unis.groupBy(identity).map { case (kk, v) => (kk, v.size.toLong) }
+    val np = bis.size.toLong; val nu = unis.size.toLong
+    c12.filter(_._2 >= minCount).map { case ((a, b), n12) =>
+      val x = (((((math.log(n12.toDouble) + math.log(nu.toDouble))
+        + math.log(nu.toDouble)) - math.log(np.toDouble))
+        - math.log(c(a).toDouble)) - math.log(c(b).toDouble)) * 1000000.0
+      ((a, b), (n12, java.math.BigDecimal.valueOf(x)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()))
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.scalacheck.{Gen, rng}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.functions.TextFns
 
 /** TV-drift law: the engine's split-sum exact-integer formulation against
   * the textbook ½·Σ|p−q| replay, plus the boundary laws (one stratum → 0,
@@ -59,7 +60,7 @@ class DriftSpec extends SparkSpec {
       Gen.listOfN(14, doc).pureApply(Gen.Parameters.default, rng.Seed(7L + i))
     }
     corpora.foreach { docs =>
-      val want = Drift.tvNaive(docs)
+      val want = DriftSpec.tvNaive(docs)
       val got = engine(docs)
       assert(got.keySet === want.keySet, s"strata for $docs")
       want.foreach { case (s, tv) =>
@@ -67,42 +68,6 @@ class DriftSpec extends SparkSpec {
           s"stratum $s: engine ${got(s)._3} vs naive $tv in $docs")
       }
     }
-  }
-
-  test("ingestDriftReport: the shifted micro-batch alarms, the on-distribution one doesn't") {
-    import java.nio.file.Files
-    val store = Files.createTempDirectory("drift-ingest-store").toString
-    val dedupStore = Files.createTempDirectory("drift-ingest-dedup").toString
-    val sink = Files.createTempDirectory("drift-ingest-sink").toString
-    // vetted baseline: a clean-vocabulary corpus trains the drift store
-    val clean = (1L to 40L).map(i =>
-      (i, s"the quick brown fox number $i jumps over the lazy dog"))
-      .toDF("doc_id", "text")
-    RefStore.writeTokenCounts(clean, "text", store)
-    // the ingest loop's own exact-dedup store (empty initial corpus)
-    RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", dedupStore,
-      expectedItems = 100L)
-    // batch 0 on-distribution, batch 1 vocabulary-shifted junk
-    graft.streaming.StreamIngest.ingestDedupedBatch(
-      (100L to 104L).map(i => (i, s"quick brown fox $i over the lazy dog"))
-        .toDF("doc_id", "text"),
-      0L, dedupStore, sink, "doc_id", "text")
-    graft.streaming.StreamIngest.ingestDedupedBatch(
-      (200L to 204L).map(i => (i, s"zzz$i qqq$i www$i eee$i rrr$i ttt$i"))
-        .toDF("doc_id", "text"),
-      1L, dedupStore, sink, "doc_id", "text")
-    val report = Drift.ingestDriftReport(spark, sink, store, "text",
-        alarmAt = 0.5)
-      .collect()
-      .map(r => r.getAs[Any](0).toString.toLong ->
-        ((r.getDouble(3), r.getBoolean(4)))).toMap
-    assert(report.keySet === Set(0L, 1L))
-    assert(!report(0L)._2,
-      s"on-distribution batch must not alarm: tv=${report(0L)._1}")
-    assert(report(1L)._2 && report(1L)._1 > 0.9,
-      s"disjoint-vocabulary batch must alarm hard: tv=${report(1L)._1}")
-    assert(report(0L)._1 < report(1L)._1)
   }
 
   test("sourceKlReport matches a Scala replay of the smoothed pico law") {
@@ -495,5 +460,29 @@ class DriftSpec extends SparkSpec {
     val lone = Seq(("a", 10L)).toDF("s", "v")
     val rl = Drift.bhattacharyyaDrift(lone, "s", "v").collect().head
     assert(rl.isNullAt(4) && rl.isNullAt(5))
+  }
+}
+
+object DriftSpec {
+
+  /** Naive single-machine replay of the TV law for property tests: the
+    * textbook ½·Σ over the FULL vocabulary union, straight doubles —
+    * independent of the engine's split-sum rearrangement.
+    */
+  def tvNaive(docs: Seq[(String, String)]): Map[String, Double] = {
+    val toks = docs.flatMap { case (s, t) =>
+      TextFns.tokensScala(t).map(w => (s, w))
+    }
+    if (toks.isEmpty) return Map.empty
+    val n = toks.size.toDouble
+    val ctAll = toks.groupBy(_._2).map { case (w, xs) => (w, xs.size.toDouble) }
+    toks.groupBy(_._1).map { case (s, xs) =>
+      val nS = xs.size.toDouble
+      val cSt = xs.groupBy(_._2).map { case (w, ys) => (w, ys.size.toDouble) }
+      val tv = 0.5 * ctAll.keysIterator.map { w =>
+        math.abs(cSt.getOrElse(w, 0.0) / nS - ctAll(w) / n)
+      }.sum
+      (s, tv)
+    }
   }
 }

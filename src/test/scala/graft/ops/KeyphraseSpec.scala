@@ -70,7 +70,7 @@ class KeyphraseSpec extends SparkSpec {
     (0 until 25).foreach { i =>
       val texts = Gen.listOfN(10, doc)
         .pureApply(Gen.Parameters.default, rng.Seed(31L + i))
-      val want = Keyphrase.rakeNaive(texts, stop, 4)
+      val want = KeyphraseSpec.rakeNaive(texts, stop, 4)
       val got = engine(texts)
       assert(got === want, s"corpus $i: $texts")
     }
@@ -98,5 +98,37 @@ class KeyphraseSpec extends SparkSpec {
       Seq("p q p q r s").toDF("text"), "text", vocabK = 2)
       .collect().map(_.getString(0)).toSet
     assert(capped === Set("p", "q"))
+  }
+}
+
+object KeyphraseSpec {
+
+  /** Naive single-machine RAKE replay for property tests: direct maps over
+    * the full candidate list, double ratios quantized the same way.
+    */
+  def rakeNaive(texts: Seq[String], stopwords: Seq[String],
+      maxWords: Int): Map[String, (Long, Long, Long)] = {
+    val stop = stopwords.toSet
+    val cands = texts.flatMap { t =>
+      Keyphrase.phraseRuns(TextFns.tokensScala(
+        if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)),
+        stop, maxWords)
+    }
+    if (cands.isEmpty) return Map.empty
+    val freq = scala.collection.mutable.Map.empty[String, Long]
+    val deg = scala.collection.mutable.Map.empty[String, Long]
+    cands.foreach { ws =>
+      ws.foreach { w =>
+        freq(w) = freq.getOrElse(w, 0L) + 1L
+        deg(w) = deg.getOrElse(w, 0L) + ws.length
+      }
+    }
+    cands.groupBy(_.mkString(" ")).map { case (p, occ) =>
+      val ws = occ.head
+      val score = ws.map { w =>
+        math.round(deg(w).toDouble * 1000000.0 / freq(w).toDouble)
+      }.sum
+      (p, (ws.length.toLong, occ.size.toLong, score))
+    }
   }
 }

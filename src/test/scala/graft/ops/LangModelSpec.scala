@@ -3,6 +3,7 @@ package graft.ops
 import org.scalacheck.{Gen, rng}
 
 import graft.SparkSpec
+import graft.functions.TextFns
 
 /** Bigram-LM law: hand-checkable arithmetic, the engine vs a naive replay,
   * and the DSIR-style cross-libm boundary margin on real testdata.
@@ -58,7 +59,7 @@ class LangModelSpec extends SparkSpec {
       val texts = Gen.listOfN(8, doc)
         .pureApply(Gen.Parameters.default, rng.Seed(501L + i))
       val docs = texts.zipWithIndex.map { case (t, j) => (j.toLong, t) }
-      val want = LangModel.nllNaive(docs, train)
+      val want = LangModelSpec.nllNaive(docs, train)
       val got = engine(docs, train)
       assert(got === want, s"corpus $i train=$train docs=$docs")
     }
@@ -93,5 +94,32 @@ class LangModelSpec extends SparkSpec {
     assert(margin > 1e-4,
       f"boundary margin $margin%.3e too thin for the cross-libm quantization law " +
         f"over ${pairs.size} distinct pairs")
+  }
+}
+
+object LangModelSpec {
+
+  /** Naive replay of the whole law for property tests. */
+  def nllNaive(docs: Seq[(Long, String)], train: Seq[String])
+      : Map[Long, (Long, Long, Double)] = {
+    val trainBi = train.flatMap(t =>
+      LangModel.bigramsScala(if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)))
+    val c2 = trainBi.groupBy(identity).map { case (k, v) => (k, v.size.toLong) }
+    val c1 = trainBi.groupBy(_._1).map { case (k, v) => (k, v.size.toLong) }
+    val v = train.flatMap(t => TextFns.tokensScala(
+      if (t == null) null else t.toLowerCase(java.util.Locale.ROOT)))
+      .distinct.size + 1L
+    docs.map { case (id, text) =>
+      val bis = LangModel.bigramsScala(
+        if (text == null) null else text.toLowerCase(java.util.Locale.ROOT)).toSeq
+      val nll = bis.map { b =>
+        val x = (math.log(c1.getOrElse(b._1, 0L).toDouble + v.toDouble) -
+          math.log(c2.getOrElse(b, 0L).toDouble + 1.0)) * 1000000.0
+        java.math.BigDecimal.valueOf(x)
+          .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+      }.sum
+      val avg = if (bis.isEmpty) 0.0 else nll.toDouble / 1000000.0 / bis.size.toDouble
+      (id, (bis.size.toLong, nll, avg))
+    }.toMap
   }
 }

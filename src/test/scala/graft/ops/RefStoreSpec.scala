@@ -309,35 +309,6 @@ class RefStoreSpec extends SparkSpec {
       === exactPre - 13L, "a post-compact merge must dedup against the compacted store")
   }
 
-  test("describe: read-only dashboard — artifacts, meta, bloom; lease surfaces; compact shrinks the file rows") {
-    val dir = Files.createTempDirectory("refstore-describe").toString
-    RefStore.writeExact(batch1, "text", dir, expectedItems = 100L)
-    RefStore.writeMinhash(batch1, "doc_id", "text", dir)
-    RefStore.mergeExact(batch2, "text", dir)
-    RefStore.mergeMinhash(batch2, "doc_id", "text", dir)
-    def desc() = RefStore.describe(spark, dir)
-      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
-    val d1 = desc()
-    assert(d1.contains("fingerprints") && d1.contains("signatures"))
-    assert(d1("fingerprints")._1 === "artifact" && d1("fingerprints")._2 >= 2L,
-      s"two commits must show >= 2 fingerprint files: $d1")
-    assert(d1("bloom.bin")._1 === "cache" && d1("bloom.bin")._3 > 0L)
-    assert(d1("meta:expectedItems")._4 === "100")
-    assert(!d1.contains("_LEASE"), "no writer is live")
-    // a stuck lease surfaces as a row (and only a row — describe never mutates)
-    val lease = Paths.get(dir, "_LEASE")
-    Files.createFile(lease)
-    assert(desc()("_LEASE") === (("lease", 1L, 0L, "held")))
-    assert(Files.exists(lease), "describe must not break the lease")
-    Files.delete(lease)
-    // compaction folds the per-batch file sets; describe reflects it
-    RefStore.compact(spark, dir, numFiles = 1)
-    val d2 = desc()
-    assert(d2("fingerprints")._2 < d1("fingerprints")._2,
-      s"compaction must shrink the fingerprint file count: ${d1("fingerprints")} -> ${d2("fingerprints")}")
-    assert(d2.keys.count(_.startsWith(".")) === 0, "no pending swaps after a clean compact")
-  }
-
   test("fsck: clean store passes every check; hand-corrupted artifacts are flagged") {
     val dir = Files.createTempDirectory("refstore-fsck").toString
     RefStore.writeExact(batch1, "text", dir, expectedItems = 100L)
@@ -781,27 +752,6 @@ class RefStoreSpec extends SparkSpec {
     assert(map3(101L) === 100L && !map3.contains(100L))
   }
 
-  test("loadPendingMerges: parallel owners surface as a reconciliation worklist") {
-    val dir = Files.createTempDirectory("refstore-canon-pending").toString
-    // one fingerprint, two registered owners 10 and 14 (both SURVIVED in
-    // sinks): dups 21→10 and 22→14 chain the roots into one component.
-    // The map crowns min-root 10, so 14 lands on the dup side even
-    // though its document still exists — the pending-merge row makes
-    // that explicit. A clean single-root chain (31→30) must emit nothing.
-    RefStore.writeCanonicalMap(
-      Seq((21L, 10L), (22L, 14L), (21L, 22L), (31L, 30L))
-        .toDF("dup", "canon"), "dup", "canon", dir)
-    val pending = RefStore.loadPendingMerges(spark, dir)
-      .as[(Long, Long)].collect().toSet
-    assert(pending === Set((10L, 14L)),
-      s"losing root 14 must be reported as pending onto canon 10: $pending")
-    // the map itself still maps EVERYTHING (incl. the losing root) onto 10
-    val map = RefStore.loadCanonicalMap(spark, dir)
-      .as[(Long, Long)].collect().toMap
-    assert(map(14L) === 10L && map(21L) === 10L && map(22L) === 10L)
-    assert(map(31L) === 30L && !map.contains(10L))
-  }
-
   test("simhash store: merge into a dir that never saw writeSimhash fails fast") {
     val dir = Files.createTempDirectory("refstore-simhash-foreign").toString
     RefStore.writeExact(batch1, "text", dir, expectedItems = 1000L)
@@ -829,103 +779,6 @@ class RefStoreSpec extends SparkSpec {
     assert(!Files.exists(live.resolve("_COMPACT_DONE")))
   }
 
-  test("write lease: a bounded leaseWaitMs waits out a live holder instead of failing the merge") {
-    val dir = Files.createTempDirectory("refstore-leasewait").toString
-    RefStore.writeExact(batch1, "text", dir, expectedItems = 1000L)
-    // a live maintenance writer holds the lease; it releases 400 ms in
-    val lease = Paths.get(dir, "_LEASE")
-    Files.write(lease, "compactor@elsewhere/thread-1".getBytes("UTF-8"))
-    val releaser = new Thread(() => { Thread.sleep(400L); Files.delete(lease); () })
-    releaser.start()
-    // default (0) would fail fast here — the bounded wait must ride it out
-    RefStore.mergeExact(batch2, "text", dir, leaseWaitMs = 30000L)
-    releaser.join()
-    assert(survivors(Dedup.exactAgainstBloomStored(incoming, dir, "doc_id", "text"))
-      === Set(12L, 13L, 14L), "the delayed merge must commit normally")
-    assert(!Files.exists(lease), "the waiting merge must release its own lease")
-    // a holder that NEVER releases still surfaces as the actionable error,
-    // just leaseWaitMs later
-    Files.write(lease, "wedged-writer@elsewhere/thread-9".getBytes("UTF-8"))
-    val err = intercept[IllegalStateException] {
-      RefStore.mergeExact(batch2, "text", dir, leaseWaitMs = 300L)
-    }
-    assert(err.getMessage.contains("wedged-writer") &&
-      err.getMessage.contains("waited"),
-      s"timeout error must name the holder and the wait: ${err.getMessage}")
-  }
-
-  test("auto-compact: a merge crossing the threshold compacts inline, identically to a manual compact") {
-    // twin stores, same data: A merges with autoCompactAfter crossing the
-    // threshold on the last merge; B merges plain then compacts manually
-    val dirA = Files.createTempDirectory("refstore-autocompact-a").toString
-    val dirB = Files.createTempDirectory("refstore-autocompact-b").toString
-    // expectedItems deliberately undersized so a compact MUST re-size the
-    // bloom — the observable proof the trigger actually fired in A
-    Seq(dirA, dirB).foreach(d => RefStore.writeExact(batch1, "text", d, expectedItems = 3L))
-    def metaItems(d: String): Long = {
-      val p = new java.util.Properties()
-      val in = Files.newInputStream(Paths.get(d, "meta.properties"))
-      try p.load(in) finally in.close()
-      p.getProperty("expectedItems").toLong
-    }
-    // each small merge appends one file set; threshold 2 fires once the
-    // fingerprint family holds >= 2 commit units
-    RefStore.mergeExact(batch2, "text", dirA, autoCompactAfter = 2)
-    RefStore.mergeExact(batch2, "text", dirB)
-    RefStore.compact(spark, dirB)
-    assert(metaItems(dirA) === 8L,
-      "the merge-triggered compact must have re-sized the bloom from the truth (4 distinct x2)")
-    assert(metaItems(dirA) === metaItems(dirB),
-      "merge-triggered and manual compaction must leave identical sizing")
-    val a = survivors(Dedup.exactAgainstBloomStored(incoming, dirA, "doc_id", "text"))
-    val b = survivors(Dedup.exactAgainstBloomStored(incoming, dirB, "doc_id", "text"))
-    assert(a === b && a === Set(12L, 13L, 14L),
-      "both stores must answer identically after their compacts")
-    // below the threshold nothing fires: a fresh store with a high
-    // threshold keeps its original sizing
-    val dirC = Files.createTempDirectory("refstore-autocompact-c").toString
-    RefStore.writeExact(batch1, "text", dirC, expectedItems = 3L)
-    RefStore.mergeExact(batch2, "text", dirC, autoCompactAfter = 100)
-    assert(metaItems(dirC) === 3L, "under-threshold merges must not compact")
-  }
-
-  test("auto-compact scope: a fingerprint-triggered compaction never folds a co-resident batch-dir family") {
-    // shared dir: exact family + centroid batch commits — the fingerprint
-    // merge's auto-compaction must fold ONLY fingerprints, because a
-    // crashed centroid batch commit may still be retried (batch-dir retry
-    // caveat) and a folded tree would double-count the retry
-    val dir = Files.createTempDirectory("refstore-autoscope").toString
-    RefStore.writeExact(batch1, "text", dir, expectedItems = 3L)
-    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)))
-      .toDF("vec_id", "embedding")
-    val assign = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "cluster_id")
-    RefStore.writeCentroids(Similarity.clusterCentroidSums(
-      emb.filter($"vec_id" === 1L), assign, "vec_id", "embedding"), dir)
-    RefStore.mergeCentroids(Similarity.clusterCentroidSums(
-      emb.filter($"vec_id" === 2L), assign, "vec_id", "embedding"), dir, "b1")
-    def centBatches() = Paths.get(dir, "centroids").toFile.listFiles()
-      .map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
-    val before = centBatches()
-    assert(before === Seq("batch=b1", "batch=init"))
-    def crows() = RefStore.loadCentroidSums(spark, dir)
-      .select("cluster_id", "dim", "sum_micro", "n_members")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val sums = crows()
-    // threshold 1: fires on this very merge — proof via the bloom re-size
-    RefStore.mergeExact(batch2, "text", dir, autoCompactAfter = 1)
-    val meta = new java.util.Properties()
-    val in = Files.newInputStream(Paths.get(dir, "meta.properties"))
-    try meta.load(in) finally in.close()
-    assert(meta.getProperty("expectedItems").toLong === 8L,
-      "the fingerprint family must have compacted (bloom re-sized)")
-    assert(centBatches() === before,
-      "the centroid batch tree must be untouched by the fingerprint trigger")
-    // the documented retry of a crashed centroid commit stays idempotent
-    RefStore.mergeCentroids(Similarity.clusterCentroidSums(
-      emb.filter($"vec_id" === 2L), assign, "vec_id", "embedding"), dir, "b1")
-    assert(crows() === sums, "a post-auto-compact batch retry must not double-count")
-  }
-
   test("retention: an unmarked compact tmp (crash before the marker) is GC'd by the next mutation") {
     val dir = Files.createTempDirectory("refstore-tmpgc").toString
     RefStore.writeExact(batch1, "text", dir, expectedItems = 1000L)
@@ -942,8 +795,8 @@ class RefStoreSpec extends SparkSpec {
       "the next mutation must GC the dead tmp (no compactor can be live under our lease)")
     assert(survivors(Dedup.exactAgainstBloomStored(incoming, dir, "doc_id", "text"))
       === Set(12L, 13L, 14L), "GC must not affect answers")
-    // a MARKED tmp is NOT gc'd when live exists (pending swap, surfaces in
-    // describe; the next compact of that family resolves it)
+    // a MARKED tmp is NOT gc'd when live exists (a pending swap; the next
+    // compact of that family resolves it)
     val marked = Paths.get(dir, ".signatures.compact")
     Files.createDirectories(marked)
     Files.createFile(marked.resolve("_COMPACT_DONE"))

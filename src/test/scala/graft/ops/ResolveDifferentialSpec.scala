@@ -13,8 +13,8 @@ import graft.model.TransferSchema._
   * get right: null-keyed rows with identical cells (all survive), re-shipped
   * keys (last arrival wins), one `file_name` shipped with two ids (the later
   * arrival is the parent map's value), level-1 rows with a null
-  * `parent_folder`, and parents that name no row. Two arrival orders: an
-  * input `_arrival_seq`, and `_epoch` over a state/batch union as
+  * `parent_folder`, and parents that name no row. Two arrival orders: the
+  * (file, sheet, row) triple, and `_epoch` over a state/batch union as
   * `MergeSink` builds it. Outputs are compared as multisets on every column.
   */
 class ResolveDifferentialSpec extends SparkSpec {
@@ -28,8 +28,7 @@ class ResolveDifferentialSpec extends SparkSpec {
     StructField(parentIdCol, StringType),
     StructField(srcFileCol, StringType),
     StructField(sheetCol, StringType),
-    StructField(rowIdxCol, LongType),
-    StructField(arrivalSeqCol, LongType)))
+    StructField(rowIdxCol, LongType)))
   private val withEpoch = StructType(schema.fields :+ StructField(epochCol, LongType))
 
   /** One generated row: the schema's cells in order (plus `_epoch` when the
@@ -39,12 +38,11 @@ class ResolveDifferentialSpec extends SparkSpec {
     def name: String = cells(0).asInstanceOf[String]
     def id: Option[Long] = Option(cells(1)).map(_.asInstanceOf[Long])
     def parent: Option[String] = Option(cells(4)).map(_.asInstanceOf[String])
-    /** The arrival order the operators use: epoch, then `_arrival_seq`
-      * (null sorts first), then the (file, sheet, row) triple.
+    /** The arrival order the operators use: epoch, then the (file, sheet,
+      * row) triple.
       */
-    def arrival: (Long, Long, String, String, Long) = (
-      if (cells.size > 10) cells(10).asInstanceOf[Long] else 0L,
-      Option(cells(9)).fold(-1L)(_.asInstanceOf[Long]),
+    def arrival: (Long, String, String, Long) = (
+      if (cells.size > 9) cells(9).asInstanceOf[Long] else 0L,
       cells(6).asInstanceOf[String], cells(7).asInstanceOf[String],
       cells(8).asInstanceOf[Long])
   }
@@ -52,10 +50,8 @@ class ResolveDifferentialSpec extends SparkSpec {
   private implicit val arrivalOrd: Ordering[R] = Ordering.by((r: R) => r.arrival)
 
   /** Seeded workbook-shaped rows from `files`, row indices 1.. per file. */
-  private def generate(rnd: Random, files: Seq[String], rowsPerFile: Int,
-      seqFrom: Option[Long]): Vector[R] = {
+  private def generate(rnd: Random, files: Seq[String], rowsPerFile: Int): Vector[R] = {
     val names = (0 until 30).map(i => s"J/n$i")
-    var seq = seqFrom.getOrElse(0L)
     files.toVector.flatMap { f =>
       val rows = (1 to rowsPerFile).toVector.map { i =>
         val n = rnd.nextInt(names.size)
@@ -68,14 +64,13 @@ class ResolveDifferentialSpec extends SparkSpec {
           case 2 => s"missing/$n" // names no row
           case _ => names(rnd.nextInt(names.size))
         }
-        seq += 1
         R(Vector(name, id, s"s${rnd.nextInt(4)}", rnd.nextInt(3).toLong * 100, parent, null,
-          f, "Transfer Report", i.toLong, if (seqFrom.isDefined) seq else null))
+          f, "Transfer Report", i.toLong))
       }
       // three null-keyed rows identical in every cell but their row index
       val twins = (1 to 3).toVector.map { k =>
         R(Vector("J/twin", null, "s0", 0L, "J/n1", null, f, "Transfer Report",
-          (rowsPerFile + k).toLong, if (seqFrom.isDefined) { seq += 1; seq } else null))
+          (rowsPerFile + k).toLong))
       }
       rows ++ twins
     }
@@ -131,11 +126,12 @@ class ResolveDifferentialSpec extends SparkSpec {
     assert(pids.contains(null) && pids.exists(_ != null))
   }
 
-  test("differential: upsert + parents over inputs ordered by _arrival_seq") {
+  test("differential: upsert + parents over inputs ordered by the (file, sheet, row) triple") {
     Seq(11L, 12L, 13L).foreach { seed =>
       val rnd = new Random(seed)
-      // the seq runs against the file order, so it (not the triple) decides
-      val rows = generate(rnd, Seq("C.xlsx", "B.xlsx", "A.xlsx"), 60, Some(0L))
+      // generated against the file order, so the triple (not the input
+      // order) decides
+      val rows = generate(rnd, Seq("C.xlsx", "B.xlsx", "A.xlsx"), 60)
       coverage(rows)
       check(rows, schema)
     }
@@ -144,15 +140,13 @@ class ResolveDifferentialSpec extends SparkSpec {
   test("differential: upsert + parents over a state/batch union ordered by _epoch") {
     Seq(21L, 22L, 23L).foreach { seed =>
       val rnd = new Random(seed)
-      // the state carries _arrival_seq, the later batch does not (null), so
-      // _epoch decides across them and the triple within the batch
-      val state = generate(rnd, Seq("B.xlsx", "A.xlsx"), 60, Some(0L)).map(r => R(r.cells :+ 1L))
-      val batch = generate(rnd, Seq("A.xlsx", "B.xlsx"), 40, None).map(r => R(r.cells :+ 2L))
+      // both sides ship the same files and row indices, so _epoch decides
+      // across them and the triple within each side
+      val state = generate(rnd, Seq("B.xlsx", "A.xlsx"), 60).map(r => R(r.cells :+ 1L))
+      val batch = generate(rnd, Seq("A.xlsx", "B.xlsx"), 40).map(r => R(r.cells :+ 2L))
       val rows = state ++ batch
       coverage(rows)
-      val stateDf = frame(state, withEpoch)
-      val batchDf = frame(batch, withEpoch).drop(arrivalSeqCol)
-      val union = stateDf.unionByName(batchDf, allowMissingColumns = true)
+      val union = frame(state, withEpoch).unionByName(frame(batch, withEpoch))
       assert(union.columns.toSeq === withEpoch.fieldNames.toSeq)
       val up = Upsert(union)
       assert(multiset(rowsOf(up)) === multiset(modelUpsert(rows).map(_.cells)))
@@ -164,8 +158,8 @@ class ResolveDifferentialSpec extends SparkSpec {
 
   test("parents: a null parent_folder resolves to null even when a null name carries an id") {
     val rows = Seq(
-      Row(null, 7L, "s", 0L, null, null, "A.xlsx", "Transfer Report", 1L, 1L),
-      Row("x", 8L, "s", 0L, null, null, "A.xlsx", "Transfer Report", 2L, 2L))
+      Row(null, 7L, "s", 0L, null, null, "A.xlsx", "Transfer Report", 1L),
+      Row("x", 8L, "s", 0L, null, null, "A.xlsx", "Transfer Report", 2L))
     val out = Parents(spark.createDataFrame(sc.parallelize(rows), schema))
       .select(parentIdCol).collect().map(r => Option(r.getString(0)))
     assert(out.toSeq === Seq(None, None))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ingest.Coerce
+import graft.model.TransferSchema.rowIdxCol
 import graft.pipeline.{Pipeline, PipelineFixture}
 import graft.streaming.MergeSink
 
@@ -32,11 +33,11 @@ class SaltAndMergeSpec extends SparkSpec {
     val n1 = MergeSink.merge(spark, batch1, state)
     assert(n1 === 7)
 
-    // batch 2 re-ships Root/Sub/a.pdf and adds Root — its per-batch seqs
+    // batch 2 re-ships Root/Sub/a.pdf and adds Root — its row indices
     // START OVER (lower than state's); the sink must epoch-rebase so the
     // newer batch still wins
     val batch2 = resolved.filter($"file_name".isin("Root", "Root/Sub/a.pdf"))
-      .withColumn("_arrival_seq", lit(1L))
+      .withColumn(rowIdxCol, lit(1L))
       .withColumn("file_status", lit("reconciled"))
     val n2 = MergeSink.merge(spark, batch2, state)
     assert(n2 === 8) // one new key (Root), one replaced (a.pdf)
@@ -66,34 +67,33 @@ class SaltAndMergeSpec extends SparkSpec {
     assert(snapshot() === before)
   }
 
-  test("merge sink: seq-carrying state merges with a seq-less batch (and vice versa)") {
-    // r2 regression seam: a legacy-migrated state always materialized
-    // _arrival_seq while post-r2 pipeline batches don't carry it — the
-    // union must align schemas instead of throwing AnalysisException, and
-    // within the seq-less side the (file, sheet, row) triple must still
-    // decide same-key duplicates (not a null-vs-null coin flip).
+  test("merge sink: a state whose columns differ from the batch's is refused, naming the column") {
+    // e.g. a state written when `_arrival_seq` was an order override: a
+    // union would null-fill the column on one side, so the merge refuses
+    // before writing anything, in both directions
     val resolved = Pipeline.resolve(Enrich(Coerce(PipelineFixture.raw(spark))))
+    val batch = resolved.filter($"file_name" === "Root/Sub/a.pdf")
+      .withColumn("file_status", lit("never-lands"))
+    def snapshot(state: String): Map[String, Seq[Byte]] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(state))
+        .map(f => f.getPath -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    def refused(state: String, in: org.apache.spark.sql.DataFrame): Unit = {
+      val before = snapshot(state)
+      val err = intercept[IllegalStateException](MergeSink.merge(spark, in, state))
+      assert(err.getMessage.contains("_arrival_seq"), err.getMessage)
+      assert(snapshot(state) === before)
+    }
 
-    // direction 1: state WITH seq, batch WITHOUT
-    val state1 = Files.createTempDirectory("graft-merge-drift1").toString + "/state"
-    MergeSink.merge(spark, resolved.filter($"file_name" =!= "Root"), state1)
-    val seqless = resolved.filter($"file_name".isin("Root", "Root/Sub/a.pdf"))
-      .withColumn("file_status", lit("seqless-wins"))
-      .drop("_arrival_seq")
-    val n1 = MergeSink.merge(spark, seqless, state1)
-    assert(n1 === 8)
-    assert(spark.read.parquet(state1).filter($"file_name" === "Root/Sub/a.pdf")
-      .head.getAs[String]("file_status") === "seqless-wins")
+    val withSeq = Files.createTempDirectory("graft-merge-cols1").toString + "/state"
+    MergeSink.merge(spark, resolved.withColumn("_arrival_seq", col(rowIdxCol)), withSeq)
+    refused(withSeq, batch)
 
-    // direction 2: state WITHOUT seq, batch WITH
-    val state2 = Files.createTempDirectory("graft-merge-drift2").toString + "/state"
-    MergeSink.merge(spark, resolved.drop("_arrival_seq"), state2)
-    val seqful = resolved.filter($"file_name" === "Root/Sub/a.pdf")
-      .withColumn("_arrival_seq", lit(1L))
-      .withColumn("file_status", lit("seqful-wins"))
-    MergeSink.merge(spark, seqful, state2)
-    assert(spark.read.parquet(state2).filter($"file_name" === "Root/Sub/a.pdf")
-      .head.getAs[String]("file_status") === "seqful-wins")
+    val withoutSeq = Files.createTempDirectory("graft-merge-cols2").toString + "/state"
+    MergeSink.merge(spark, resolved, withoutSeq)
+    refused(withoutSeq, batch.withColumn("_arrival_seq", col(rowIdxCol)))
   }
 
   test("merge sink: a reserved (crashed-merge) sidecar total is recounted, not trusted") {

@@ -15,9 +15,9 @@ import graft.views.Analytic
 object PipelineFixture {
   /** (file_name, src_size, tgt_id, file_status, creation_serial) + meta. */
   private def rawRow(fn: String, size: String, id: String, status: String,
-      serial: String, src: String, seq: Long): Row =
+      serial: String, src: String, row: Long): Row =
     Row.fromSeq(Seq(fn, size, "", id, "", "", serial, "", "", "", "", "", "",
-      "", "", status, "", "", "", src, "Transfer Report", seq, seq))
+      "", "", status, "", "", "", src, "Transfer Report", row))
 
   def raw(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val rows = Seq(
@@ -51,23 +51,23 @@ class PipelineSpec extends SparkSpec {
 
   test("coerce: bigint strictness and serial dates") {
     val typed = Coerce(raw)
-    val bySeq = typed.orderBy(arrivalSeqCol).collect()
-    assert(bySeq(0).getAs[Long]("source_file_size") === 0L)
-    assert(bySeq(1).getAs[Any]("source_file_size") === null) // "" → null
-    assert(bySeq(3).getAs[Any]("source_file_size") === null) // "abc" → null
-    assert(bySeq(0).getAs[java.sql.Timestamp]("creation_time").toString
+    val byRow = typed.orderBy(rowIdxCol).collect()
+    assert(byRow(0).getAs[Long]("source_file_size") === 0L)
+    assert(byRow(1).getAs[Any]("source_file_size") === null) // "" → null
+    assert(byRow(3).getAs[Any]("source_file_size") === null) // "abc" → null
+    assert(byRow(0).getAs[java.sql.Timestamp]("creation_time").toString
       === "2023-03-15 12:00:00.0")
-    assert(bySeq(1).getAs[Any]("creation_time") === null) // serial 0 → null
-    assert(bySeq(3).getAs[Any]("creation_time") === null) // unparsable → null
+    assert(byRow(1).getAs[Any]("creation_time") === null) // serial 0 → null
+    assert(byRow(3).getAs[Any]("creation_time") === null) // unparsable → null
     // text columns: empty string preserved, never null
-    assert(bySeq(1).getAs[String]("source_account") === "")
+    assert(byRow(1).getAs[String]("source_account") === "")
   }
 
   test("upsert: last-writer-wins per (file_name, target_file_id)") {
     val r = resolved
     assert(r.count() === 8) // 10 raw rows, 2 dup keys collapse
     val a = r.filter($"file_name" === "Root/Sub/a.pdf").head
-    assert(a.getAs[String]("file_status") === "success") // seq 6 beat seq 3
+    assert(a.getAs[String]("file_status") === "success") // row 6 beat row 3
     assert(a.getAs[Long]("source_file_size") === 4096L)  // whole row replaced
     val root = r.filter($"file_name" === "Root").head
     assert(root.getAs[String]("file_status") === "resent") // JobB beat JobA
@@ -224,13 +224,13 @@ class PipelineSpec extends SparkSpec {
     // UNIQUE(file_name, target_file_id) sees no conflict — both survive
     val rows = Seq(
       Row.fromSeq(Seq("Dup/x.txt", "1", "", "", "", "", "", "", "", "", "", "", "",
-        "", "", "s1", "", "", "", "JobA.xlsx", "Transfer Report", 1L, 1L)),
+        "", "", "s1", "", "", "", "JobA.xlsx", "Transfer Report", 1L)),
       Row.fromSeq(Seq("Dup/x.txt", "2", "", "", "", "", "", "", "", "", "", "", "",
-        "", "", "s2", "", "", "", "JobA.xlsx", "Transfer Report", 2L, 2L)),
+        "", "", "s2", "", "", "", "JobA.xlsx", "Transfer Report", 2L)),
       Row.fromSeq(Seq("Dup/y.txt", "3", "", "77", "", "", "", "", "", "", "", "", "",
-        "", "", "s3", "", "", "", "JobA.xlsx", "Transfer Report", 3L, 3L)),
+        "", "", "s3", "", "", "", "JobA.xlsx", "Transfer Report", 3L)),
       Row.fromSeq(Seq("Dup/y.txt", "4", "", "77", "", "", "", "", "", "", "", "", "",
-        "", "", "s4", "", "", "", "JobA.xlsx", "Transfer Report", 4L, 4L)))
+        "", "", "s4", "", "", "", "JobA.xlsx", "Transfer Report", 4L)))
     val df = Upsert(Enrich(Coerce(
       spark.createDataFrame(sc.parallelize(rows), rawSchema))))
     assert(df.filter($"file_name" === "Dup/x.txt").count() === 2) // NULL ids: both kept

@@ -32,8 +32,8 @@ class StreamIngestSpec extends SparkSpec {
       Files.move(part.toPath, java.nio.file.Paths.get(src, name))
     }
     val fixture = graft.pipeline.PipelineFixture.raw(spark)
-    dropFile(fixture.filter(col("_arrival_seq") <= 5), "drop1.parquet")
-    dropFile(fixture.filter(col("_arrival_seq") > 5), "drop2.parquet")
+    dropFile(fixture.filter(col(graft.model.TransferSchema.rowIdxCol) <= 5), "drop1.parquet")
+    dropFile(fixture.filter(col(graft.model.TransferSchema.rowIdxCol) > 5), "drop2.parquet")
 
     def run(): Unit = {
       val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (batch, _) =>
@@ -100,46 +100,6 @@ class StreamIngestSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 3)
   }
 
-  test("windowed event counts: streaming result equals the batch oracle query") {
-    val srcDir = tmp("graft-events")
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .transform(Registry.microsTs)
-    events.write.mode("overwrite").parquet(srcDir)
-
-    val stream = spark.readStream.schema(events.schema).parquet(srcDir)
-    val agg = StreamIngest.windowedEventCounts(stream)
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("win_out").start()
-    q.processAllAvailable(); q.stop()
-
-    val got = spark.table("win_out")
-      .orderBy("window_start", "event_type")
-      .collect().map(_.toSeq).toSeq
-    val want = Registry.qEventWindows(spark, "/root/testdata/sf0.001")
-      .collect().map(_.toSeq).toSeq
-    assert(got === want)
-  }
-
-  test("sliding windows: streaming result equals the batch q_sliding_windows law") {
-    val srcDir = tmp("graft-events-slide")
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .transform(Registry.microsTs)
-    events.write.mode("overwrite").parquet(srcDir)
-
-    val stream = spark.readStream.schema(events.schema).parquet(srcDir)
-    val agg = StreamIngest.windowedEventCounts(stream, slide = "30 minutes")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("slide_out").start()
-    q.processAllAvailable(); q.stop()
-
-    val got = spark.table("slide_out")
-      .orderBy("window_start", "event_type")
-      .collect().map(_.toSeq).toSeq
-    val want = Registry.qSlidingWindows(spark, "/root/testdata/sf0.001")
-      .collect().map(_.toSeq).toSeq
-    assert(got === want)
-  }
-
   test("streaming DSIR scoring: narrow scorer on a stream equals the batch weights") {
     // the narrow scorer is stateless (one broadcast table, no shuffle), so
     // it must drop into a micro-batch unchanged — the scaladoc's
@@ -180,24 +140,6 @@ class StreamIngestSpec extends SparkSpec {
     val got = spark.table("dedup_out")
     assert(got.count() === events.count())
     assert(got.select("event_id").distinct().count() === got.count())
-  }
-
-  test("streaming content dedup: one survivor per fingerprint, same law as batch Dedup.exact") {
-    val srcDir = tmp("graft-dup-docs")
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
-    // ship every document twice — content state must drop the second copy
-    docs.union(docs).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(
-      docs.schema).parquet(srcDir)
-    val q = StreamIngest.dedupDocumentsByContent(stream).writeStream
-      .outputMode("append").format("memory").queryName("doc_dedup_out").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("doc_dedup_out")
-    // survivors = exactly the batch operator's distinct-fingerprint count
-    val want = graft.ops.Dedup.exact(docs, "doc_id", "text").count()
-    assert(got.count() === want)
-    assert(got.select("content_hash").distinct().count() === got.count())
   }
 
   test("mapGroupsWithState: running per-user totals equal the batch aggregate") {
@@ -250,38 +192,6 @@ class StreamIngestSpec extends SparkSpec {
     assert(want.nonEmpty, "fixture should produce at least one attribution pair")
   }
 
-  test("flatMapGroupsWithState: completed sessions emit exactly once, matching the batch law") {
-    val srcDir = tmp("graft-fmgws-events")
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .transform(Registry.microsTs)
-    // two time-ordered batches: batch 1's max ts sets the watermark that
-    // closes old sessions during batch 2
-    val cut = events.selectExpr("percentile(unix_micros(ts), 0.8)").head.getDouble(0).toLong
-    events.filter(unix_micros(col("ts")) <= cut)
-      .write.mode("overwrite").parquet(s"$srcDir/b1")
-    events.filter(unix_micros(col("ts")) > cut)
-      .write.mode("overwrite").parquet(s"$srcDir/b2")
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$srcDir/*")
-    val q = StreamIngest.completedUserSessions(spark, stream).writeStream
-      .outputMode("append").format("memory").queryName("fmgws_out").start()
-    q.processAllAvailable(); q.stop()
-
-    val got = spark.table("fmgws_out")
-      .select("user_id", "session_start", "session_end", "n_events")
-      .collect().map(_.toSeq).toSeq
-    assert(got.nonEmpty, "watermark advance between batches should close some sessions")
-    assert(got.distinct.size === got.size, "append mode must emit each session once")
-    // every emitted session must be a session of the BATCH gaps-and-islands
-    // law over the same events (same gap, same end = last + gap)
-    val batch = Registry.qUserSessions(spark, "/root/testdata/sf0.001")
-      .select("user_id", "session_start", "session_end", "n_events")
-      .collect().map(_.toSeq).toSet
-    val missing = got.filterNot(batch.contains)
-    assert(missing.isEmpty,
-      s"emitted sessions not in the batch law (first: ${missing.headOption})")
-  }
-
   test("user sessions: gap-based session windows produce bounded sessions") {
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(Registry.microsTs)
@@ -295,544 +205,5 @@ class StreamIngestSpec extends SparkSpec {
     }
     val total = sessions.agg(sum("n_events")).head.getLong(0)
     assert(total === events.count())
-  }
-
-  test("deduped ingest loop: store-known and in-batch dup content drops; replay lossless") {
-    import spark.implicits._
-    val store = tmp("graft-ingest-store")
-    val sink = tmp("graft-ingest-sink")
-    val src = tmp("graft-ingest-src")
-    // the store starts from an EMPTY initial corpus
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 1000L)
-    val b1 = Seq((1L, "alpha content"), (2L, "beta content"),
-      (3L, "alpha content"), // in-batch dup: lowest id survives
-      (4L, null.asInstanceOf[String]), (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    val stream = spark.readStream.schema(b1.schema).parquet(src)
-    val q = StreamIngest.runDedupedIngest(
-      stream, store, sink, "doc_id", "text", tmp("graft-ingest-ckp"))
-    q.processAllAvailable()
-    val b2 = Seq((10L, "alpha content"), // already ingested by batch 0
-      (11L, "gamma content"), (12L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable(); q.stop()
-    def sinkIds() = spark.read.parquet(sink).select("doc_id")
-      .as[Long].collect().toSet
-    // NULL-text rows ALL survive (no content = no duplicate, both laws)
-    assert(sinkIds() === Set(1L, 2L, 4L, 5L, 11L, 12L),
-      "batch 2 must dedup against batch 1's committed fingerprints")
-    // replay of a fully committed batch: marker short-circuits recompute
-    // (recomputing would see the batch's own fingerprints → empty, a LOSS),
-    // and the re-merge from committed survivors is an idempotent no-op
-    StreamIngest.ingestDedupedBatch(b2, 1L, store, sink, "doc_id", "text")
-    assert(sinkIds() === Set(1L, 2L, 4L, 5L, 11L, 12L), "replay mutated the sink")
-    // a later batch still dedups correctly after the replay
-    StreamIngest.ingestDedupedBatch(
-      Seq((20L, "gamma content"), (21L, "delta content")).toDF("doc_id", "text"),
-      2L, store, sink, "doc_id", "text")
-    assert(sinkIds() === Set(1L, 2L, 4L, 5L, 11L, 12L, 21L))
-    // fresh-checkpoint-over-old-sink collision: a DIFFERENT batch arriving
-    // under a committed id must fail loudly, never silently drop
-    val err = intercept[IllegalArgumentException] {
-      StreamIngest.ingestDedupedBatch(
-        Seq((99L, "entirely different content")).toDF("doc_id", "text"),
-        2L, store, sink, "doc_id", "text")
-    }
-    assert(err.getMessage.contains("fingerprint mismatch"))
-    assert(sinkIds() === Set(1L, 2L, 4L, 5L, 11L, 12L, 21L), "sink must be untouched")
-  }
-
-  test("quality-gated ingest: prefiltered junk reaches neither sink nor store; replay law intact") {
-    import spark.implicits._
-    val store = tmp("graft-qgate-store")
-    val sink = tmp("graft-qgate-sink")
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 1000L)
-    // the gopher top-2-gram coverage rule as the gate
-    val gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
-      df =>
-        val ok = org.apache.spark.sql.functions.udf { (t: String) =>
-          graft.functions.TextFns.gopherScala(t).top2CharFrac <= 0.2
-        }
-        df.filter(ok($"text"))
-    }
-    val junk = Array.fill(40)("buy now").mkString(" ")
-    // long enough that no single 2-gram covers 20% of the characters
-    val clean = (1 to 40).map(i => s"token$i word$i").mkString(" ")
-    val b1 = Seq((1L, clean), (2L, junk)).toDF("doc_id", "text")
-    StreamIngest.ingestDedupedBatch(b1, 0L, store, sink, "doc_id", "text", gate)
-    def sinkIds() = spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-    assert(sinkIds() === Set(1L), "the junk doc must be gated out")
-    // the junk content must NOT be in the store: a future CLEAN duplicate
-    // of gated junk is still junk (re-gated), but a future doc that merely
-    // exact-matches prior junk must not have been vaccinated into the corpus
-    val (_, fps) = graft.ops.RefStore.loadExact(spark, store)
-    assert(fps.count() === 1L, "only the survivor's fingerprint commits")
-    // replay of the committed batch (same raw content incl. junk): the
-    // marker short-circuits, fp computed over the RAW batch still matches
-    StreamIngest.ingestDedupedBatch(b1, 0L, store, sink, "doc_id", "text", gate)
-    assert(sinkIds() === Set(1L), "replay mutated the gated sink")
-    // fresh-checkpoint collision still detected on the RAW fingerprint
-    val err = intercept[IllegalArgumentException] {
-      StreamIngest.ingestDedupedBatch(
-        Seq((9L, "different content")).toDF("doc_id", "text"),
-        0L, store, sink, "doc_id", "text", gate)
-    }
-    assert(err.getMessage.contains("fingerprint mismatch"))
-  }
-
-  test("LM-gated ingest: the stored-model perplexity gate drops gibberish mid-stream") {
-    import spark.implicits._
-    val store = tmp("graft-lmgate-fpstore")
-    val lmStore = tmp("graft-lmgate-lmstore")
-    val sink = tmp("graft-lmgate-sink")
-    val src = tmp("graft-lmgate-src")
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 1000L)
-    // train the LM on fluent text; the gate threshold sits between the
-    // fluent docs' avg_nll and the scrambled doc's
-    val fluent = "the cat sat on the mat and the dog sat on the rug"
-    graft.ops.RefStore.writeLmModel(
-      Seq.fill(5)(fluent).toDF("text"), "text", lmStore)
-    val scores = graft.ops.LangModel.bigramNllScoreStored(
-      Seq((1L, fluent), (2L, "rug mat the dog on cat sat the"))
-        .toDF("doc_id", "text"), "doc_id", "text", lmStore)
-      .select($"doc_id", $"avg_nll").as[(Long, Double)].collect().toMap
-    val thr = (scores(1L) + scores(2L)) / 2.0
-    assert(scores(1L) < thr && thr < scores(2L), s"degenerate threshold: $scores")
-    val b1 = Seq(
-      (1L, fluent),
-      (2L, "rug mat the dog on cat sat the"), // scrambled → gated
-      (3L, null.asInstanceOf[String])) // NULL text scores 0 → passes the LM gate
-      .toDF("doc_id", "text")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    val stream = spark.readStream.schema(b1.schema).parquet(src)
-    val q = StreamIngest.runDedupedIngest(
-      stream, store, sink, "doc_id", "text", tmp("graft-lmgate-ckp"),
-      prefilter = graft.ops.LangModel.lmGate(lmStore, "doc_id", "text", thr))
-    q.processAllAvailable(); q.stop()
-    def sinkIds() = spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-    assert(sinkIds() === Set(1L, 3L), "scrambled doc must be LM-gated out")
-    // gated content is NOT vaccinated into the fingerprint store
-    val (_, fps) = graft.ops.RefStore.loadExact(spark, store)
-    assert(fps.count() === 1L, "only the scored survivor's non-null fingerprint commits")
-    // replay law intact with the LM gate in place
-    StreamIngest.ingestDedupedBatch(b1, 0L, store, sink, "doc_id", "text",
-      graft.ops.LangModel.lmGate(lmStore, "doc_id", "text", thr))
-    assert(sinkIds() === Set(1L, 3L), "replay mutated the LM-gated sink")
-  }
-
-  test("legacy sink migration: a pre-protocol _BATCH_FP inside the batch dir is honored, not refused") {
-    import spark.implicits._
-    val store = tmp("graft-legacy-store")
-    val sink = tmp("graft-legacy-sink")
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 1000L)
-    val b = Seq((1L, "legacy content one"), (2L, "legacy content two")).toDF("doc_id", "text")
-    StreamIngest.ingestDedupedBatch(b, 0L, store, sink, "doc_id", "text")
-    // rewrite the sink to the OLD protocol: fp inside the batch dir
-    val sibling = java.nio.file.Paths.get(sink, "_BATCH_FP-000000")
-    val legacy = java.nio.file.Paths.get(sink, "batch=000000", "_BATCH_FP")
-    Files.move(sibling, legacy)
-    // replay must migrate the legacy fp and accept the committed sink
-    StreamIngest.ingestDedupedBatch(b, 0L, store, sink, "doc_id", "text")
-    assert(Files.exists(sibling), "migration must restore the sibling fp")
-    assert(spark.read.parquet(sink).count() === 2)
-    // and the collision guard still fires on migrated sinks
-    val err = intercept[IllegalArgumentException] {
-      StreamIngest.ingestDedupedBatch(
-        Seq((9L, "different")).toDF("doc_id", "text"), 0L, store, sink, "doc_id", "text")
-    }
-    assert(err.getMessage.contains("fingerprint mismatch"))
-  }
-
-  test("second writer on the shared store: the ingest batch fails loudly; break-and-retry completes") {
-    import spark.implicits._
-    val store = tmp("graft-lease-store")
-    val sink = tmp("graft-lease-sink")
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 100L)
-    // another stream's merge is mid-flight on the same store: its lease
-    // must make OUR commit throw instead of racing the bloom RMW
-    java.nio.file.Files.write(java.nio.file.Paths.get(store, "_LEASE"),
-      "other-stream@elsewhere/thread-1".getBytes("UTF-8"))
-    val b = Seq((1L, "alpha content"), (2L, "beta content")).toDF("doc_id", "text")
-    val err = intercept[IllegalStateException] {
-      StreamIngest.ingestDedupedBatch(b, 0L, store, sink, "doc_id", "text")
-    }
-    assert(err.getMessage.contains("write-leased"))
-    // the batch landed in the sink but did NOT merge; after the dead lease
-    // is broken, the replay re-commits from the committed survivors and the
-    // loop continues exactly-once
-    graft.ops.RefStore.breakLease(spark, store)
-    StreamIngest.ingestDedupedBatch(b, 0L, store, sink, "doc_id", "text")
-    StreamIngest.ingestDedupedBatch(
-      Seq((3L, "alpha content"), (4L, "gamma content")).toDF("doc_id", "text"),
-      1L, store, sink, "doc_id", "text")
-    assert(spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-      === Set(1L, 2L, 4L),
-      "batch 1 must dedup against the retried batch 0's committed store")
-  }
-
-  test("maintenance coexistence: compact runs mid-stream; every micro-batch completes with exact survivors") {
-    import spark.implicits._
-    val store = tmp("graft-coexist-store")
-    val sink = tmp("graft-coexist-sink")
-    val src = tmp("graft-coexist-src")
-    graft.ops.RefStore.writeExact(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", store,
-      expectedItems = 1000L)
-    val b1 = Seq((1L, "alpha content"), (2L, "beta content")).toDF("doc_id", "text")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    // autoCompactAfter=2: the stream ALSO auto-compacts its own store once
-    // the fingerprint family crosses two commit units — unattended cadence
-    val q = StreamIngest.runDedupedIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      store, sink, "doc_id", "text", tmp("graft-coexist-ckp"),
-      autoCompactAfter = 2)
-    q.processAllAvailable()
-    // a StoreAdmin compact in the micro-batch gap: with its own bounded
-    // wait it queues behind any mid-flight merge; answers must not change
-    graft.ops.RefStore.compact(spark, store, leaseWaitMs = 30000L)
-    // a compactor is LIVE (lease held) when the next micro-batch lands:
-    // the batch's store commit must WAIT it out, not kill the query
-    val lease = java.nio.file.Paths.get(store, "_LEASE")
-    java.nio.file.Files.write(lease,
-      "storeadmin@elsewhere/thread-1".getBytes("UTF-8"))
-    val releaser = new Thread(() => {
-      Thread.sleep(500L); java.nio.file.Files.delete(lease); ()
-    })
-    releaser.start()
-    val b2 = Seq((10L, "alpha content"), // dup of batch 1 via the store
-      (11L, "gamma content")).toDF("doc_id", "text")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    // would rethrow as StreamingQueryException if the merge failed fast
-    q.processAllAvailable()
-    releaser.join()
-    // a batch AFTER the maintenance window still dedups against everything
-    val b3 = Seq((20L, "gamma content"), (21L, "delta content")).toDF("doc_id", "text")
-    b3.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable(); q.stop()
-    assert(spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-      === Set(1L, 2L, 11L, 21L),
-      "all three micro-batches must complete with exact survivor counts " +
-        "despite the compacts and the held lease")
-  }
-
-  test("cdc-gated ingest loop: cross-batch passage restatement drops; novel, partial and NULL rows survive; replay") {
-    import spark.implicits._
-    val store = tmp("graft-cdcgate-store")
-    val sink = tmp("graft-cdcgate-sink")
-    val src = tmp("graft-cdcgate-src")
-    graft.ops.RefStore.writeCdcChunks(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", store)
-    val passage = (1 to 120).map(i => s"shared$i").mkString(" ")
-    val other = (1 to 120).map(i => s"other$i").mkString(" ")
-    // batch 0 hits the EMPTY store: everything (incl. NULL text) survives
-    val b1 = Seq((1L, passage), (2L, other), (3L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    val q = StreamIngest.runCdcGatedIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      store, sink, "doc_id", "text", tmp("graft-cdcgate-ckp"))
-    q.processAllAvailable()
-    // batch 1: a pure restatement of batch 0's passage (share 1.0 →
-    // dropped), a HALF-novel doc (share < 0.5 → survives), a novel doc,
-    // and another NULL-text row
-    val novel = (1 to 150).map(i => s"novel$i").mkString(" ")
-    val b2 = Seq(
-      (10L, passage),
-      (11L, passage.split(" ").take(30).mkString(" ") + " " + novel),
-      (12L, (1 to 120).map(i => s"fresh$i").mkString(" ")),
-      (13L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable(); q.stop()
-    def ids() = spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-    assert(ids() === Set(1L, 2L, 3L, 11L, 12L, 13L),
-      "the full restatement must drop; partial restatement, novel and NULL rows survive")
-    // replay of the committed batch: skeleton marker short-circuits; the
-    // chunk-hash re-merge is absorbed by consumer re-distinct
-    StreamIngest.ingestCdcGatedBatch(b2, 1L, store, sink, "doc_id", "text",
-      maxShareFrac = 0.5)
-    assert(ids() === Set(1L, 2L, 3L, 11L, 12L, 13L), "replay mutated the sink")
-    // a later batch screens against what the SURVIVORS committed: doc 11's
-    // novel tail is now stored content — restating it drops
-    StreamIngest.ingestCdcGatedBatch(
-      Seq((20L, novel)).toDF("doc_id", "text"),
-      2L, store, sink, "doc_id", "text", maxShareFrac = 0.5)
-    assert(ids() === Set(1L, 2L, 3L, 11L, 12L, 13L),
-      "restating a survivor's content after the replay must still drop")
-  }
-
-  test("near-dup ingest loop: in-batch collapse, cross-batch drops, NULL text, replay — through the real stream") {
-    import spark.implicits._
-    val store = tmp("graft-neardup-store")
-    val sink = tmp("graft-neardup-sink")
-    val src = tmp("graft-neardup-src")
-    graft.ops.RefStore.writeMinhash(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", store)
-    val base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet hills"
-    val edit1 = base.replace("rain", "snow")   // near-dup of base
-    val edit2 = base.replace("quiet", "silent") // another near-dup
-    val other = "completely unrelated text about spark shuffles partitions joins and broadcast exchanges here"
-    // batch 0: base + its in-batch near-dup + one unrelated doc + TWO
-    // NULL-text docs — the pair of empty signatures collides in every LSH
-    // band, the exact configuration that crashed the verify's 0/0 before
-    // the degenerate-pair exclusion
-    val b1 = Seq((1L, base), (2L, edit1), (3L, other),
-      (4L, null.asInstanceOf[String]), (5L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    val q = StreamIngest.runNearDupIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      store, sink, "doc_id", "text", tmp("graft-neardup-ckp"), threshold = 0.5)
-    q.processAllAvailable()
-    // batch 1: a near-dup of the STORED survivor + a new doc + ANOTHER
-    // NULL-text doc — its empty signature meets the stored empty
-    // signatures of docs 4/5, the cross-batch arm of the 0/0 crash
-    val b2 = Seq((10L, edit2),
-      (11L, "fresh content with its own vocabulary entirely distinct from previous documents in every way"),
-      (12L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable(); q.stop()
-    def ids() = spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
-    // NULL text: no n-gram content, so NOTHING near-duplicates it — every
-    // empty doc survives, matching the exact tier's no-content law
-    assert(ids() === Set(1L, 3L, 4L, 5L, 11L, 12L),
-      "in-batch cluster keeps id 1; stored near-dup drops 10; NULLs + new docs survive")
-    // replay of a committed batch (the skeleton's marker + fp protocol):
-    // sink untouched, store commit idempotent by consumer re-distinct
-    StreamIngest.ingestNearDupBatch(b2, 1L, store, sink, "doc_id", "text",
-      threshold = 0.5)
-    assert(ids() === Set(1L, 3L, 4L, 5L, 11L, 12L), "replay mutated the sink")
-    // a later batch still screens against the grown store after the replay
-    StreamIngest.ingestNearDupBatch(
-      Seq((20L, base.replace("hills", "plains"))).toDF("doc_id", "text"),
-      2L, store, sink, "doc_id", "text", threshold = 0.5)
-    assert(ids() === Set(1L, 3L, 4L, 5L, 11L, 12L),
-      "near-dup of the stored survivor must drop after replay")
-  }
-
-  test("attributed dedup ingest: every drop links to its absorber; closure survives replay") {
-    import spark.implicits._
-    val store = tmp("graft-attr-store")
-    val sink = tmp("graft-attr-sink")
-    graft.ops.RefStore.initAttributedDedupStore(spark, store, "doc_id", "text",
-      expectedItems = 1000L)
-    // batch 0: in-batch dup (2 of 1 — case/whitespace variant), NULL text
-    val b1 = Seq((1L, "alpha content"), (2L, "Alpha  Content"),
-      (3L, "beta content"), (4L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    StreamIngest.ingestAttributedBatch(b1, 0L, store, sink, "doc_id", "text")
-    // batch 1: cross-store dup (10 of 1), fresh in-batch dup pair (12 of 11)
-    val b2 = Seq((10L, "ALPHA CONTENT"), (11L, "gamma content"),
-      (12L, "GAMMA content"))
-      .toDF("doc_id", "text")
-    StreamIngest.ingestAttributedBatch(b2, 1L, store, sink, "doc_id", "text")
-    def sinkIds() = spark.read.parquet(sink).select("doc_id")
-      .as[Long].collect().toSet
-    def canon() = graft.ops.RefStore.loadCanonicalMap(spark, store)
-      .as[(Long, Long)].collect().toMap
-    assert(sinkIds() === Set(1L, 3L, 4L, 11L))
-    assert(canon() === Map(2L -> 1L, 10L -> 1L, 12L -> 11L),
-      s"every dropped duplicate must link to its absorber: ${canon()}")
-    // replay of a committed batch: sink, registry and map all unchanged
-    StreamIngest.ingestAttributedBatch(b2, 1L, store, sink, "doc_id", "text")
-    assert(sinkIds() === Set(1L, 3L, 4L, 11L), "replay mutated the sink")
-    assert(canon() === Map(2L -> 1L, 10L -> 1L, 12L -> 11L),
-      "replay mutated the canonical map")
-    // batch 2 chains onto a batch-1 survivor: closure must land on 11
-    StreamIngest.ingestAttributedBatch(
-      Seq((20L, "gamma  content"), (21L, "delta content")).toDF("doc_id", "text"),
-      2L, store, sink, "doc_id", "text")
-    assert(canon() === Map(2L -> 1L, 10L -> 1L, 12L -> 11L, 20L -> 11L))
-    assert(sinkIds() === Set(1L, 3L, 4L, 11L, 21L))
-    // out-of-order arrival: id 0 — SMALLER than survivor 1 — duplicates
-    // stored content; the closure's root law must link 0 → 1, never
-    // invert the component onto the dropped smaller id
-    StreamIngest.ingestAttributedBatch(
-      Seq((0L, "alpha CONTENT")).toDF("doc_id", "text"),
-      3L, store, sink, "doc_id", "text")
-    assert(canon() === Map(0L -> 1L, 2L -> 1L, 10L -> 1L, 12L -> 11L, 20L -> 11L),
-      s"a late smaller id must map TO the survivor: ${canon()}")
-    assert(sinkIds() === Set(1L, 3L, 4L, 11L, 21L))
-    // the remap idiom: every corpus id resolves to a surviving canonical
-    val all = Seq(0L, 1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L, 21L)
-    val m = canon()
-    val resolved = all.map(id => m.getOrElse(id, id)).toSet
-    assert(resolved === Set(1L, 3L, 4L, 11L, 21L),
-      "remapping the full corpus must land exactly on the sink survivors")
-    // fsck stays green across all three families the loop maintains
-    val checks = graft.ops.RefStore.fsck(spark, store)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2)).toMap
-    assert(checks(("owner", "registry_non_null_md5_fp")) === true)
-    assert(checks(("canon", "pairs_non_null_no_selfmap")) === true)
-    assert(checks(("exact", "bloom_superset_of_fingerprints")) === true)
-  }
-
-  test("pending-merge reconciliation: losing root physically merges, worklist drains, replay converges") {
-    import spark.implicits._
-    val store = tmp("graft-recon-store")
-    val sink = tmp("graft-recon-sink")
-    graft.ops.RefStore.initAttributedDedupStore(spark, store, "doc_id", "text",
-      expectedItems = 1000L)
-    // batch 0 through the REAL loop: owner 1 registers "alpha content"
-    StreamIngest.ingestAttributedBatch(
-      Seq((1L, "alpha content"), (2L, "beta content")).toDF("doc_id", "text"),
-      0L, store, sink, "doc_id", "text")
-    // simulate the retry-window race the worklist exists for: a parallel
-    // loop landed doc 3 (same content) in its own committed batch dir and
-    // registered it as a second owner, and a dup (5) got attributed to
-    // EACH owner by the two racing attributions
-    val race = Seq((3L, "ALPHA CONTENT")).toDF("doc_id", "text")
-    race.write.parquet(s"$sink/batch=000001")
-    graft.ops.RefStore.mergeFpOwners(
-      race.select(graft.functions.TextFns.fingerprintMd5($"text").as("fp"),
-        $"doc_id".as("owner_id")), "fp", "owner_id", store)
-    graft.ops.RefStore.mergeCanonicalMap(
-      Seq((5L, 3L)).toDF("dup_id", "canon_id"), "dup_id", "canon_id", store)
-    graft.ops.RefStore.mergeCanonicalMap(
-      Seq((5L, 1L)).toDF("dup_id", "canon_id"), "dup_id", "canon_id", store)
-    def sinkIds() = spark.read.parquet(sink).select("doc_id")
-      .as[Long].collect().toSet
-    def canon() = graft.ops.RefStore.loadCanonicalMap(spark, store)
-      .as[(Long, Long)].collect().toMap
-    def worklist() = graft.ops.RefStore.loadPendingMerges(spark, store)
-      .as[(Long, Long)].collect().toSet
-    // pre-reconcile: component {1,3,5} has TWO roots — 1 wins the map,
-    // 3 is mapped yet still physically present (the pending contract)
-    assert(worklist() === Set((1L, 3L)))
-    assert(canon() === Map(5L -> 1L, 3L -> 1L))
-    assert(sinkIds() === Set(1L, 2L, 3L))
-    // reconcile: doc 3 physically merges (content-identical ⇒ deletion),
-    // the resolution pair drains the worklist, the MAP IS UNCHANGED
-    val report = StreamIngest.reconcilePendingMerges(spark, store, sink, "doc_id")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(report === Set((1L, 3L, 1L)), s"report: $report")
-    assert(sinkIds() === Set(1L, 2L), "losing root must leave the sink")
-    assert(canon() === Map(5L -> 1L, 3L -> 1L),
-      "consumers' remap must be identical before and after reconciliation")
-    assert(worklist() === Set.empty, "worklist must drain")
-    // replay: a second run is a no-op on every surface
-    val replay = StreamIngest.reconcilePendingMerges(spark, store, sink, "doc_id")
-    assert(replay.count() === 0L)
-    assert(sinkIds() === Set(1L, 2L) && canon() === Map(5L -> 1L, 3L -> 1L))
-    // the loop keeps working against the reconciled store: a late copy of
-    // the merged content still drops and links to the surviving canonical
-    StreamIngest.ingestAttributedBatch(
-      Seq((7L, "alpha  CONTENT")).toDF("doc_id", "text"),
-      2L, store, sink, "doc_id", "text")
-    assert(sinkIds() === Set(1L, 2L))
-    assert(canon() === Map(5L -> 1L, 3L -> 1L, 7L -> 1L))
-  }
-
-  test("pending-merge reconciliation: crash prefixes converge (phase-1-only crash, interrupted swap)") {
-    import spark.implicits._
-    val store = tmp("graft-recon2-store")
-    val sink = tmp("graft-recon2-sink")
-    graft.ops.RefStore.initAttributedDedupStore(spark, store, "doc_id", "text",
-      expectedItems = 1000L)
-    StreamIngest.ingestAttributedBatch(
-      Seq((1L, "alpha content")).toDF("doc_id", "text"),
-      0L, store, sink, "doc_id", "text")
-    Seq((3L, "ALPHA CONTENT")).toDF("doc_id", "text")
-      .write.parquet(s"$sink/batch=000001")
-    graft.ops.RefStore.mergeCanonicalMap(
-      Seq((5L, 3L), (5L, 1L)).toDF("dup_id", "canon_id"),
-      "dup_id", "canon_id", store)
-    // CRASH PREFIX A — phase 1 completed (doc 3 already gone from the
-    // sink) but the crash hit before the map update: the rerun must still
-    // drain the worklist, reporting removed_rows = 0
-    val fs = new org.apache.hadoop.fs.Path(sink)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$sink/batch=000001")
-    Seq.empty[(Long, String)].toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(live.toString)
-    // CRASH PREFIX B on top: a marked-complete tmp from an interrupted
-    // swap of ANOTHER batch dir (delete→rename window) must promote, and
-    // an unmarked tmp must be collected as garbage
-    val orphanLive = new org.apache.hadoop.fs.Path(s"$sink/batch=000002")
-    val orphanTmp = new org.apache.hadoop.fs.Path(s"$sink/.batch=000002.reconcile")
-    Seq((9L, "gamma content")).toDF("doc_id", "text")
-      .write.parquet(orphanTmp.toString)
-    fs.create(new org.apache.hadoop.fs.Path(orphanTmp, "_RECONCILE_DONE"), true).close()
-    assert(!fs.exists(orphanLive))
-    val garbage = new org.apache.hadoop.fs.Path(s"$sink/.batch=000009.reconcile")
-    Seq((99L, "junk")).toDF("doc_id", "text").write.parquet(garbage.toString)
-    val report = StreamIngest.reconcilePendingMerges(spark, store, sink, "doc_id")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(report === Set((1L, 3L, 0L)),
-      s"already-removed root must still discharge with removed_rows 0: $report")
-    assert(graft.ops.RefStore.loadPendingMerges(spark, store).count() === 0L)
-    assert(fs.exists(orphanLive) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(orphanLive, "_RECONCILE_DONE")),
-      "marked-complete tmp must promote to the live batch dir")
-    assert(!fs.exists(orphanTmp) && !fs.exists(garbage),
-      "tmps must not survive recovery")
-    val sinkIds = spark.read.parquet(sink).select("doc_id")
-      .as[Long].collect().toSet
-    assert(sinkIds === Set(1L, 9L))
-  }
-
-  test("drift-gated ingest: in-distribution admits + grows baseline; shifted quarantines; replay converges") {
-    import spark.implicits._
-    val store = tmp("graft-driftgate-store")
-    val sink = tmp("graft-driftgate-sink")
-    val quarantine = tmp("graft-driftgate-q")
-    val src = tmp("graft-driftgate-src")
-    // baseline: lengths clustered around 100-500
-    val base = (1L to 200L).map(i => (i, 100L + (i % 5) * 100L))
-      .toDF("doc_id", "n_chars")
-    graft.ops.RefStore.writeValueCounts(base, "n_chars", store)
-    val baselineMass = graft.ops.RefStore.loadValueCounts(spark, store)
-      .agg(org.apache.spark.sql.functions.sum("_c")).head.getLong(0)
-    // batch 0: same distribution → admitted, baseline grows
-    val b1 = (1000L to 1099L).map(i => (i, 100L + (i % 5) * 100L))
-      .toDF("doc_id", "n_chars")
-    b1.coalesce(1).write.mode("append").parquet(src)
-    val q = StreamIngest.runDriftGatedIngest(
-      spark.readStream.schema(b1.schema).parquet(src),
-      store, sink, quarantine, "n_chars", tmp("graft-driftgate-ckp"))
-    q.processAllAvailable()
-    // batch 1: wildly shifted lengths (50k+) → quarantined, baseline frozen
-    val b2 = (2000L to 2099L).map(i => (i, 50000L + (i % 5) * 1000L))
-      .toDF("doc_id", "n_chars")
-    b2.coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable(); q.stop()
-    def ids(dir: String) = spark.read.parquet(dir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(ids(sink) === (1000L to 1099L).toSet,
-      "the in-distribution batch must be the only admitted one")
-    assert(ids(quarantine) === (2000L to 2099L).toSet,
-      "the shifted batch must land in the quarantine worklist")
-    val massAfter = graft.ops.RefStore.loadValueCounts(spark, store)
-      .agg(org.apache.spark.sql.functions.sum("_c")).head.getLong(0)
-    assert(massAfter === baselineMass + 100L,
-      "baseline must absorb the admitted batch's counts and ONLY those")
-    // replay of the quarantined batch: still shifted → still quarantined,
-    // exactly ONE copy, counts still untouched
-    StreamIngest.ingestDriftGatedBatch(b2, 1L, store, sink, quarantine,
-      "n_chars", maxPsiPico = 250000000000L, binWidth = 100L)
-    assert(ids(quarantine) === (2000L to 2099L).toSet)
-    assert(graft.ops.RefStore.loadValueCounts(spark, store)
-      .agg(org.apache.spark.sql.functions.sum("_c")).head.getLong(0)
-      === baselineMass + 100L, "a quarantined replay must not grow the baseline")
-    // replay of the ADMITTED batch: counts merge is batch-scoped —
-    // re-running it must not double-count
-    StreamIngest.ingestDriftGatedBatch(b1, 0L, store, sink, quarantine,
-      "n_chars", maxPsiPico = 250000000000L, binWidth = 100L)
-    assert(graft.ops.RefStore.loadValueCounts(spark, store)
-      .agg(org.apache.spark.sql.functions.sum("_c")).head.getLong(0)
-      === baselineMass + 100L, "an admitted replay must be idempotent")
   }
 }
