@@ -132,11 +132,10 @@ object Verify {
     // below its floor — the driver then records the query as failed.
     // Floors are a RATCHET pinned 0.10 under the deterministic (seeded)
     // values this very gate measures at sf0.01 — lsh 0.700, ivf 0.700,
-    // pq 1.000, ivf_store 0.700, pq_store 1.000 (r10 run; the AnnRecall
-    // probe sweeps the same recalls against nprobe/bands at sf0.1, and
-    // the ivf_store nprobe sweep is documented at Similarity.scala's
-    // ivfTopKStored). A floor looser than 0.15 under measured would let
-    // a real recall regression hide inside the slack.
+    // pq 1.000, ivf_store 0.700, pq_store 1.000; the ivf_store nprobe
+    // sweep is documented at Similarity.scala's ivfTopKStored. A floor
+    // looser than 0.15 under measured would let a real recall regression
+    // hide inside the slack.
     try {
       import org.apache.spark.sql.functions.col
       val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")

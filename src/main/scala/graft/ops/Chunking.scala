@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object Chunking {
 
   /** Span table: (idCol, chunk_idx, chunk_start, chunk_len[, chunk_text]).
-    * Text extraction is optional — at 100 TB the span table alone is often
+    * Text extraction is optional — at scale the span table alone is often
     * what downstream stages join on.
     */
   def charChunks(df: DataFrame, idCol: String, textCol: String,

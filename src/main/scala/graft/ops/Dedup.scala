@@ -66,7 +66,7 @@ object Dedup {
 
   /** Duplicate-inflation report per stratum: how much of each source's
     * apparent volume is exact-duplicate re-counting? The capacity-planning
-    * twin of [[exact]] — before a 100 TB dedup pass is scheduled, this is
+    * twin of [[exact]] — before a corpus-wide dedup pass is scheduled, this is
     * the report that says which sources pay for it ("src7 is 40% duplicate
     * tokens") and what the corpus's true unique size is.
     *
@@ -148,7 +148,7 @@ object Dedup {
       .drop("_ih")
   }
 
-  /** Bloom-prefiltered cross-corpus exact dedup — the 100 TB scale path for
+  /** Bloom-prefiltered cross-corpus exact dedup — the scale path for
     * [[exactAgainst]]. Builds a Bloom filter over the reference corpus's
     * distinct content fingerprints (`DataFrameStatFunctions.bloomFilter` — a
     * mergeable map-side `treeAggregate`, one pass, bounded driver memory:
@@ -175,7 +175,7 @@ object Dedup {
     *
     * Cost tradeoff, stated plainly: the two branches are two consumers of
     * the incoming frame, so the (column-pruned) incoming scan and its
-    * fingerprint md5 run TWICE. That is deliberate — caching 100 TB is not
+    * fingerprint md5 run TWICE. That is deliberate — caching the corpus is not
     * an option, and fusing the branches into one anti-join with a
     * `might AND hash-equal` condition would put EVERY incoming row back
     * through the exchange, which is exactly the cost this operator exists
@@ -203,7 +203,7 @@ object Dedup {
     * artifact — the incremental-ingest fast path: batch N+1 loads the
     * bloom + distinct-fingerprint parquet the earlier batches committed,
     * so the reference CORPUS is never re-scanned (the per-call
-    * treeAggregate rebuild is exactly the 100 TB cost the bloom path
+    * treeAggregate rebuild is exactly the corpus-sized cost the bloom path
     * exists to avoid). Same result as [[exactAgainst]] run against every
     * document whose fingerprints the store holds.
     */
@@ -691,7 +691,7 @@ object Dedup {
     *     runs this profile (no honesty regression).
     *   - `"xxhash64"` (the PRODUCTION profile): Spark's builtin
     *     xxhash64 (XXH64, seed 42) — the codegen'd non-cryptographic
-    *     hash. At 100 TB a cryptographic digest per token over the whole
+    *     hash. At scale a cryptographic digest per token over the whole
     *     corpus is a real CPU tax paid only for oracle replayability
     *     (the r11 verdict's adjudication); production dedup pipelines
     *     flip this flag and keep the identical law/banding/verify shape.
@@ -957,7 +957,7 @@ object Dedup {
     * the fraction reads "share of matchable content", not "share of all
     * chunks". Scale shape: chunking is narrow; the
     * overlap test is ONE hash-partitioned equi join on the chunk hash
-    * against the reference's distinct chunk set (at 100 TB that set is a
+    * against the reference's distinct chunk set (at scale that set is a
     * persisted artifact — the [[graft.ops.RefStore]] fingerprint
     * discipline applies verbatim to chunk hashes).
     */
@@ -971,7 +971,7 @@ object Dedup {
 
   /** [[cdcChunkOverlap]] against a PERSISTED reference chunk-hash set
     * ([[RefStore.writeCdcChunks]] / mergeCdcChunks) — the incremental form
-    * the live variant's scaladoc promises at 100 TB: the reference corpus
+    * the live variant's scaladoc promises at scale: the reference corpus
     * chunks once per store commit; each ingest batch chunks only ITSELF
     * and equi-joins the loaded hash frame. The qualification law
     * (minTokens) comes from the store's meta, so query and artifact can

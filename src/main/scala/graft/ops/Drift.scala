@@ -32,7 +32,7 @@ import graft.functions.TextFns
   * one hash equi-join keyed on the token, and broadcasts of the bounded
   * per-stratum count frame (|strata| rows) and the 1-row corpus total.
   * Nothing is quadratic; no driver state. Products are computed in
-  * DECIMAL(38,0) (HUGEINT on the oracle side): at 100 TB, c_t·N_s can pass
+  * DECIMAL(38,0) (HUGEINT on the oracle side): at scale, c_t·N_s can pass
   * 2^63 (c_t ≤ N ≈ 10^13 ⇒ products ≤ 10^26), which int64 cannot hold but
   * 38 digits can.
   */
@@ -639,7 +639,7 @@ object Drift {
         first(col("_n") - col("_ns")).as("n_rest"),
         first(col("_nb")).as("n_bins"),
         // n_s·n_r as a double PRODUCT (not a long multiply — it
-        // overflows BIGINT at 100 TB row counts under ANSI)
+        // overflows BIGINT at corpus-scale row counts under ANSI)
         when(first(col("_n") - col("_ns")) > 0L,
           round(sum(col("_term")).cast("double")
             / (first(col("_ns")).cast("double")

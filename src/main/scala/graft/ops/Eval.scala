@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Model-evaluation metrics for curation pipelines: a quality/toxicity
-  * filter is a scoring model, and before its threshold gates a 100 TB
+  * filter is a scoring model, and before its threshold gates a large
   * corpus you measure how well the score separates labeled positives from
   * negatives. AUC here is the exact Mann-Whitney rank statistic
   * (probability a random positive outscores a random negative, ties at
@@ -1077,7 +1077,7 @@ object Eval {
     * distance (Spark's levenshtein counts codepoints, DuckDB's counts
     * BYTES — on pure ASCII they agree exactly), and the comparison runs
     * on `prefixLen`-char prefixes (edit distance is O(len²) per row — a
-    * capped prefix keeps per-row cost a CONSTANT at 100 TB, the pqScan
+    * capped prefix keeps per-row cost a CONSTANT at scale, the pqScan
     * boundedness posture applied to a quadratic string kernel).
     *
     * Exact law: the edit count and prefix length are exact integers;
@@ -3125,7 +3125,7 @@ object Eval {
     *
     * Exact law on the shared [[pageTrendL]] scaffold plus ONE
     * [[PrefixSum.inclusive]] pass over the block-range frequency table
-    * (ranges of 100 TB of blocks never sort in one task): with doubled
+    * (the block ranges of a large corpus never sort in one task): with doubled
     * within-block midranks mr2, doubled cross-block range midranks Q2,
     * and S4 = Q2·(mr2 − (k+1)) (×4-scaled, exact integers),
     *
@@ -3560,7 +3560,7 @@ object Eval {
     val sig = nd * (nd + 1.0) / 12.0 - tieD / (12.0 * (nd - 1.0))
     // .doubleValue.toLong, NOT .longValue: the faithful replay of
     // Spark's round(x).cast(long) past ~2^53 truncates the ROUNDED
-    // DOUBLE (the Spectral.scala / BlockRankScale replay law —
+    // DOUBLE (the Spectral.scala replay law —
     // valueOf's shortest-decimal digits diverge in the last ulps)
     def roundSpark(x: Double): Long =
       java.math.BigDecimal.valueOf(x)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * what the oracle pins), and bounded: ranks stay in
   * [baseMicro, n·initMicro].
   *
-  * Scale shape (100 TB): the working set is one (node, rank) row per
+  * Scale shape: the working set is one (node, rank) row per
   * vertex and the edge list with its out-degree riding along — both
   * hash-partitioned on the join key, so each round is one shuffle join
   * edges⋈ranks plus one hash aggregate by destination (partial aggregation
@@ -1005,7 +1005,7 @@ object Graph {
     *
     * Exact integer law: with M directed copies and endpoint degrees
     * (j, k) per copy, the moments Σj, Σjk, Σj² are exact integers
-    * (products in DECIMAL(38,0) — a degree² sum over a 100 TB edge set
+    * (products in DECIMAL(38,0) — a degree² sum over a large edge set
     * outgrows BIGINT); the correlation is then ONE fixed double chain
     * `(Σjk/M − (Σj/M)²) / (Σj²/M − (Σj/M)²)`, NULL for a
     * degree-regular graph (denominator 0), quantized to picos.

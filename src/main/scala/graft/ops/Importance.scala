@@ -31,7 +31,7 @@ import graft.functions.TextFns
   *  - document weight = Σ over token OCCURRENCES of the bucket's
   *    micro-log-ratio; a document with no tokens weighs 0.
   *
-  * Scale shape (100 TB): the ratio table is at most `buckets` rows —
+  * Scale shape: the ratio table is at most `buckets` rows —
   * computed by two map-side-combined aggregations over exploded tokens
   * (the shuffle carries ≤ `buckets` rows per partition), then BROADCAST
   * to the scorer. Scoring is explode → broadcast-hash-join → one

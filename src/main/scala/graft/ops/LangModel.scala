@@ -35,7 +35,7 @@ import graft.functions.TextFns
   *
   * Scale shape: bigram extraction is ONE narrow object-boundary pass per
   * side; model counts are hash aggregates keyed on the bigram/prefix; the
-  * scoring join is hash-keyed on (w1,w2) then (w1) — at 100 TB the model
+  * scoring join is hash-keyed on (w1,w2) then (w1) — at scale the model
   * frames are corpus-vocabulary-sized and shuffle-join like any fact-dim
   * pair (or persist via the [[RefStore]] discipline); V is one bounded
   * scalar broadcast. No driver state, nothing quadratic.

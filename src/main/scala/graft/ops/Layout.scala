@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-layout clustering for scan-time skipping — the write-side half of
-  * the 100 TB story. Parquet/ORC readers prune row groups by min/max
+  * the scale story. Parquet/ORC readers prune row groups by min/max
   * statistics; those statistics only cut multi-dimensional point/box
   * lookups when rows that are close in KEY space are close in FILE space.
   * Z-ordering (bit-interleaved Morton curve — the technique behind
@@ -72,7 +72,7 @@ object Layout {
   /** Shard-balance report for a hash-sharding law: how evenly would the
     * corpus land if written as `nShards` shards keyed on
     * `md5(cast(id))`'s first two bytes? The question every layout
-    * decision answers BEFORE the 100 TB write — a skewed key (timestamp
+    * decision answers BEFORE the large write — a skewed key (timestamp
     * prefixes, auto-increment ranges) makes one writer task the
     * straggler and one shard the hot spot, and the fix (salting, a
     * different key) is cheap only before the data lands.
@@ -131,7 +131,7 @@ object Layout {
     *
     * Scale shape: one distinct + one bucket hash aggregate (map-side
     * combined), TakeOrdered top-k. NO corpus-order window anywhere —
-    * the classic lag-over-ids gap scan is a single-task sort at 100 TB;
+    * the classic lag-over-ids gap scan is a single-task sort at scale;
     * the bucket law is embarrassingly parallel.
     *
     * Output: (bucket, n_ids, min_id, max_id, missing) — top `k`.

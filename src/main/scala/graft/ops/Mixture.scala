@@ -100,7 +100,7 @@ object Mixture {
     * target mixture weights, allocate a total `budget` proportionally to
     * the weights, capping each domain at its availability and
     * redistributing the overflow to the uncapped domains — the standard
-    * "fill to the water line" mixture solver a 100 TB pretraining run uses
+    * "fill to the water line" mixture solver a large pretraining run uses
     * to turn (weights, budget) into per-domain sampling quotas.
     *
     * The algorithm sorts domains by saturation ratio `avail/weight`

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * fold is inherently order-dependent, so "globally sequential" would be a
   * single task — ranges are how packing parallelizes in practice, trading
   * at most one partially-filled pack per range). Boundaries are plan-time
-  * literals; at 100 TB they come from equi-depth id quantiles.
+  * literals; at scale they come from equi-depth id quantiles.
   */
 object Packing {
 

@@ -26,7 +26,7 @@ object Privacy {
     * DISTINCT QI combinations, never |rows|.
     *
     * Scale shape: ONE hash aggregate (map-side combine) + a narrow
-    * projection. No join, no window, no driver state — the 100 TB shape
+    * projection. No join, no window, no driver state — the shape at scale
     * is the same one shuffle.
     *
     * Output: (qi columns…, n_rows, at_risk).

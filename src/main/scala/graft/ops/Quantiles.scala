@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * The exact form of "keep the top decile per language"
   * (Registry.qQualityDecile) ranks each stratum with `percent_rank`, which
   * sorts each stratum in ONE task — fine for correctness checking, wrong at
-  * 100 TB where a single language is most of the corpus. The scale shape is
+  * scale where a single language is most of the corpus. The scale shape is
   * the two-pass sketch form:
   *
   *   1. one aggregation computes a per-stratum threshold with
@@ -54,7 +54,7 @@ object Quantiles {
     * `approx_percentile` sketch aggregation (map-side combinable — the same
     * two-pass shape as [[topFractionByStratum]]) and broadcast back onto the
     * stream as a row-local clip, so the corpus itself never shuffles. This
-    * is the 100 TB form of the exact-percentile winsorize
+    * is the scale form of the exact-percentile winsorize
     * (Registry.qWinsorize), which sorts each stratum in one task.
     *
     * The sketch returns an ACTUAL data value (a discrete percentile — the

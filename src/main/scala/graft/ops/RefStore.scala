@@ -9,7 +9,7 @@ import graft.functions.TextFns
 /** Persisted, MERGEABLE reference-corpus artifacts for the incremental
   * dedup guards — the missing piece that lets [[Dedup.exactAgainstBloom]]
   * and [[Dedup.minhashAgainst]] stop re-scanning the whole reference
-  * corpus on every ingest batch. At 100 TB the reference side IS the
+  * corpus on every ingest batch. At scale the reference side IS the
   * corpus: its fingerprints, Bloom filter, and MinHash signatures must be
   * computed once when a batch commits and LOADED (not recomputed) by every
   * later batch's guard.
@@ -455,7 +455,7 @@ object RefStore {
 
   /** Persist the reference corpus's qualifying CDC chunk hashes — the
     * sub-document fingerprint tier [[Dedup.cdcChunkOverlap]]'s scaladoc
-    * promises at 100 TB: the reference side's chunking runs ONCE per
+    * promises at scale: the reference side's chunking runs ONCE per
     * commit, and every later batch's overlap check joins the loaded hash
     * set instead of re-chunking the whole reference corpus. Meta records
     * `cdcMinTokens` (the chunk-qualification law — a store built at
@@ -515,7 +515,7 @@ object RefStore {
   private val LM_VOCAB = "lm_vocab"
 
   /** Persist a bigram-LM training corpus's model counts — the incremental
-    * form [[LangModel.bigramNllScore]]'s scaladoc promises at 100 TB: the
+    * form [[LangModel.bigramNllScore]]'s scaladoc promises at scale: the
     * trusted slice trains ONCE per commit; each ingest batch scores only
     * ITSELF against the loaded count frames. Two artifacts:
     *
@@ -960,7 +960,7 @@ object RefStore {
 
   /** Build and persist a PQ index: train the per-subspace codebooks once
     * and encode the corpus to its `m` code bytes once — the compressed
-    * representation IS the artifact a 100 TB deployment scans. Raw vectors
+    * representation IS the artifact a large deployment scans. Raw vectors
     * ride along for the exact shortlist rerank. Same immutable-quantizer
     * contract as [[writeIvf]].
     */

@@ -52,7 +52,7 @@ object Similarity {
     * BROADCASTS the query frame ([[bruteForceTopK]], [[hardNegatives]],
     * the MMR family, LSH/IVF probes) or materializes per-query driver
     * state ([[pqTopK]]'s ADC lookup tables), so an unbounded query frame
-    * is a driver/executor OOM at 100 TB, not a slow query. The bound is
+    * is a driver/executor OOM at scale, not a slow query. The bound is
     * ENFORCED (the [[Drift]] guardValueDomain posture — a contract in
     * the plan, not a scaladoc note): session-configurable via
     * `graft.ann.maxQueryRows`, raise it deliberately or batch your
@@ -397,7 +397,7 @@ object Similarity {
     * Default nprobe is 8 here (vs the live path's 4): a stored index is
     * typically trained on an EARLY slice of a growing corpus, so later
     * merges drift away from the quantizer and cell boundaries blur.
-    * Measured on the testdata regime (AnnRecall, train-on-half store):
+    * Measured on the testdata regime (index trained on half the corpus):
     * recall@10 = 0.54 / 0.69 / 0.79-0.81 / 0.87-0.89 at nprobe 4/6/8/10 —
     * 8 buys a ≥0.29 margin over the 0.5 Verify floor while still skipping
     * half the cells.
@@ -831,7 +831,7 @@ object Similarity {
     * generator: rerank ANY per-query candidate frame
     * `(query_id, neighbor_id, sim)` — brute-force, [[lshTopK]],
     * [[ivfTopKStored]], [[pqTopKStored]], all emit this shape — into an
-    * MMR-diverse top `k`. At 100 TB the candidate tier is an ANN index;
+    * MMR-diverse top `k`. At scale the candidate tier is an ANN index;
     * diversification stays this same bounded post-pass: vectors
     * re-attach by broadcasting the tiny candidate frame against the
     * corpus scan, then only candidates shuffle to the greedy.
@@ -923,7 +923,7 @@ object Similarity {
   }
 
   /** Symmetric int8 quantization of an embedding column — the 4×
-    * storage/bandwidth compressor a 100 TB embedding corpus ships and
+    * storage/bandwidth compressor a large embedding corpus ships and
     * serves (the standard max-abs scheme): per vector,
     * `scale = max|xᵢ| / 127`, `codeᵢ = clamp(⌊xᵢ/scale + 0.5⌋, ±127)`.
     * A zero vector quantizes to all-zero codes at scale 0 (no NaN leak).
@@ -983,7 +983,7 @@ object Similarity {
 
   /** Signed random projection (Achlioptas 2003's ±1 database-friendly
     * Johnson–Lindenstrauss form) of an embedding column down to `outDim`
-    * components — the cheap sketch a 100 TB pipeline computes ONCE and
+    * components — the cheap sketch a large pipeline computes ONCE and
     * then filters/blocks/bands on instead of touching the full vector
     * (sign patterns of the projected components are exactly the
     * hyperplane-LSH bits; distances survive up to the JL distortion).

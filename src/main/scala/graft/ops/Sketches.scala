@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Mergeable frequency sketches — the typed `Aggregator` (UDAF) surface of
-  * the engine. At 100 TB an exact per-token `groupBy` is the dominant
+  * the engine. At scale an exact per-token `groupBy` is the dominant
   * shuffle of any corpus-statistics job; a count-min sketch (Cormode &
   * Muthukrishnan, J.Algorithms'05) reduces it to one fixed-size buffer per
   * group per partition: `reduce` is O(depth) increments, `merge` is

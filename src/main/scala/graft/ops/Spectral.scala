@@ -195,7 +195,7 @@ object Spectral {
     * ~n²·q⁴·d² ≈ 10³⁶ around n = 3·10⁸ rows — the DECIMAL(38,0) edge.
     * The spectral probe is a DIAGNOSTIC: past that, run it over a
     * deterministic sample (q_fixed_sample / hash-mod), which is how PCA
-    * probes run on 100 TB corpora anyway; the law itself never needs the
+    * probes run on large corpora anyway; the law itself never needs the
     * full corpus to be meaningful.
     */
   /** The [[covarianceCells]] law collected to the driver, computed from

@@ -85,7 +85,7 @@ object Splits {
     * order and re-runs could swap positions.
     *
     * Scale shape: one hash-partition shuffle on `shard` + a per-shard sort;
-    * no global ordering task. At 100 TB, pick nShards ≈ cluster parallelism
+    * no global ordering task. At scale, pick nShards ≈ cluster parallelism
     * so each sort fits an executor (or range-split within shard by
     * fingerprint prefix if a single shard outgrows one).
     */

@@ -112,7 +112,7 @@ object Vocab {
     *
     * DRIVER-LOOP BOUND (the pqScan-style explicit contract): the
     * corpus-size-dependent work is exactly ONE distributed aggregate —
-    * 100 TB of text costs one shuffle regardless of `numMerges`. The
+    * Any volume of text costs one shuffle regardless of `numMerges`. The
     * driver loop is then O(`numMerges` × Σ_top-rows |word symbols|) CPU
     * ≤ O(numMerges × maxVocabRows × max word length) and
     * O(maxVocabRows × max word length) memory — both functions of the

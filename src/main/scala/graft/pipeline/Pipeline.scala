@@ -18,9 +18,12 @@ import graft.views.Analytic
   * self-join). Neither operator branches the plan, so nothing re-reads the
   * workbooks and nothing is cached. The quarantine frame is the same scan
   * filtered the other way; its row count is observed in the write job, so
-  * the report need not read it again. Registering the views runs one job
-  * (the distinct statuses); the hierarchy's driver loop of distributed
-  * joins runs on the first read of `hierarchy_children`.
+  * the report need not read it again. Registering the views caches the
+  * resolved frame and runs one query, the distinct statuses, which fills
+  * that in-memory copy as it runs; every view, and the report, then reads
+  * the copy, so no read after registration runs the pipeline again. The
+  * hierarchy's driver loop of distributed joins runs on the first read of
+  * `hierarchy_children`.
   */
 object Pipeline {
 

@@ -22,7 +22,7 @@ trait DriftQueries { self: RegistryAll =>
   /** Exact grouped percentiles (linear interpolation): Spark's `percentile`
     * vs DuckDB's `quantile_cont` — both interpolate linearly on the sorted
     * values, so the doubles match bit-for-bit. The exact form is the
-    * oracle-able one; `approx_percentile` (t-digest) is the 100 TB path and
+    * oracle-able one; `approx_percentile` (t-digest) is the scale path and
     * is deliberately not in the gate (approximation is engine-specific).
     */
   def qPercentiles(spark: SparkSession, dir: String): DataFrame =
@@ -100,7 +100,7 @@ trait DriftQueries { self: RegistryAll =>
     * quantile_cont (proven by q_percentiles), so the clip thresholds — and
     * therefore every clipped value — are engine-exact. Scale shape: one
     * tiny per-group percentile aggregate broadcast back onto the stream;
-    * at 100 TB swap the exact percentile for `approx_percentile` exactly
+    * at scale swap the exact percentile for `approx_percentile` exactly
     * as [[graft.ops.Quantiles.topFractionByStratum]] does.
     */
   def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
@@ -140,7 +140,7 @@ trait DriftQueries { self: RegistryAll =>
       | FROM events JOIN b ON event_type = _et
       | GROUP BY event_type ORDER BY event_type""".stripMargin.replace("\n", " ")
 
-  /** The 100 TB winsorize twin ([[graft.ops.Quantiles.winsorizeApprox]]):
+  /** The scale-path winsorize twin ([[graft.ops.Quantiles.winsorizeApprox]]):
     * thresholds from the mergeable `approx_percentile` sketch (one
     * map-side-combinable aggregate, broadcast clip, corpus never shuffles)
     * instead of the one-task-per-stratum exact sort. The sketch threshold

@@ -303,7 +303,7 @@ trait ParityQueries { self: RegistryAll =>
 
   // Skew-mitigation twin of A1: the SALTED two-phase aggregate must produce
   // exactly the status_summary result (same oracle shape) — the operator a
-  // pathological hot status key needs at 100 TB
+  // pathological hot status key needs at scale
   def qSaltedStatus(spark: SparkSession, dir: String): DataFrame =
     graft.ops.Salt.saltedConditionalCounts(
       ordersAsTransfer(spark, dir),

@@ -562,7 +562,7 @@ trait RelationalQueries { self: RegistryAll =>
     * buckets are missing members — TPC-H order keys are sparse by
     * construction, so the report has real holes to rank. NO
     * corpus-order window (the classic lag-over-ids scan is a
-    * single-task sort at 100 TB) — one distinct, one bucket hash
+    * single-task sort at scale) — one distinct, one bucket hash
     * aggregate, TakeOrdered.
     */
   def qIdGaps(spark: SparkSession, dir: String): DataFrame =

@@ -56,7 +56,7 @@ trait ReportQueries { self: RegistryAll =>
       | FROM fp GROUP BY lang ORDER BY lang""".stripMargin.replace("\n", " ")
 
   /** The curation pipeline as ONE oracled row — the end-to-end composition
-    * proof for the CurateDemo story: quality gate → PII scrub → exact
+    * proof for the curation story: quality gate → PII scrub → exact
     * dedup (on the scrubbed text) → benchmark decontamination → fixed-k
     * eval carve → sequence packing → train/val/test split, each stage
     * feeding the next, with a per-stage count in the output. Every stage
@@ -67,7 +67,7 @@ trait ReportQueries { self: RegistryAll =>
     * (or in how stages hand off) breaks the hash.
     *
     * Two `localCheckpoint` barriers (post-scrub, post-decontamination)
-    * mirror CurateDemo's multi-consumer reuse: without them every stage
+    * give the multi-consumer reuse: without them every stage
     * count would replay the full upstream chain (the exchange-reuse
     * pitfall); with them the expensive passes run once.
     */

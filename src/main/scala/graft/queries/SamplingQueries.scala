@@ -294,7 +294,7 @@ trait SamplingQueries { self: RegistryAll =>
     * the exact (rank-1)/(n-1) doubles — are engine-identical.
     *
     * SCALE NOTE: `percent_rank` sorts each language in one task (parallelism
-    * = |langs|) — exact and right for the oracle gate, wrong for 100 TB.
+    * = |langs|) — exact and right for the oracle gate, wrong at scale.
     * The scale path is [[graft.ops.Quantiles.topFractionByStratum]]: a
     * mergeable `approx_percentile` threshold pass + broadcast filter, no
     * per-stratum sort (QuantilesSpec pins the agreement between the two).

@@ -456,7 +456,7 @@ trait SimilarityQueries { self: RegistryAll =>
     * bit-identical to [[qAnnCosine]] — same pairs, same sims, same
     * tie-broken ranks. `shortlistFactor = 16` (160 of the sf0.01 corpus's
     * 500 vectors) makes coverage a measured certainty at the gate's scale
-    * (recall@10 = 1.000 at sf0.01 even at the default factor 8, AnnRecall),
+    * (recall@10 = 1.000 at sf0.01 even at the default factor 8),
     * so the brute-force SQL adjudicates the whole
     * encode→ADC-scan→shortlist→rerank pipeline: a codebook/ADC regression
     * that drops a true neighbor out of the shortlist fails the hash gate.
@@ -490,7 +490,7 @@ trait SimilarityQueries { self: RegistryAll =>
         batchId = "b1")
     }
     // stored-path default nprobe=8: the index trains on HALF the corpus by
-    // design here; measured recall 0.79-0.81 vs the 0.5 floor (AnnRecall)
+    // design here; measured recall 0.79-0.81 vs the 0.5 floor
     graft.ops.Similarity.ivfTopKStored(
         e.filter(col("vec_id") < 5), store, "vec_id", "embedding", k = 10)
       .withColumnRenamed("rank", "rk")

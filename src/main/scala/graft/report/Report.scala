@@ -10,7 +10,9 @@ import graft.views.Analytic
   * (SQLiteDirectImporter.java:1020-1062): total/file/folder counts and the
   * top-5 statuses, plus our quarantine channel count (A6). The database is
   * read once, by the per-status aggregate (status cardinality is small by
-  * construction), whose rows sum to the totals and, sorted on the driver by
+  * construction); after [[graft.views.Analytic.registerAll]] that read is a
+  * scan of the registration's in-memory copy, not of the files. Its rows
+  * sum to the totals and, sorted on the driver by
   * (count desc, name) — the tiebreak of [[graft.views.Analytic.topStatuses]]
   * — give the top 5. The quarantine count is the one the import's write
   * job observed (see [[graft.ingest.Quarantine.split]]); the quarantine frame

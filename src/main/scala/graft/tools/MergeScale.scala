@@ -9,7 +9,7 @@ import graft.streaming.MergeSink
 
 /** Scale probe for the bucketed merge sink: build a large keyed state, then
   * merge a small batch and compare wall-clock + rewritten-file count against
-  * the state size. The property under test is the 100 TB one — a drop-folder
+  * the state size. The property under test is the one that matters at scale — a drop-folder
   * batch costs O(batch + dirty buckets), not O(total state).
   *
   * `sbt "runMain graft.tools.MergeScale [stateRows] [batchRows] [buckets]"`

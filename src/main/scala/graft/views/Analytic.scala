@@ -125,16 +125,28 @@ object Analytic {
         .as("folder_count"))
 
   /** Bind the whole layer as temp views under the reference's names
-    * (K3, ibid.:865-916). The base frame registers as `transfer_data`. The
-    * only job is the distinct-status query that names the per-status views:
-    * `hierarchy_children` traverses on its first read, once per
-    * registration (see [[hierarchyChildren]]).
+    * (K3, ibid.:865-916). The base frame registers as `transfer_data` and is
+    * cached, the role of the reference's 2 GB SQLite page cache
+    * (ibid.:268): Spark's cache manager puts the in-memory columnar copy
+    * into every later plan over `df`, the views and direct calls alike. The
+    * only query is the distinct-status one that names the per-status views;
+    * adaptive execution fills the copy as its first stage, one job, which
+    * the status aggregate then reads. `status_summary` is cached too and
+    * fills on its first read; `hierarchy_children` traverses the copy on its
+    * first read, once per registration (see [[hierarchyChildren]]).
+    *
+    * The views answer from the copy taken at registration. A Spark write to
+    * the path `df` reads refreshes the copy; any other change to the data
+    * needs `registerAll` again. Registering another frame frees the previous
+    * copies, so one is held at a time.
     */
   def registerAll(spark: SparkSession, df: DataFrame): Unit = {
     df.createOrReplaceTempView("transfer_data")
+    spark.catalog.cacheTable("transfer_data")
     filesView(df).createOrReplaceTempView("files_view")
     foldersView(df).createOrReplaceTempView("folders_view")
     statusSummary(df).createOrReplaceTempView("status_summary")
+    spark.catalog.cacheTable("status_summary")
     hierarchyChildren(df).createOrReplaceTempView("hierarchy_children")
     statusViews(df).foreach { case (name, frame) => frame.createOrReplaceTempView(name) }
   }

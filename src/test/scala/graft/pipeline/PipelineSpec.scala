@@ -1,10 +1,15 @@
 package graft.pipeline
 
+import java.io.File
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.{JobLog, SparkSpec}
-import graft.ingest.Coerce
+import graft.ingest.{Coerce, XlsxRawSource, XlsxWriter}
 import graft.model.TransferSchema._
 import graft.ops.{Enrich, Hierarchy, Parents, Upsert}
 import graft.views.Analytic
@@ -48,6 +53,42 @@ class PipelineSpec extends SparkSpec {
   private lazy val raw: DataFrame = PipelineFixture.raw(spark)
 
   private lazy val resolved: DataFrame = Pipeline.resolve(Enrich(Coerce(raw))).cache()
+
+  private def tempPath(): String = Files.createTempDirectory("graft-db").resolve("db").toString
+
+  /** `df` written to a fresh parquet path and read back: an uncached frame
+    * over files, as an import registers its database.
+    */
+  private def parquetCopy(df: DataFrame): (String, DataFrame) = {
+    val path = tempPath()
+    df.write.parquet(path)
+    (path, spark.read.parquet(path))
+  }
+
+  private def delete(path: String): Unit =
+    Files.walk(Path.of(path)).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+
+  /** A two-workbook drop folder written with `XlsxWriter`: a root folder,
+    * three sub-folders of four files each, mixed statuses (one blank, one
+    * that sanitizes), a key re-shipped by the later workbook and one
+    * key-less row.
+    */
+  private def xlsxDropFolder(dir: File): Unit = {
+    def row(name: String, size: Long, id: Long, status: String): Seq[String] =
+      Seq(name, size.toString, "", id.toString) ++ Seq.fill(11)("") ++ Seq(status, "", "", "")
+    val statuses = Seq("success", "filtered", "match-exists", "weird status!", "")
+    val jobA = row("Root", 0, 1, "success") +: (0 until 3).flatMap { i =>
+      row(s"Root/s$i", 0, 10 + i, "success") +: (0 until 4).map { j =>
+        row(s"Root/s$i/f$j.txt", 100L * (j + 1), 100 + 10 * i + j, statuses((i + j) % statuses.size))
+      }
+    }
+    val jobB = Seq(row("Root/s0/f0.txt", 999, 100, "resent"),
+      Seq.fill(19)(""), row("Root/s2/late.txt", 7, 200, "success"))
+    Seq("JobA" -> jobA, "JobB" -> jobB).foreach { case (job, rows) =>
+      XlsxWriter.write(new File(dir, s"$job.xlsx"), "Transfer Report",
+        excelHeaders, rows.iterator)
+    }
+  }
 
   test("coerce: bigint strictness and serial dates") {
     val typed = Coerce(raw)
@@ -179,17 +220,87 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("registerAll: runs only the distinct-status job; hierarchy_children traverses on first read, once") {
-    resolved.count()
-    val (_, statusJobs) = JobLog.of(sc)(Analytic.distinctStatuses(resolved))
-    val (_, registerJobs) = JobLog.of(sc)(Analytic.registerAll(spark, resolved))
-    assert(registerJobs.size === statusJobs.size)
+    val (path, db) = parquetCopy(resolved)
+    val (_, statusJobs) = JobLog.of(sc)(Analytic.distinctStatuses(db))
+    val (_, registerJobs) = JobLog.of(sc)(Analytic.registerAll(spark, db))
+    // adaptive execution fills the copy as a query stage of its own: one
+    // job that computes the copy and nothing else, then the status jobs
+    val (fills, rest) = registerJobs.partition(_.fills("transfer_data"))
+    assert(fills.size === 1, registerJobs)
+    assert(rest.size === statusJobs.size, registerJobs)
     assert(!registerJobs.exists(_.is("localCheckpoint")), registerJobs)
+    // that job also filled the copy: with the parquet files gone, every
+    // view still answers, so no read after it scans the source
+    delete(path)
     val (first, firstJobs) = JobLog.of(sc)(spark.table("hierarchy_children").collect())
     assert(first.toSeq === Hierarchy(resolved).collect().toSeq)
     assert(firstJobs.exists(_.is("localCheckpoint")), firstJobs)
     val (second, secondJobs) = JobLog.of(sc)(spark.table("hierarchy_children").collect())
     assert(second.toSeq === first.toSeq)
     assert(!secondJobs.exists(_.is("localCheckpoint")), secondJobs)
+    assert(spark.table("files_view").count() === 3)
+    assert(spark.table("transfer_data").filter($"parent_id" === "1002").count() === 2)
+    assert(spark.table("status_summary").head.getString(0) === "success")
+  }
+
+  test("runAndRegister: a view read answers from the copy and does not re-run the pipeline") {
+    val dir = tempPath()
+    raw.write.parquet(dir)
+    val df = Pipeline.runAndRegister(spark, dir)
+    // the raw source is gone: a read that re-ran the pipeline would fail
+    delete(dir)
+    assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(spark.table("transfer_data").count() === 8)
+    assert(spark.table("folders_view").count() === 5)
+    assert(spark.table("status_success").count() === 4)
+    assert(spark.table("hierarchy_children").filter($"file_name" === "Root/Sub/a.pdf")
+      .head.getAs[String]("path") === "Root > Root/Sub > Root/Sub/a.pdf")
+  }
+
+  test("registerAll: registering another frame frees the previous copy") {
+    val (_, first) = parquetCopy(resolved)
+    Analytic.registerAll(spark, first)
+    spark.table("status_summary").collect()
+    assert(first.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(Analytic.statusSummary(first).storageLevel === StorageLevel.MEMORY_AND_DISK)
+    val (_, second) = parquetCopy(resolved)
+    Analytic.registerAll(spark, second)
+    assert(first.storageLevel === StorageLevel.NONE)
+    assert(Analytic.statusSummary(first).storageLevel === StorageLevel.NONE)
+    assert(second.storageLevel === StorageLevel.MEMORY_AND_DISK)
+  }
+
+  test("registerAll: a Spark write to the registered path refreshes the copy") {
+    val (path, db) = parquetCopy(resolved)
+    Analytic.registerAll(spark, db)
+    def files = spark.table("files_view").select("file_name").as[String].collect().toSet
+    def summary = spark.table("status_summary").collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(files === Set("Root/Sub/a.pdf", "/lead/slash.txt", "Orphan/child.txt"))
+    assert(summary("success") === 2)
+    resolved.withColumn("source_file_size", lit(1L)).write.mode("overwrite").parquet(path)
+    assert(files === resolved.select("file_name").as[String].collect().toSet)
+    assert(summary("success") === 4)
+  }
+
+  test("registerAll: every view answers through the copy as over the uncached frame") {
+    val dir = Files.createTempDirectory("graft-drop").toFile
+    xlsxDropFolder(dir)
+    Seq(resolved, Pipeline.run(spark, dir.getPath, XlsxRawSource)).foreach { frame =>
+      val (_, db) = parquetCopy(frame)
+      val frames = Seq("transfer_data" -> db, "files_view" -> Analytic.filesView(db),
+        "folders_view" -> Analytic.foldersView(db), "status_summary" -> Analytic.statusSummary(db),
+        "hierarchy_children" -> Analytic.hierarchyChildren(db)) ++ Analytic.statusViews(db)
+      assert(db.storageLevel === StorageLevel.NONE)
+      val uncached = frames.map { case (name, f) => name -> f.collect().toSeq }
+      Analytic.registerAll(spark, db)
+      assert(db.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      uncached.foreach { case (name, rows) =>
+        val viaCopy = spark.table(name).collect().toSeq
+        assert(rows.nonEmpty, name)
+        assert(viaCopy.map(_.toString).sorted === rows.map(_.toString).sorted, name)
+      }
+      assert(spark.table("hierarchy_children").collect().toSeq === uncached.toMap.apply("hierarchy_children"))
+    }
   }
 
   test("registerAll: a cycle a root reaches registers; the first read throws, once") {

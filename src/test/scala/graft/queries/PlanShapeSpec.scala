@@ -5,12 +5,16 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.ingest.{XlsxRawSource, XlsxWriter}
+import graft.ingest.{Coerce, XlsxRawSource, XlsxWriter}
 import graft.model.TransferSchema
-import graft.pipeline.Pipeline
+import graft.ops.Enrich
+import graft.pipeline.{Pipeline, PipelineFixture}
+import graft.views.Analytic
 
 /** Plan-regression guards: the physical shapes that make these queries
   * scale (broadcasts, pruned scans, top-k without global sort, window
@@ -36,6 +40,7 @@ class PlanShapeSpec extends SparkSpec {
     def joins(p: SparkPlan): Int = collect(p) { case j: BaseJoinExec => j }.size
     def fileScans(p: SparkPlan): Int = collect(p) { case s: FileSourceScanExec => s }.size
     def rddScans(p: SparkPlan): Int = collect(p) { case s: RDDScanExec => s }.size
+    def inMemoryScans(p: SparkPlan): Int = collect(p) { case s: InMemoryTableScanExec => s }.size
   }
 
   test("q_parent_join: Parents adds no join and reads its input once") {
@@ -67,6 +72,18 @@ class PlanShapeSpec extends SparkSpec {
     val p = resolved.queryExecution.executedPlan
     assert(nodes.rddScans(p) === 1, p.toString)
     assert(nodes.joins(p) === 0, p.toString)
+  }
+
+  test("registered views: a lookup and a preview scan the in-memory copy, not the parquet files") {
+    val path = Files.createTempDirectory("graft-views").resolve("db").toString
+    Pipeline.resolve(Enrich(Coerce(PipelineFixture.raw(spark)))).write.parquet(path)
+    Analytic.registerAll(spark, spark.read.parquet(path))
+    Seq(spark.table("transfer_data").filter(col("parent_id") === "1002").select("file_name", "target_file_id"),
+      spark.table("files_view").select("file_name", "source_file_size").limit(10)).foreach { q =>
+      val p = q.queryExecution.executedPlan
+      assert(nodes.inMemoryScans(p) === 1, p.toString)
+      assert(nodes.fileScans(p) === 0, p.toString)
+    }
   }
 
   test("q_status_summary: pruned scan + two-phase hash aggregate") {
