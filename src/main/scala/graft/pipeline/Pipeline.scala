@@ -19,7 +19,7 @@ import graft.views.Analytic
   * workbooks and nothing is cached. The quarantine frame is the same scan
   * filtered the other way; its row count is observed in the write job, so
   * the report need not read it again. Registering the views caches the
-  * resolved frame and runs one query, the distinct statuses, which fills
+  * resolved frame and runs one job, the distinct statuses, which fills
   * that in-memory copy as it runs; every view, and the report, then reads
   * the copy, so no read after registration runs the pipeline again. The
   * hierarchy's driver loop of distributed joins runs on the first read of

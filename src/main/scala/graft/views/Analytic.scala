@@ -3,7 +3,7 @@ package graft.views
 import scala.util.Try
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.StructType
@@ -52,12 +52,17 @@ object Analytic {
           .as("folder_count"))
 
   /** Distinct non-null statuses (A3, ibid.:888) — drives the dynamic views.
-    * Bounded collect: status cardinality is small by construction.
+    * Each partition's distinct set, merged on the driver: a bounded collect,
+    * since status cardinality is small by construction. With no shuffle the
+    * query is one job, and over a cached frame that job also fills the copy
+    * (adaptive execution would fill it in a job of its own ahead of a
+    * shuffle).
     */
   def distinctStatuses(df: DataFrame): Seq[String] =
     df.filter(col("file_status").isNotNull)
-      .select(col("file_status")).distinct()
-      .collect().map(_.getString(0)).toSeq
+      .select(col("file_status")).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.toSeq
 
   /** Dynamic per-status frames (P14, ibid.:888-899): `status_<sanitized>` →
     * `WHERE file_status = '<s>'`. Sanitizer collisions resolve FIRST-wins
@@ -129,24 +134,25 @@ object Analytic {
     * cached, the role of the reference's 2 GB SQLite page cache
     * (ibid.:268): Spark's cache manager puts the in-memory columnar copy
     * into every later plan over `df`, the views and direct calls alike. The
-    * only query is the distinct-status one that names the per-status views;
-    * adaptive execution fills the copy as its first stage, one job, which
-    * the status aggregate then reads. `status_summary` is cached too and
-    * fills on its first read; `hierarchy_children` traverses the copy on its
-    * first read, once per registration (see [[hierarchyChildren]]).
+    * only job is the distinct-status query that names the per-status views,
+    * and it fills the copy as it runs (see [[distinctStatuses]]).
+    * `hierarchy_children` traverses the copy on its first read, once per
+    * registration (see [[hierarchyChildren]]).
     *
     * The views answer from the copy taken at registration. A Spark write to
     * the path `df` reads refreshes the copy; any other change to the data
-    * needs `registerAll` again. Registering another frame frees the previous
-    * copies, so one is held at a time.
+    * needs `registerAll` again, which first drops the previous
+    * registration's copy: Spark keys its cache by plan, and a new read of
+    * the same path has the same plan, so without the drop it would keep
+    * answering from the old copy. One copy is held at a time.
     */
   def registerAll(spark: SparkSession, df: DataFrame): Unit = {
+    if (spark.catalog.tableExists("transfer_data")) spark.catalog.uncacheTable("transfer_data")
     df.createOrReplaceTempView("transfer_data")
     spark.catalog.cacheTable("transfer_data")
     filesView(df).createOrReplaceTempView("files_view")
     foldersView(df).createOrReplaceTempView("folders_view")
     statusSummary(df).createOrReplaceTempView("status_summary")
-    spark.catalog.cacheTable("status_summary")
     hierarchyChildren(df).createOrReplaceTempView("hierarchy_children")
     statusViews(df).foreach { case (name, frame) => frame.createOrReplaceTempView(name) }
   }

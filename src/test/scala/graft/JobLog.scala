@@ -15,8 +15,8 @@ object JobLog {
     def is(action: String): Boolean = stages.exists(_.startsWith(s"$action at "))
     /** A job over the workbook scan, which parallelizes the listed files. */
     def scansWorkbooks: Boolean = rdds.contains("ParallelCollectionRDD")
-    /** A job that computes the in-memory copy of `table` and nothing else. */
-    def fills(table: String): Boolean = rdds.headOption.contains(s"In-memory table $table")
+    /** A job whose lineage holds the in-memory copy of `table`. */
+    def readsCopy(table: String): Boolean = rdds.contains(s"In-memory table $table")
   }
 
   /** Runs `body` and returns its value with the jobs it started. */

@@ -223,11 +223,8 @@ class PipelineSpec extends SparkSpec {
     val (path, db) = parquetCopy(resolved)
     val (_, statusJobs) = JobLog.of(sc)(Analytic.distinctStatuses(db))
     val (_, registerJobs) = JobLog.of(sc)(Analytic.registerAll(spark, db))
-    // adaptive execution fills the copy as a query stage of its own: one
-    // job that computes the copy and nothing else, then the status jobs
-    val (fills, rest) = registerJobs.partition(_.fills("transfer_data"))
-    assert(fills.size === 1, registerJobs)
-    assert(rest.size === statusJobs.size, registerJobs)
+    assert(registerJobs.size === statusJobs.size, registerJobs)
+    assert(registerJobs.forall(_.readsCopy("transfer_data")), registerJobs)
     assert(!registerJobs.exists(_.is("localCheckpoint")), registerJobs)
     // that job also filled the copy: with the parquet files gone, every
     // view still answers, so no read after it scans the source
@@ -260,14 +257,28 @@ class PipelineSpec extends SparkSpec {
   test("registerAll: registering another frame frees the previous copy") {
     val (_, first) = parquetCopy(resolved)
     Analytic.registerAll(spark, first)
-    spark.table("status_summary").collect()
     assert(first.storageLevel === StorageLevel.MEMORY_AND_DISK)
-    assert(Analytic.statusSummary(first).storageLevel === StorageLevel.MEMORY_AND_DISK)
     val (_, second) = parquetCopy(resolved)
     Analytic.registerAll(spark, second)
     assert(first.storageLevel === StorageLevel.NONE)
-    assert(Analytic.statusSummary(first).storageLevel === StorageLevel.NONE)
     assert(second.storageLevel === StorageLevel.MEMORY_AND_DISK)
+  }
+
+  test("registerAll: a new read of the same path, re-registered, drops the old copy") {
+    val (path, db) = parquetCopy(resolved)
+    Analytic.registerAll(spark, db)
+    assert(spark.table("transfer_data").count() === 8)
+    assert(spark.table("status_summary").head.getLong(1) === 4)
+    // replace the files without Spark: no write refreshes the copy
+    val (newPath, _) = parquetCopy(resolved.filter($"file_status" === "resent"))
+    delete(path)
+    assert(new File(newPath).renameTo(new File(path)))
+    Analytic.registerAll(spark, spark.read.parquet(path))
+    val resent = resolved.filter($"file_status" === "resent").count()
+    assert(spark.table("transfer_data").count() === resent)
+    assert(spark.table("status_summary").collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+      === Seq("resent" -> resent))
+    assert(Analytic.statusViews(spark.table("transfer_data")).map(_._1) === Seq("status_resent"))
   }
 
   test("registerAll: a Spark write to the registered path refreshes the copy") {
