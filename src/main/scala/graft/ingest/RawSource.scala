@@ -14,9 +14,10 @@ import graft.model.TransferSchema._
   * 736-741); all Excel specifics — the `Transfer Report*` sheet-name predicate
   * (ibid.:349), header-row skip (ibid.:468-473), short-row padding to 19
   * columns with "" (ibid.:460-464), extra-column drop (ibid.:511-513) — are
-  * reproduced here behind a format-agnostic trait, so engine semantics are
-  * fully testable from Parquet/CSV in the offline environment (SURVEY.md §7.5
-  * item 7); a POI-backed adapter is a drop-in later.
+  * reproduced here behind a format-agnostic trait. The workbook sources
+  * ([[WorkbookSource]]) read the reference's own input; the Parquet and CSV
+  * sources carry the same contract for tests and tools (SURVEY.md §7.5
+  * item 7).
   */
 trait RawSource {
 
@@ -103,77 +104,51 @@ object CsvRawSource extends RawSource {
   }
 }
 
-/** XLSX-backed raw source — the reference's PRIMARY input format
-  * (SQLiteDirectImporter.java:330-379), read dependency-free via [[Xlsx]]
-  * (JDK zip + StAX; no POI, which is unavailable offline).
-  *
-  * Distribution model: one workbook per task. The xlsx container is a ZIP
-  * whose sheet parts are single compressed streams, so a file is the unit
-  * of scan parallelism — the cluster parallelizes across the drop-folder's
-  * files (the reference processes them one by one on one thread). File
-  * paths must be visible to executors (local/NFS mounts; on object stores,
-  * localize first — the workbook format itself precludes split reads).
+/** The workbook sources — the reference's PRIMARY input format — read
+  * dependency-free: `.xlsx` via [[Xlsx]] (JDK zip + StAX), legacy `.xls` via
+  * [[Cfb]] + [[Xls]] (no POI, which is unavailable offline). Each lists the
+  * drop folder's report files with its extensions ([[ReportFiles.list]]) and
+  * reads them through [[WorkbookFrames.frame]]; the sources differ only in
+  * those extensions.
   *
   * The `Transfer Report*` sheet predicate is applied AT SCAN (non-matching
   * sheets are never parsed, SQLiteDirectImporter.java:349); the shared
   * `sheetFilter` then re-asserts it and drops header rows, identically to
   * every other adapter.
   */
-object XlsxRawSource extends RawSource {
+sealed abstract class WorkbookSource(val extensions: Seq[String]) extends RawSource {
   def load(spark: SparkSession, path: String): DataFrame =
-    sheetFilter(positional(WorkbookFrames.frame(spark, path, "xlsx")(
-      f => Xlsx.scanRows(f, _.startsWith("Transfer Report")))))
+    frame(spark, ReportFiles.list(path, extensions = extensions).map(_.toFile))
+
+  /** The raw frame of the given workbook files, in the given order. */
+  def frame(spark: SparkSession, files: Seq[java.io.File]): DataFrame =
+    sheetFilter(positional(WorkbookFrames.frame(spark, files)))
 }
 
-/** XLS (legacy BIFF8) raw source — the reference's "traditional" path
-  * (SQLiteDirectImporter.java:384-426), dependency-free via [[Cfb]] +
-  * [[Xls]]. Same one-workbook-per-task distribution and semantics as
-  * [[XlsxRawSource]]; the legacy container is whole-file-in-memory by
-  * nature (as with the reference's HSSFWorkbook), which is fine for the
+/** `.xlsx` workbooks (SQLiteDirectImporter.java:330-379). */
+object XlsxRawSource extends WorkbookSource(Seq("xlsx"))
+
+/** Legacy `.xls` (BIFF8) workbooks, the reference's "traditional" path
+  * (SQLiteDirectImporter.java:384-426). The container is read whole into
+  * memory (as the reference's HSSFWorkbook does), which is fine for the
   * bounded archival files the format implies — the scale path is xlsx.
   */
-object XlsRawSource extends RawSource {
-  def load(spark: SparkSession, path: String): DataFrame =
-    sheetFilter(positional(WorkbookFrames.frame(spark, path, "xls")(
-      f => Xls.scanRows(f, _.startsWith("Transfer Report")))))
-}
+object XlsRawSource extends WorkbookSource(Seq("xls"))
 
-/** Combined workbook source matching the reference's per-file dispatch
-  * (`.xlsx` → streaming, anything else → traditional,
-  * SQLiteDirectImporter.java:319-325).
-  */
-object WorkbookRawSource extends RawSource {
-  def load(spark: SparkSession, path: String): DataFrame =
-    sheetFilter(positional(WorkbookFrames.frame(spark, path, "xlsx", "xls")({ f =>
-      if (f.getName.toLowerCase.endsWith(".xlsx"))
-        Xlsx.scanRows(f, _.startsWith("Transfer Report"))
-      else Xls.scanRows(f, _.startsWith("Transfer Report"))
-    })))
+/** Both workbook formats, as the reference's drop folder holds them. */
+object WorkbookRawSource extends WorkbookSource(Seq("xlsx", "xls"))
 
-  /** Raw frame from a `binaryFile` (path, content) batch — the streaming
-    * drop-folder entry (StreamIngest.runWorkbookDropFolder): same per-file
-    * dispatch and normalization as [[load]], parsing on executors.
-    */
-  def fromBinary(spark: SparkSession, batch: DataFrame): DataFrame =
-    sheetFilter(positional(WorkbookFrames.frameFromBinary(spark, batch)))
-}
-
-/** Shared scan→DataFrame assembly for the workbook adapters: list report
-  * files, parallelize ONE FILE PER TASK (the workbook containers are
-  * single-stream artifacts — files are the unit of scan parallelism; the
-  * reference processes them sequentially on one thread), run the
-  * per-file scan closure, pad/truncate positionally to the 19-column band
-  * (SQLiteDirectImporter.java:460-464, 511-513).
+/** Shared scan→DataFrame assembly for the workbook sources: parallelize
+  * ONE FILE PER TASK (the workbook containers are single-stream artifacts —
+  * files are the unit of scan parallelism; the reference processes them
+  * sequentially on one thread), scan each with the reader its extension
+  * picks, pad/truncate positionally to the 19-column band
+  * (SQLiteDirectImporter.java:460-464, 511-513). File paths must be visible
+  * to executors (local/NFS mounts; on object stores, localize first — the
+  * workbook format itself precludes split reads).
   */
 private[ingest] object WorkbookFrames {
   import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-
-  private val scanSchema = StructType(
-    dbColumns.map(c => StructField(c, StringType, nullable = false)) ++ Seq(
-      StructField(srcFileCol, StringType, nullable = false),
-      StructField(sheetCol, StringType, nullable = false),
-      StructField(rowIdxCol, LongType, nullable = false)))
 
   /** Per-FILE error tolerance (SQLiteDirectImporter.java:196-197): a corrupt
     * workbook logs one stderr line and keeps the rows read before the error
@@ -225,54 +200,23 @@ private[ingest] object WorkbookFrames {
     Row.fromSeq(vals.toIndexedSeq)
   }
 
-  def frame(spark: SparkSession, path: String, extensions: String*)(
-      scan: java.io.File => Iterator[(String, Long, Array[String])]): DataFrame = {
-    val files = ReportFiles.list(path, extensions = extensions).map(_.toString)
+  /** The reference's per-file dispatch (SQLiteDirectImporter.java:319-325):
+    * `.xlsx` → the streaming reader, anything else → the traditional one.
+    */
+  private def scan(f: java.io.File): Iterator[(String, Long, Array[String])] =
+    if (f.getName.toLowerCase.endsWith(".xlsx"))
+      Xlsx.scanRows(f, _.startsWith("Transfer Report"))
+    else Xls.scanRows(f, _.startsWith("Transfer Report"))
+
+  def frame(spark: SparkSession, files: Seq[java.io.File]): DataFrame = {
     val rows = spark.sparkContext
       .parallelize(files, math.max(files.size, 1))
       .flatMap { f =>
-        val name = new java.io.File(f).getName
-        tolerant(name, scan(new java.io.File(f))).map { case (sheet, rowIdx, cells) =>
+        val name = f.getName
+        tolerant(name, scan(f)).map { case (sheet, rowIdx, cells) =>
           toRow(name, sheet, rowIdx, cells)
         }
       }
-    spark.createDataFrame(rows, scanSchema)
-  }
-
-  /** Same assembly over an in-memory `binaryFile` batch (path, content):
-    * workbook bytes parsed on executors, dispatched by extension.
-    */
-  def frameFromBinary(spark: SparkSession, batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val rows = batch.select(col("path"), col("content")).rdd
-      .flatMap { r =>
-        val path = r.getString(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val it = tolerant(name,
-          if (name.toLowerCase.endsWith(".xlsx"))
-            Xlsx.scanRowsBytes(bytes, _.startsWith("Transfer Report"))
-          else Xls.scanRowsBytes(bytes, _.startsWith("Transfer Report")))
-        it.map { case (sheet, rowIdx, cells) => toRow(name, sheet, rowIdx, cells) }
-      }
-    spark.createDataFrame(rows, scanSchema)
-  }
-}
-
-/** JSON-lines raw source: one object per row; values read as strings (the
-  * engine owns typing, like every other adapter).
-  */
-object JsonRawSource extends RawSource {
-  def load(spark: SparkSession, path: String): DataFrame = {
-    val df0 = spark.read
-      .option("primitivesAsString", "true") // all strings — typing is the engine's job
-      .json(path)
-    // JSON is name-addressed, not positional: select the 19 db columns by
-    // name where present (absent → ""), then reuse the shared contract.
-    val named = df0.select(
-      (graft.model.TransferSchema.dbColumns.map(c =>
-        (if (df0.columns.contains(c)) col(c) else lit("")).as(c)) ++
-        graft.model.TransferSchema.metaColumns.filter(df0.columns.contains).map(col)): _*)
-    sheetFilter(positional(ParquetRawSource.attachMeta(named)))
+    spark.createDataFrame(rows, rawSchema)
   }
 }

@@ -14,34 +14,43 @@ import scala.jdk.CollectionConverters._
   *   - sorted by file name — this ordering IS the upsert tie-break order
   *     (SURVEY.md §7.5 item 1), so it is part of the semantics, not just UX
   *
-  * Driver-side (the reference lists files on one node too); the Spark-side
-  * equivalent for distributed listing is `pathGlobFilter` on the source load.
+  * Driver-side (the reference lists files on one node too). The streaming
+  * drop folder ([[graft.streaming.StreamIngest.runDropFolder]]) applies the
+  * same rule, [[accepts]], to each micro-batch's new files.
   */
 object ReportFiles {
 
   val defaultExtensions: Seq[String] = Seq("xlsx", "xls", "parquet", "csv")
 
+  /** What the Overview extractor also skips: its own prior outputs
+    * (TransferOverviewExtractor.java:173-180).
+    */
+  val overviewOutputPrefixes: Seq[String] = Seq("~", "Transfer-Overview-", "Overview-")
+
+  /** The listing rule for one file name: one of `extensions`, compared
+    * case-insensitively, and none of `skipOutputPrefixes`.
+    */
+  def accepts(name: String, extensions: Seq[String],
+      skipOutputPrefixes: Seq[String]): Boolean = {
+    val lower = name.toLowerCase
+    extensions.exists(e => lower.endsWith("." + e.toLowerCase)) &&
+      !skipOutputPrefixes.exists(name.startsWith)
+  }
+
   def list(dir: String, extensions: Seq[String] = defaultExtensions,
       skipOutputPrefixes: Seq[String] = Seq("~")): Seq[Path] = {
     val d = Paths.get(dir)
     if (!Files.isDirectory(d)) return Seq.empty
-    val exts = extensions.map("." + _.toLowerCase)
     val stream = Files.list(d) // must close: holds a directory fd
     try stream.iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .filter { p =>
-        val name = p.getFileName.toString
-        val lower = name.toLowerCase
-        exts.exists(lower.endsWith) && !skipOutputPrefixes.exists(name.startsWith)
-      }
+      .filter(p => Files.isRegularFile(p) &&
+        accepts(p.getFileName.toString, extensions, skipOutputPrefixes))
       .toSeq.sortBy(_.getFileName.toString)
     finally stream.close()
   }
 
-  /** The Overview-extractor variant: additionally skips prior outputs
-    * (TransferOverviewExtractor.java:173-180).
-    */
+  /** The Overview-extractor variant: additionally skips prior outputs. */
   def listSkippingOverviewOutputs(dir: String,
       extensions: Seq[String] = defaultExtensions): Seq[Path] =
-    list(dir, extensions, skipOutputPrefixes = Seq("~", "Transfer-Overview-", "Overview-"))
+    list(dir, extensions, overviewOutputPrefixes)
 }

@@ -333,16 +333,8 @@ object Xls {
     * [[Xlsx.scanRows]].
     */
   def scanRows(file: File, sheetPredicate: String => Boolean)
-      : Iterator[(String, Long, Array[String])] =
-    scanWorkbook(workbookStream(file), sheetPredicate)
-
-  /** In-memory twin of [[scanRows]] for the streaming drop-folder path. */
-  def scanRowsBytes(container: Array[Byte], sheetPredicate: String => Boolean)
-      : Iterator[(String, Long, Array[String])] =
-    scanWorkbook(workbookStream(container), sheetPredicate)
-
-  private def scanWorkbook(wb: Array[Byte], sheetPredicate: String => Boolean)
       : Iterator[(String, Long, Array[String])] = {
+    val wb = workbookStream(file)
     val sheets = sheetRefs(wb).filter(s => sheetPredicate(s.name))
     if (sheets.isEmpty) return Iterator.empty
     val strings = sst(wb)

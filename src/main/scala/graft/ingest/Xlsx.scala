@@ -260,37 +260,6 @@ object Xlsx {
     * (SQLiteDirectImporter.java:349, 366-369). Closes the zip when the
     * returned iterator is exhausted.
     */
-  /** In-memory twin of [[scanRows]] for the streaming drop-folder path:
-    * ZIP needs random access (central directory), so the bytes spill to an
-    * executor-local temp file, deleted when the iterator is exhausted.
-    */
-  def scanRowsBytes(container: Array[Byte], sheetPredicate: String => Boolean)
-      : Iterator[(String, Long, Array[String])] = {
-    val tmp = java.nio.file.Files.createTempFile("graft-wb", ".xlsx")
-    java.nio.file.Files.write(tmp, container)
-    // abandoned-iterator safety net: a consumer that stops early (error
-    // tolerance truncation, pushed-down limit) never exhausts us. Inside a
-    // Spark task, clean up at task end — NOT deleteOnExit, whose
-    // DeleteOnExitHook entries are never removed and would grow unboundedly
-    // on a long-lived executor streaming many workbooks. Outside a task
-    // (driver-side tools, tests) the call count is bounded, so deleteOnExit
-    // is an acceptable JVM-exit backstop for an abandoned iterator there.
-    org.apache.spark.TaskContext.get() match {
-      case null => tmp.toFile.deleteOnExit()
-      case tc => tc.addTaskCompletionListener[Unit](_ =>
-        java.nio.file.Files.deleteIfExists(tmp))
-    }
-    val it = scanRows(tmp.toFile, sheetPredicate)
-    new Iterator[(String, Long, Array[String])] {
-      override def hasNext: Boolean = {
-        val h = it.hasNext
-        if (!h) java.nio.file.Files.deleteIfExists(tmp)
-        h
-      }
-      override def next(): (String, Long, Array[String]) = it.next()
-    }
-  }
-
   def scanRows(file: File, sheetPredicate: String => Boolean)
       : Iterator[(String, Long, Array[String])] = {
     val zf = new ZipFile(file)

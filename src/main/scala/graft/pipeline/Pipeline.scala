@@ -36,8 +36,15 @@ object Pipeline {
     * them: it passes the upsert exchange, so it reads every row.
     */
   def runWithQuarantine(spark: SparkSession, path: String,
-      source: RawSource = ParquetRawSource): (DataFrame, DataFrame) = {
-    val (good, bad) = Quarantine.split(source.load(spark, path))
+      source: RawSource = ParquetRawSource): (DataFrame, DataFrame) =
+    fromRaw(source.load(spark, path))
+
+  /** A raw frame (a [[RawSource]]'s output) to (resolved, quarantined): the
+    * one import every path runs, the streaming drop folder's micro-batches
+    * included.
+    */
+  def fromRaw(raw: DataFrame): (DataFrame, DataFrame) = {
+    val (good, bad) = Quarantine.split(raw)
     (resolve(Enrich(Coerce(good))), bad)
   }
 

@@ -1,114 +1,81 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.model.TransferSchema
+import graft.ingest.{ReportFiles, WorkbookRawSource}
+import graft.pipeline.Pipeline
 
 /** Structured-streaming reproduction of the reference's incremental
   * behaviors (SURVEY.md §2.8):
   *
   *   - the DROP-FOLDER CONTRACT (SQLiteDirectImporter.java:124-143, 186-192):
-  *     files appear in `source/`, are processed exactly once, then archived —
-  *     `readStream` file source + `Trigger.AvailableNow` +
-  *     `cleanSource=archive`, with the batch pipeline running unchanged in
-  *     `foreachBatch`. Exactly-once bookkeeping comes from the checkpoint.
+  *     workbooks appear in `source/`, are imported exactly once, then
+  *     archived — a `readStream` file source + `Trigger.AvailableNow`, with
+  *     the one-shot import running unchanged in `foreachBatch`.
+  *     Exactly-once bookkeeping comes from the checkpoint.
   *   - watermarked event-time operators over the `events` stream (dedup,
   *     per-key state, a range join, session windows) — extension scope
   *     (the reference has no event-time operators).
   */
 object StreamIngest {
 
-  /** Ingest the drop-folder incrementally: every new parquet file under
-    * `sourceDir` flows once through `batchFn` (typically
-    * `Pipeline.resolve(Enrich(Coerce(_)))` + a sink write), then is archived
-    * under `archiveDir` — the reference's source/→processed/ lifecycle
+  /** Import the drop folder incrementally: every new workbook (`.xlsx` or
+    * `.xls`) under `sourceDir` is imported once, then moved to `archiveDir`
+    * — the reference's source/→processed/ lifecycle
     * (SQLiteDirectImporter.java:186-192).
     *
-    * Archiving is done explicitly per batch from `input_file_name()` rather
-    * than via the `cleanSource=archive` option: the built-in cleaner is an
-    * async best-effort task that typically never runs before an
-    * `AvailableNow` query terminates, while the reference's move is part of
-    * its per-file contract. The file list per batch is bounded by
-    * `maxFilesPerTrigger`, so the driver-side collect is safe.
+    * The stream carries file paths only: the `binaryFile` scan reads no
+    * workbook bytes. Each micro-batch turns its paths into local files on
+    * the driver, keeps those [[ReportFiles.accepts]] takes (no `~$` lock
+    * file, whose move would break an open Excel session, and no prior
+    * extractor output), and imports them exactly as the one-shot import
+    * does: [[WorkbookRawSource]]'s scan, then [[Pipeline.fromRaw]].
+    * `batchFn` gets the resolved and the quarantined frame and the batch
+    * id; then the same files are archived. A batch with no such file runs
+    * no job. The file list per batch is bounded by `maxFilesPerTrigger`.
+    * `sourceDir` is a local (or mounted) directory: the readers open the
+    * workbooks by local path, as the one-shot import does.
+    *
+    * Archiving is done here rather than via the `cleanSource=archive`
+    * option: the built-in cleaner is an async best-effort task that
+    * typically never runs before an `AvailableNow` query terminates, while
+    * the reference's move is part of its per-file contract. A file already
+    * gone (a batch replayed after its files were archived) is skipped.
     */
   def runDropFolder(spark: SparkSession, sourceDir: String, archiveDir: String,
-      checkpointDir: String)(batchFn: (DataFrame, Long) => Unit): StreamingQuery =
+      checkpointDir: String)(
+      batchFn: (DataFrame, DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream
-      .schema(TransferSchema.rawSchema)
+      .format("binaryFile")
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
       .option("maxFilesPerTrigger", 1000)
-      .parquet(sourceDir)
+      .load(sourceDir)
+      .select("path")
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val files = batch.select(input_file_name()).distinct()
-          .collect().map(_.getString(0)).filter(_.nonEmpty)
-        batchFn(batch, id)
-        archiveFiles(files, archiveDir)
+        val files = batch.collect()
+          .map(r => new File(new Path(r.getString(0)).toUri))
+          .filter(f => f.isFile && ReportFiles.accepts(f.getName,
+            WorkbookRawSource.extensions, ReportFiles.overviewOutputPrefixes))
+          .sortBy(_.getName).toSeq
+        if (files.nonEmpty) {
+          val (resolved, quarantined) =
+            Pipeline.fromRaw(WorkbookRawSource.frame(spark, files))
+          batchFn(resolved, quarantined, id)
+          Files.createDirectories(Paths.get(archiveDir))
+          files.foreach(f => Files.move(f.toPath, Paths.get(archiveDir, f.getName),
+            StandardCopyOption.REPLACE_EXISTING))
+        }
       }
       .start()
-
-  /** The drop-folder contract over WORKBOOK files (`.xlsx`/`.xls`) — the
-    * reference's actual input mode: new workbooks stream in as
-    * `binaryFile` rows (path + content), are parsed on executors by the
-    * dependency-free readers (Xlsx/Xls via WorkbookRawSource.fromBinary),
-    * flow once through `batchFn` as the raw 19-column frame, then are
-    * archived. Exactly-once bookkeeping from the checkpoint, as in
-    * [[runDropFolder]].
-    *
-    * Scale note: `binaryFile` materializes each workbook's bytes as one row
-    * (spilling to an executor temp file for the zip's random access) —
-    * right for drop-folder cadences of bounded report files; for very large
-    * workbooks on a shared mount, the batch adapter (`XlsxRawSource`)
-    * streams straight from the file instead.
-    */
-  def runWorkbookDropFolder(spark: SparkSession, sourceDir: String,
-      archiveDir: String, checkpointDir: String)(
-      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream
-      .format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType))))
-      .option("pathGlobFilter", "*.xls*")
-      .option("maxFilesPerTrigger", 1000)
-      .load(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, id: Long) =>
-        // same hygiene as the batch scan (ReportFiles / S1): skip Office
-        // `~$` lock files and prior extractor outputs — archiving a lock
-        // file would break an open Excel session — and accept exactly
-        // .xlsx/.xls (the glob also matches .xlsm/.xlsb, which the
-        // readers can't parse)
-        val fname = lower(regexp_extract(col("path"), "([^/]+)$", 1))
-        val batch = batch0.filter(
-          !regexp_extract(col("path"), "([^/]+)$", 1).startsWith("~") &&
-          !regexp_extract(col("path"), "([^/]+)$", 1).startsWith("Transfer-Overview-") &&
-          !regexp_extract(col("path"), "([^/]+)$", 1).startsWith("Overview-") &&
-          (fname.endsWith(".xlsx") || fname.endsWith(".xls")))
-        val files = batch.select(col("path")).distinct()
-          .collect().map(_.getString(0)).filter(_.nonEmpty)
-        batchFn(graft.ingest.WorkbookRawSource.fromBinary(spark, batch), id)
-        archiveFiles(files, archiveDir)
-      }
-      .start()
-
-  private def archiveFiles(files: Seq[String], archiveDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    Files.createDirectories(Paths.get(archiveDir))
-    files.foreach { uri =>
-      val p = Paths.get(java.net.URI.create(uri))
-      if (Files.exists(p))
-        Files.move(p, Paths.get(archiveDir, p.getFileName.toString),
-          StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
 
   /** Streaming exactly-once event dedup: watermark-bounded state keyed on
     * `event_id` — duplicates arriving within the watermark horizon are

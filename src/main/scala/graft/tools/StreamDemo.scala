@@ -2,21 +2,20 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
-import graft.ingest.Coerce
-import graft.ops.Enrich
-import graft.pipeline.Pipeline
-import graft.streaming.StreamIngest
+import graft.ingest.XlsxWriter
+import graft.model.TransferSchema
+import graft.streaming.{MergeSink, StreamIngest}
 
 /** Streaming demo: reproduces the reference's drop-folder lifecycle
-  * (source/ → process once → archive to processed/) with the incremental
-  * engine, then prints the resulting analytic state and the event-time
-  * window/session queries over the events table.
+  * (source/ → import once → archive to processed/) with the incremental
+  * engine, merging each batch into a keyed [[MergeSink]] state, then prints
+  * that state and the event-time window/session queries over the events
+  * table.
   *
-  * Usage: `sbt "runMain graft.tools.StreamDemo [workDir]"` — run it twice
-  * against the same workDir to see exactly-once semantics (second run
-  * processes nothing new).
+  * Usage: `sbt "runMain graft.tools.StreamDemo [workDir]"`. A fresh workDir
+  * gets two workbooks, one with a spaced name as the reference's reports
+  * have. Run it twice against the same workDir to see exactly-once: the
+  * second run imports nothing.
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
@@ -25,72 +24,41 @@ object StreamDemo {
     val spark = graft.LocalSpark()
     val (src, archive, ckpt, out) =
       (s"$work/source", s"$work/processed", s"$work/ckpt", s"$work/out")
-    Files.createDirectories(Paths.get(src))
-
-    // drop a report batch into source/ if none pending. Names must be fresh:
-    // the file source's checkpoint tracks seen PATHS, so a re-dropped file
-    // with an already-seen name is (correctly) never reprocessed.
-    val srcEmpty = {
-      val s = Files.list(Paths.get(src))
-      try !s.findAny().isPresent finally s.close()
-    }
-    if (srcEmpty) {
-      val archived = Option(new java.io.File(archive).listFiles()).map(_.length).getOrElse(0)
-      val name = s"report${archived + 1}.parquet"
-      val stage = s"$work/stage"
-      Demo.writeFixture(spark, stage)
-      val part = new java.io.File(s"$stage").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, Paths.get(src, name))
-      println(s"=== dropped $name into $src ===")
-    }
-
-    val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (batch, id) =>
-      if (!batch.isEmpty) {
-        val n = batch.count()
-        println(s"=== batch $id: processing $n raw rows ===")
-        // keyed merge: successive drops CONVERGE (reference INSERT OR REPLACE
-        // semantics across runs), instead of appending
-        val total = graft.streaming.MergeSink.merge(
-          spark, Pipeline.resolve(Enrich(Coerce(batch))), out)
-        println(s"=== merged state: $total keyed rows ===")
+    if (!Files.exists(Paths.get(ckpt))) {
+      Files.createDirectories(Paths.get(src))
+      def drop(name: String, rows: Seq[String]*): Unit = {
+        XlsxWriter.write(new java.io.File(src, name), "Transfer Report",
+          TransferSchema.excelHeaders, rows.iterator)
+        println(s"=== dropped $name into $src ===")
       }
+      def row(cells: String*): Seq[String] = cells ++ Seq.fill(19 - cells.size)("")
+      drop("Transfer Report 01 - JobA.xlsx",
+        row("WbRoot", "0", "", "2001", "", "", "45000.5"),
+        row("WbRoot/a.txt", "77", "", "2002"),
+        row()) // all-blank key: quarantined
+      drop("JobB.xlsx",
+        // re-shipped key: the other file sorts later by name, so its row wins
+        row("WbRoot/a.txt", "78", "", "2002"),
+        row("WbRoot/b.txt", "5", "", "2003"))
+    }
+
+    val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) {
+      (resolved, quarantined, id) =>
+        // keyed merge: successive drops CONVERGE (reference INSERT OR
+        // REPLACE semantics across runs), instead of appending
+        val total = MergeSink.merge(spark, resolved, out)
+        println(s"=== batch $id: merged state $total keyed rows, " +
+          s"${quarantined.count()} rows quarantined ===")
     }
     q.awaitTermination()
-
+    if (q.recentProgress.forall(_.numInputRows == 0))
+      println("=== no new files to import (exactly-once checkpoint) ===")
     if (Files.exists(Paths.get(out))) {
       val df = spark.read.parquet(out)
-      println(s"=== pipeline state: ${df.count()} resolved rows ===")
-      df.select("file_name", "file_status", "level", "parent_id").show(20, truncate = false)
-    } else println("=== no new files to process (exactly-once checkpoint) ===")
-
-    // workbook drop-folder: REAL .xlsx files streaming through binaryFile +
-    // the dependency-free reader — the reference's actual operating mode
-    val (wbSrc, wbArch, wbCkpt) =
-      (s"$work/wb-source", s"$work/wb-processed", s"$work/wb-ckpt")
-    Files.createDirectories(Paths.get(wbSrc))
-    val wbEmpty = {
-      val s = Files.list(Paths.get(wbSrc))
-      try !s.findAny().isPresent finally s.close()
+      println(s"=== merged state: ${df.count()} rows ===")
+      df.select("file_name", "source_file_size", "job_name", "level", "parent_id")
+        .orderBy("file_name").show(20, truncate = false)
     }
-    if (wbEmpty) {
-      val n = Option(new java.io.File(wbArch).listFiles()).map(_.length).getOrElse(0)
-      graft.ingest.XlsxWriter.write(
-        new java.io.File(wbSrc, s"Drop${n + 1}.xlsx"), "Transfer Report",
-        graft.model.TransferSchema.excelHeaders,
-        Iterator(
-          Seq("WbRoot", "0", "", "2001", "", "", "45000.5") ++ Seq.fill(12)(""),
-          Seq("WbRoot/a.txt", "77", "", "2002", "", "", "") ++ Seq.fill(12)("")))
-      println(s"=== dropped Drop${n + 1}.xlsx into $wbSrc ===")
-    }
-    val wq = StreamIngest.runWorkbookDropFolder(spark, wbSrc, wbArch, wbCkpt) { (batch, id) =>
-      if (!batch.isEmpty) {
-        val resolved = Pipeline.resolve(Enrich(Coerce(batch)))
-        println(s"=== workbook batch $id: ${resolved.count()} resolved rows " +
-          "(xlsx → binaryFile stream → pipeline) ===")
-      }
-    }
-    wq.awaitTermination()
 
     println("=== event-time windows (first 5) ===")
     graft.queries.Registry.qEventWindows(spark, "/root/testdata/sf0.001").show(5)

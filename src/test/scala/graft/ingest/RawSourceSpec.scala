@@ -34,23 +34,6 @@ class RawSourceSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("json adapter: name-addressed columns, absent columns become empty string") {
-    val dir = Files.createTempDirectory("graft-src-json").toString
-    // drop a column entirely: JSON objects are name-addressed, so the
-    // adapter must fill the absent column with "" rather than shifting
-    PipelineFixture.raw(spark)
-      .drop("translated_file_name")
-      .coalesce(1).write.mode("overwrite").json(dir)
-    val resolved = Pipeline.run(spark, dir, JsonRawSource)
-    assert(resolved.count() === viaParquet.count())
-    assert(resolved.filter($"translated_file_name" =!= "").count() === 0)
-    val a = resolved.select("file_name", "file_status", "level", "parent_id")
-      .collect().map(_.toSeq).toSet
-    val b = viaParquet.select("file_name", "file_status", "level", "parent_id")
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
-  }
-
   test("short positional input: pads with empty string, never consumes meta columns") {
     val dir = Files.createTempDirectory("graft-src-short").toString
     // only the first 4 data columns present, meta columns alongside — the

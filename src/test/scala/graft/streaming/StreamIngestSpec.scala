@@ -1,12 +1,18 @@
 package graft.streaming
 
+import java.io.File
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ingest.Coerce
-import graft.ops.Enrich
+import graft.ingest.{WorkbookRawSource, XlsFixture, XlsxFixture}
 import graft.pipeline.Pipeline
 import graft.queries.Registry
 
@@ -15,44 +21,54 @@ class StreamIngestSpec extends SparkSpec {
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
+  private def row(fn: String, id: String, status: String): Seq[String] =
+    Seq(fn, "1", "", id, "", "", "", "", "", "", "", "", "", "", "",
+      status, "", "", "")
+  private val headers = graft.model.TransferSchema.excelHeaders
+  private def xlsx(dir: String, name: String, rows: Seq[String]*): Unit =
+    XlsxFixture.write(new File(dir, name), Seq("Transfer Report" -> (headers +: rows)))
+  private def xls(dir: String, name: String, rows: Seq[String]*): Unit =
+    XlsFixture.write(new File(dir, name), Seq("Transfer Report" -> (headers +: rows)))
+  private def names(dir: String): Seq[String] =
+    Option(new File(dir).listFiles()).toSeq.flatten.map(_.getName).sorted
+
+  /** One drop-folder run to termination; the batch ids that imported, in
+    * order. Each batch's resolved rows are appended to `out`.
+    */
+  private def runDrop(src: String, archive: String, ckpt: String,
+      out: String): Seq[Long] = {
+    val ids = ArrayBuffer.empty[Long]
+    val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (resolved, _, id) =>
+      resolved.write.mode("append").parquet(out)
+      ids += id
+    }
+    q.awaitTermination()
+    ids.toSeq
+  }
+
+  private def fileNames(out: String): Set[String] =
+    spark.read.parquet(out).select("file_name").as[String].collect().toSet
+
   test("drop-folder contract: each file processed exactly once through the pipeline") {
-    val src = tmp("graft-stream-src")
-    val archive = tmp("graft-stream-archive")
-    val ckpt = tmp("graft-stream-ckpt")
-    val out = tmp("graft-stream-out")
-
-    // two "report drops" as single parquet FILES in the drop folder (the
-    // file stream source lists plain files, mirroring the reference's
-    // one-workbook-per-drop contract)
-    def dropFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp("graft-stage")
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(src, name))
-    }
-    val fixture = graft.pipeline.PipelineFixture.raw(spark)
-    dropFile(fixture.filter(col(graft.model.TransferSchema.rowIdxCol) <= 5), "drop1.parquet")
-    dropFile(fixture.filter(col(graft.model.TransferSchema.rowIdxCol) > 5), "drop2.parquet")
-
-    def run(): Unit = {
-      val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (batch, _) =>
-        if (!batch.isEmpty)
-          Pipeline.resolve(Enrich(Coerce(batch)))
-            .write.mode("append").parquet(out)
-      }
-      q.awaitTermination()
-    }
-    run()
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 === 8) // 10 raw rows, upsert collapses 2 within the batch set
+    val (src, archive, ckpt, out) =
+      (tmp("graft-drop-src"), tmp("graft-drop-archive"), tmp("graft-drop-ckpt"), tmp("graft-drop-out"))
+    xlsx(src, "JobA.xlsx", row("A/x.txt", "1", "s1"), row("A/y.txt", "2", "s2"),
+      row("A/x.txt", "1", "s3")) // re-shipped key: the upsert keeps the later row
+    assert(runDrop(src, archive, ckpt, out) === Seq(0L))
+    assert(spark.read.parquet(out).count() === 2)
+    // a later drop is the next batch and imports only its own file
+    xls(src, "JobB.xls", row("B/z.txt", "3", "s3"))
+    assert(runDrop(src, archive, ckpt, out) === Seq(1L))
+    assert(spark.read.parquet(out).count() === 3)
+    assert(fileNames(out) === Set("A/x.txt", "A/y.txt", "B/z.txt"))
+    assert(spark.read.parquet(out).filter($"file_name" === "A/x.txt")
+      .head.getAs[String]("file_status") === "s3")
     // source files archived to processed/ (the reference's move contract)
-    assert(new java.io.File(src).listFiles().count(_.getName.endsWith(".parquet")) === 0)
-    assert(new java.io.File(archive).listFiles().count(_.getName.endsWith(".parquet")) === 2)
-
+    assert(names(src).isEmpty)
+    assert(names(archive) === Seq("JobA.xlsx", "JobB.xls"))
     // re-run with same checkpoint: no new files → no reprocessing
-    run()
-    assert(spark.read.parquet(out).count() === n1)
+    assert(runDrop(src, archive, ckpt, out).isEmpty)
+    assert(spark.read.parquet(out).count() === 3)
   }
 
   test("workbook drop-folder: .xlsx and .xls stream through the pipeline exactly once") {
@@ -61,29 +77,14 @@ class StreamIngestSpec extends SparkSpec {
     val ckpt = tmp("graft-wb-ckpt")
     val out = tmp("graft-wb-out")
 
-    def row(fn: String, id: String, status: String): Seq[String] =
-      Seq(fn, "1", "", id, "", "", "", "", "", "", "", "", "", "", "",
-        status, "", "", "")
-    val headers = graft.model.TransferSchema.excelHeaders
-    graft.ingest.XlsxFixture.write(new java.io.File(src, "JobA.xlsx"), Seq(
-      "Transfer Report" -> Seq(headers, row("A/x.txt", "1", "s1"), row("A/y.txt", "2", "s2"))))
-    graft.ingest.XlsFixture.write(new java.io.File(src, "JobB.xls"), Seq(
-      "Transfer Report" -> Seq(headers, row("B/z.txt", "3", "s3"))))
+    xlsx(src, "JobA.xlsx", row("A/x.txt", "1", "s1"), row("A/y.txt", "2", "s2"))
+    xls(src, "JobB.xls", row("B/z.txt", "3", "s3"))
     // hygiene: an Office lock file and a prior extractor output in the drop
     // folder must be neither ingested nor archived away
-    graft.ingest.XlsxFixture.write(new java.io.File(src, "~$JobA.xlsx"), Seq(
-      "Transfer Report" -> Seq(headers, row("LOCK/file.txt", "9", "s9"))))
-    graft.ingest.XlsxFixture.write(new java.io.File(src, "Transfer-Overview-Old.xlsx"), Seq(
-      "Transfer Report" -> Seq(headers, row("OVW/file.txt", "8", "s8"))))
+    xlsx(src, "~$JobA.xlsx", row("LOCK/file.txt", "9", "s9"))
+    xlsx(src, "Transfer-Overview-Old.xlsx", row("OVW/file.txt", "8", "s8"))
 
-    def run(): Unit = {
-      val q = StreamIngest.runWorkbookDropFolder(spark, src, archive, ckpt) { (batch, _) =>
-        if (!batch.isEmpty)
-          Pipeline.resolve(Enrich(Coerce(batch)))
-            .write.mode("append").parquet(out)
-      }
-      q.awaitTermination()
-    }
+    def run(): Unit = runDrop(src, archive, ckpt, out)
     run()
     val got = spark.read.parquet(out)
     assert(got.count() === 3)
@@ -98,6 +99,84 @@ class StreamIngestSpec extends SparkSpec {
     // re-run with same checkpoint: nothing new → no reprocessing
     run()
     assert(spark.read.parquet(out).count() === 3)
+  }
+
+  test("spaced file names: .xlsx and .xls workbooks import once and are archived") {
+    // the reference's report names carry spaces; the stream's paths are
+    // URI-escaped, so a name must round-trip to its local file
+    val (src, archive, ckpt, out) =
+      (tmp("graft-sp-src"), tmp("graft-sp-archive"), tmp("graft-sp-ckpt"), tmp("graft-sp-out"))
+    val (a, b) = ("Transfer Report 01 - JobA.xlsx", "Transfer Report 02 - JobB.xls")
+    xlsx(src, a, row("A/x.txt", "1", "s1"), row("A/y.txt", "2", "s2"))
+    xls(src, b, row("B/z.txt", "3", "s3"))
+    assert(runDrop(src, archive, ckpt, out) === Seq(0L))
+    assert(fileNames(out) === Set("A/x.txt", "A/y.txt", "B/z.txt"))
+    assert(names(src).isEmpty)
+    assert(names(archive) === Seq(a, b))
+    assert(runDrop(src, archive, ckpt, out).isEmpty)
+    assert(spark.read.parquet(out).count() === 3)
+  }
+
+  test("differential: one AvailableNow batch imports what the one-shot import does") {
+    val (src, archive, ckpt) =
+      (tmp("graft-diff-src"), tmp("graft-diff-archive"), tmp("graft-diff-ckpt"))
+    val rnd = new scala.util.Random(31L)
+    val pool = Seq("R", "R/a", "R/b", "R/a/x.txt", "R/a/y.txt", "R/b/z.txt",
+      "R/b/c", "R/b/c/w.txt")
+    // blank-key rows (both key cells empty) one in six; few names and ids,
+    // so keys repeat within and across workbooks
+    def gen(n: Int): Seq[Seq[String]] = Seq.fill(n) {
+      val status = s"s${rnd.nextInt(4)}"
+      if (rnd.nextInt(6) == 0) row("", "", status)
+      else row(pool(rnd.nextInt(pool.size)), (1 + rnd.nextInt(4)).toString, status)
+    }
+    // one key shipped twice: file-name order puts JobC.xlsx first, so
+    // JobA's row is the later arrival and wins
+    val a = "Transfer Report 01 - JobA.xlsx"
+    XlsxFixture.write(new File(src, a), Seq(
+      "Transfer Report" -> (headers +: (gen(40) :+ row("R/shared.txt", "900", "second"))),
+      "Overview" -> Seq(Seq("Metric", "Value"), Seq("total", "41"))))
+    xls(src, "Transfer Report 02 - JobB.xls", gen(30): _*)
+    xlsx(src, "JobC.xlsx", (gen(30) :+ row("R/shared.txt", "900", "first")): _*)
+    xlsx(src, "~$JobC.xlsx", gen(5): _*)
+    assert(graft.ingest.OverviewExtract.extract(new File(src, a)).nonEmpty)
+    assert(names(src).contains(s"Transfer-Overview-$a"))
+
+    def rows(df: DataFrame): Map[Seq[Any], Int] =
+      df.drop("import_timestamp").collect().toSeq.map(_.toSeq).groupBy(identity)
+        .map { case (r, rs) => r -> rs.size }
+    val (wantResolved, wantQuarantined) = {
+      val (r, q) = Pipeline.runWithQuarantine(spark, src, WorkbookRawSource)
+      (rows(r), rows(q))
+    }
+    // the input covers what the check is about
+    assert(wantQuarantined.values.sum > 0)
+    assert(wantResolved.keys.count(r => r.head == "R/shared.txt") === 1)
+    assert(wantResolved.keys.exists(r => r.head == "R/shared.txt" && r.contains("second")))
+
+    val got = ArrayBuffer.empty[(Map[Seq[Any], Int], Map[Seq[Any], Int])]
+    val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (resolved, quarantined, _) =>
+      got += ((rows(resolved), rows(quarantined)))
+    }
+    q.awaitTermination()
+    assert(got.size === 1)
+    assert(got.head._1 === wantResolved)
+    assert(got.head._2 === wantQuarantined)
+  }
+
+  test("drop-folder stream scans file paths only: the binaryFile read needs no workbook bytes") {
+    val (src, archive, ckpt, out) =
+      (tmp("graft-path-src"), tmp("graft-path-archive"), tmp("graft-path-ckpt"), tmp("graft-path-out"))
+    xlsx(src, "JobA.xlsx", row("A/x.txt", "1", "s1"))
+    val q = StreamIngest.runDropFolder(spark, src, archive, ckpt) { (resolved, _, _) =>
+      resolved.write.mode("append").parquet(out)
+    }
+    q.awaitTermination()
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.map(s => (s.relation.fileFormat.isInstanceOf[BinaryFileFormat],
+      s.requiredSchema.fieldNames.toSeq)) === Seq((true, Seq("path"))))
+    assert(fileNames(out) === Set("A/x.txt"))
   }
 
   test("streaming DSIR scoring: narrow scorer on a stream equals the batch weights") {
