@@ -37,10 +37,11 @@ object StreamIngest {
     * extractor output), and imports them exactly as the one-shot import
     * does: [[WorkbookRawSource]]'s scan, then [[Pipeline.fromRaw]].
     * `batchFn` gets the resolved and the quarantined frame and the batch
-    * id; then the same files are archived. A batch with no such file runs
-    * no job. The file list per batch is bounded by `maxFilesPerTrigger`.
-    * `sourceDir` is a local (or mounted) directory: the readers open the
-    * workbooks by local path, as the one-shot import does.
+    * id; then the same files are archived. A batch with no such file
+    * imports nothing and does not call `batchFn`. The file list per batch
+    * is bounded by `maxFilesPerTrigger`. `sourceDir` is a local (or
+    * mounted) directory: the readers open the workbooks by local path, as
+    * the one-shot import does.
     *
     * Archiving is done here rather than via the `cleanSource=archive`
     * option: the built-in cleaner is an async best-effort task that

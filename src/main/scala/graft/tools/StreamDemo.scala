@@ -24,8 +24,8 @@ object StreamDemo {
     val spark = graft.LocalSpark()
     val (src, archive, ckpt, out) =
       (s"$work/source", s"$work/processed", s"$work/ckpt", s"$work/out")
+    Files.createDirectories(Paths.get(src))
     if (!Files.exists(Paths.get(ckpt))) {
-      Files.createDirectories(Paths.get(src))
       def drop(name: String, rows: Seq[String]*): Unit = {
         XlsxWriter.write(new java.io.File(src, name), "Transfer Report",
           TransferSchema.excelHeaders, rows.iterator)
